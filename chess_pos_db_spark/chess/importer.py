@@ -217,7 +217,7 @@ def plan_pgn_splits(
     seen = set()
     rows = []
     for (idx, (path, level)), size in zip(
-        enumerate(files, start=file_idx_base), sizes
+        enumerate(files, start=file_idx_base), sizes, strict=True
     ):
         ap = os.path.abspath(path)
         if ap in seen:

@@ -8,26 +8,29 @@ Request (dict, same JSON shape as the reference's wire protocol):
      "results":  ["W","B","D"]                (optional subset),
      "fetchChildren": true}
 
-Execution is one Spark job: the probe set (roots + all legal children,
-built driver-side with the movegen) is broadcast-joined against the
-sorted entries table — the distributed analogue of the reference's
-sparse-index binary search per run — then grouped into the
-(select × level × result) grid. first/last game metadata resolves via
-a join to the games dimension. Response is a nested dict mirroring the
+The probe set (roots + all legal children, built driver-side with the
+movegen) is a few dozen to a few hundred keys. It reaches the sorted
+entries table as an IN-list pushed into the parquet scan — row-group
+min/max stats on the pos_key-sorted layout prune the scan like the
+reference's sparse-index binary search per run — and each matched row
+is tagged with the probes sharing its key through a constant map, so
+the probe answer is ONE scan job with no exchange: no probe-side
+DataFrame, no broadcast, no shuffle. The (select × level × result) grid
+is folded on the driver from the collected rows (at most probes ×
+reverse_move × level × result, the same order as the grid itself);
+first/last game metadata resolves through a second, key-filtered job on
+the games dimension. Response is a nested dict mirroring the
 reference's JSON.
-
-Scale: the probe side is tiny (positions × ~40 children), so the fact
-table never shuffles; pos_key-sorted parquet means row-group min/max
-stats prune the scan exactly like the reference's sparse index.
 """
 
 from __future__ import annotations
 
+import json
+import operator
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .board import (
     NO_REVERSE_MOVE,
@@ -37,15 +40,14 @@ from .board import (
     unpack_move,
 )
 
-PROBE_SCHEMA = T.StructType(
-    [
-        T.StructField("origin", T.IntegerType(), False),
-        T.StructField("probe_kind", T.StringType(), False),  # root | child
-        T.StructField("move_san", T.StringType(), True),
-        T.StructField("move_uci", T.StringType(), True),
-        T.StructField("pos_key", T.LongType(), False),
-        T.StructField("expected_rm", T.IntegerType(), True),
-    ]
+_PROBES_BY_KEY = (
+    "map<string,array<struct<origin:int,probe_kind:string,move_san:string,"
+    "move_uci:string,expected_rm:int>>>"
+)
+_FOLD_OPS = (operator.add, operator.add, min, max)
+_ENTRY_COLS = (
+    "reverse_move", "level", "result",
+    "cnt", "elo_diff_sum", "first_game_id", "last_game_id",
 )
 
 
@@ -80,44 +82,66 @@ def probe_entries(
     entries: DataFrame,
     request: dict,
 ) -> DataFrame:
-    """The distributed part: broadcast probe join + grid aggregation.
+    """The distributed part: the entries rows under the probe keys, one
+    row per (entry, probe sharing its pos_key), tagged with the probe's
+    origin / probe_kind / move_san / move_uci / expected_rm.
 
-    The probe-key IN-list is ALSO pushed into the scan as a filter:
-    semantically redundant with the inner join, but it reaches the
-    parquet reader (PushedFilters) so row-group min/max stats on the
-    key-sorted layout skip everything outside the probed key windows —
-    the sparse-index seek of the reference (`executeQuery` binary
-    search), and the difference between O(probes) row-group reads and a
-    full fact-table scan at 100 TB."""
-    probe_rows = build_probes(request)
-    probes = spark.createDataFrame(probe_rows, PROBE_SCHEMA)
-    keys = sorted({r[4] for r in probe_rows})  # pos_key field
-    joined = entries.filter(F.col("pos_key").isin(keys)).join(
-        F.broadcast(probes), "pos_key"
-    )
-
+    The probe-key IN-list reaches the parquet reader (PushedFilters), so
+    row-group min/max stats on the key-sorted layout skip everything
+    outside the probed key windows — the sparse-index seek of the
+    reference (`executeQuery` binary search), and the difference between
+    O(probes) row-group reads and a full fact-table scan at 100 TB. The
+    probes ride in the plan as ONE JSON literal parsed into a
+    pos_key → probes map (constant-folded by Catalyst), looked up per
+    matched row and inlined: a key probed twice (a duplicated position,
+    or a root that is also another root's child) tags its rows once per
+    probe. The plan is a single scan stage: no exchange of any kind."""
+    by_key: dict[str, list[dict]] = {}
+    for origin, kind, san, uci, key, expected in build_probes(request):
+        by_key.setdefault(str(key), []).append(
+            {"origin": origin, "probe_kind": kind, "move_san": san,
+             "move_uci": uci, "expected_rm": expected}
+        )
+    keys = sorted(int(k) for k in by_key)
+    rows = entries.filter(F.col("pos_key").isin(keys))
     levels = request.get("levels")
     results = request.get("results")
     if levels:
-        joined = joined.filter(F.col("level").isin(*levels))
+        rows = rows.filter(F.col("level").isin(*levels))
     if results:
-        joined = joined.filter(F.col("result").isin(*results))
+        rows = rows.filter(F.col("result").isin(*results))
+    probes = F.from_json(F.lit(json.dumps(by_key)), _PROBES_BY_KEY)
+    return rows.select(
+        *_ENTRY_COLS,
+        F.inline(F.element_at(probes, F.col("pos_key").cast("string"))),
+    )
 
-    select = (
-        F.when(F.col("expected_rm").isNull(), F.lit("all"))
-        .when(F.col("reverse_move") == F.col("expected_rm"), F.lit("continuation"))
-        .otherwise(F.lit("transposition"))
-    )
-    return (
-        joined.withColumn("select", select)
-        .groupBy("origin", "probe_kind", "move_san", "move_uci", "select", "level", "result")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("elo_diff_sum").alias("elo_diff_sum"),
-            F.min("first_game_id").alias("first_game_id"),
-            F.max("last_game_id").alias("last_game_id"),
+
+def _fold_grid(rows: list) -> dict[tuple, tuple]:
+    """Driver-side grid aggregation of probe_entries' rows:
+    (origin, probe_kind, move_san, move_uci, select, level, result) →
+    (cnt, elo_diff_sum, first_game_id, last_game_id) with SQL
+    sum / min / max semantics (nulls ignored; null when all are null)."""
+    grid: dict[tuple, tuple] = {}
+    for r in rows:
+        expected = r["expected_rm"]
+        if expected is None:
+            select = "all"
+        elif r["reverse_move"] == expected:
+            select = "continuation"
+        else:
+            select = "transposition"
+        key = (
+            r["origin"], r["probe_kind"], r["move_san"], r["move_uci"],
+            select, r["level"], r["result"],
         )
-    )
+        new = (r["cnt"], r["elo_diff_sum"], r["first_game_id"], r["last_game_id"])
+        cell = grid.get(key)
+        grid[key] = new if cell is None else tuple(
+            b if a is None else a if b is None else op(a, b)
+            for a, b, op in zip(cell, new, _FOLD_OPS)
+        )
+    return grid
 
 
 def explorer_query(
@@ -127,14 +151,14 @@ def explorer_query(
     request: dict,
 ) -> dict:
     """Full query command → nested response dict (reference step 6)."""
-    grid = probe_entries(spark, entries, request).collect()
+    grid = _fold_grid(probe_entries(spark, entries, request).collect())
 
     game_ids = set()
-    for r in grid:
-        if r["first_game_id"] is not None:
-            game_ids.add(r["first_game_id"])
-        if r["last_game_id"] is not None:
-            game_ids.add(r["last_game_id"])
+    for _, _, first, last in grid.values():
+        if first is not None:
+            game_ids.add(first)
+        if last is not None:
+            game_ids.add(last)
     headers: dict[int, dict] = {}
     if games is not None and game_ids:
         hdr_rows = games.filter(F.col("game_id").isin(*game_ids)).collect()
@@ -156,29 +180,23 @@ def explorer_query(
         by_origin[i] = node
         response["positions"].append(node)
 
-    for r in grid:
-        node = by_origin[r["origin"]]
-        if r["probe_kind"] == "root":
-            bucket = node["stats"].setdefault(r["select"], {})
+    for (origin, kind, san, uci, select, level, result), (
+        cnt, elo_diff_sum, first, last
+    ) in grid.items():
+        node = by_origin[origin]
+        if kind == "root":
+            bucket = node["stats"].setdefault(select, {})
         else:
-            child = node["children"].setdefault(
-                r["move_san"], {"uci": r["move_uci"], "stats": {}}
-            )
-            bucket = child["stats"].setdefault(r["select"], {})
-        cell = bucket.setdefault(r["level"], {}).setdefault(r["result"], {})
-        cell["count"] = r["cnt"]
-        if r["elo_diff_sum"] is not None:
-            cell["eloDiffSum"] = r["elo_diff_sum"]
-        if r["first_game_id"] is not None:
-            cell["firstGame"] = {
-                "id": r["first_game_id"],
-                **headers.get(r["first_game_id"], {}),
-            }
-        if r["last_game_id"] is not None:
-            cell["lastGame"] = {
-                "id": r["last_game_id"],
-                **headers.get(r["last_game_id"], {}),
-            }
+            child = node["children"].setdefault(san, {"uci": uci, "stats": {}})
+            bucket = child["stats"].setdefault(select, {})
+        cell = bucket.setdefault(level, {}).setdefault(result, {})
+        cell["count"] = cnt
+        if elo_diff_sum is not None:
+            cell["eloDiffSum"] = elo_diff_sum
+        if first is not None:
+            cell["firstGame"] = {"id": first, **headers.get(first, {})}
+        if last is not None:
+            cell["lastGame"] = {"id": last, **headers.get(last, {})}
     return response
 
 
@@ -395,11 +413,11 @@ def explorer_tree(
     """Opening-tree expansion: the explorer followed `depth` plies down
     the `top_n` most-played continuations from `fen` — what the
     reference's GUI builds with one request per click, answered here in
-    ONE batched probe job PER LEVEL (the frontier of level d probes as
-    a single explorer_query batch), so a depth-4 × top-3 tree costs 4
-    jobs, not 40 requests. Frontier size is bounded by top_n^depth;
-    the scan side stays the pruned probe join of the single-position
-    path.
+    ONE batched explorer_query PER LEVEL (the frontier of level d probes
+    as a single batch: one pruned scan job plus the header lookup), so a
+    depth-4 × top-3 tree costs 4 requests, not 40. Frontier size is
+    bounded by top_n^depth; the scan side stays the pruned probe scan of
+    the single-position path.
 
     Returns {"fen", "stats", "children": {san: {uci, total, subtree}}}.
     """

@@ -99,11 +99,15 @@ def spread_small_scan(
     further — never above the guard's threshold). Keep this helper on
     LEAF scans: probing a composite plan would execute its upstream."""
     par = spark.sparkContext.defaultParallelism
-    cache_key = (spark.sparkContext.applicationId, tuple(df.inputFiles()))
+    files = tuple(df.inputFiles())
+    cache_key = (spark.sparkContext.applicationId, files)
     n = _SPREAD_PROBE.get(cache_key)
     if n is None:
         n = df.rdd.getNumPartitions()
-        _SPREAD_PROBE[cache_key] = n
+        # A frame with no input files (in-memory or generated) has no
+        # identity to cache under: it is probed every time.
+        if files:
+            _SPREAD_PROBE[cache_key] = n
     if n < par:
         return df.repartition(par, key)
     return df

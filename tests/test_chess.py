@@ -15,6 +15,7 @@ from chess_pos_db_spark.chess.board import (
     NO_REVERSE_MOVE,
     Position,
     START_FEN,
+    captured_piece,
     pack_move,
     perft,
     unpack_move,
@@ -272,6 +273,127 @@ def test_append_then_query(spark, chess_db, tmp_path):
     )
 
 
+def _tally_cells(entry_rows: list, request: dict) -> dict:
+    """The explorer grid computed straight from the entries rows, with
+    probes derived from the movegen here rather than by the query
+    module: {(origin, kind, san, select, level, result): cell}."""
+    levels, results = request.get("levels"), request.get("results")
+    by_key: dict = {}
+    for r in entry_rows:
+        if (not levels or r["level"] in levels) and (
+            not results or r["result"] in results
+        ):
+            by_key.setdefault(r["pos_key"], []).append(r)
+    cells: dict = {}
+    for i, spec in enumerate(request["positions"]):
+        root, expected = Position.from_fen(spec["fen"]), None
+        if spec.get("move"):
+            m = root.parse_san(spec["move"])
+            root, expected = root.make_move(m), pack_move(m, captured_piece(root, m))
+        probes = [("root", None, root.key(), expected)] + [
+            ("child", root.san(m), root.make_move(m).key(), pack_move(m, captured_piece(root, m)))
+            for m in root.legal_moves()
+        ]
+        for kind, san, key, want in probes:
+            for r in by_key.get(key, []):
+                if want is None:
+                    select = "all"
+                elif r["reverse_move"] == want:
+                    select = "continuation"
+                else:
+                    select = "transposition"
+                cell = cells.setdefault(
+                    (i, kind, san, select, r["level"], r["result"]),
+                    {"count": 0, "elo": [], "first": [], "last": []},
+                )
+                cell["count"] += r["cnt"]
+                cell["elo"].append(r["elo_diff_sum"])
+                cell["first"].append(r["first_game_id"])
+                cell["last"].append(r["last_game_id"])
+    out = {}
+    for k, c in cells.items():
+        elos = [e for e in c["elo"] if e is not None]
+        out[k] = {
+            "count": c["count"],
+            "eloDiffSum": sum(elos) if elos else None,
+            "firstGame": min(c["first"]),
+            "lastGame": max(c["last"]),
+        }
+    return out
+
+
+def _response_cells(resp: dict) -> dict:
+    out = {}
+    for i, node in enumerate(resp["positions"]):
+        stats_by_probe = [("root", None, node["stats"])] + [
+            ("child", san, child["stats"]) for san, child in node["children"].items()
+        ]
+        for kind, san, stats in stats_by_probe:
+            for select, by_level in stats.items():
+                for level, by_result in by_level.items():
+                    for result, cell in by_result.items():
+                        out[(i, kind, san, select, level, result)] = {
+                            "count": cell["count"],
+                            "eloDiffSum": cell.get("eloDiffSum"),
+                            "firstGame": cell["firstGame"]["id"],
+                            "lastGame": cell["lastGame"]["id"],
+                        }
+    return out
+
+
+def test_explorer_grid_matches_entries_tally(spark, chess_db):
+    """The explorer's driver-side grid fold against an independent tally
+    over the entries rows. The batch repeats the start position and asks
+    for 1.e4, which is also a child of the start position, so one entry
+    row feeds several probes; the first request narrows levels and
+    results (after test_append_then_query the db also holds `engine`
+    rows for the level filter to drop) and keeps game 4's draw, whose
+    players have no Elo, so its cells have no eloDiffSum; the second
+    has a queried move, so continuation and transposition both show.
+    The entries are read as two runs, the second holding the same games
+    under later ids (as an un-compacted append of the same file leaves
+    them), so every cell folds several rows and min/max/sum matter."""
+    db_dir, _ = chess_db
+    stored = spark.read.parquet(f"{db_dir}/entries")
+    shift = 7 << 32
+    entries = stored.unionByName(
+        stored.withColumn("first_game_id", F.col("first_game_id") + shift)
+        .withColumn("last_game_id", F.col("last_game_id") + shift)
+    )
+    games = spark.read.parquet(f"{db_dir}/games")
+    entry_rows = entries.collect()
+
+    after_e4 = Position.from_fen(START_FEN)
+    after_e4 = after_e4.make_move(after_e4.parse_san("e4"))
+    after_e4e5 = after_e4.make_move(after_e4.parse_san("e5"))
+    requests = [
+        {
+            "positions": [{"fen": START_FEN}, {"fen": after_e4.fen()}, {"fen": START_FEN}],
+            "levels": ["human"],
+            "results": ["W", "D"],
+        },
+        {
+            "positions": [{"fen": START_FEN}, {"fen": after_e4e5.fen(), "move": "Nf3"}],
+        },
+    ]
+    got = [_response_cells(query.explorer_query(spark, entries, games, r)) for r in requests]
+    want = [_tally_cells(entry_rows, r) for r in requests]
+    assert got == want
+
+    narrowed = got[0]
+    assert {k[4] for k in narrowed} == {"human"}
+    assert {k[5] for k in narrowed} == {"W", "D"}
+    def cells_of(origin, kind, san):
+        return {k[4:]: v for k, v in narrowed.items() if k[:3] == (origin, kind, san)}
+
+    assert cells_of(0, "root", None) and cells_of(0, "root", None) == cells_of(2, "root", None)
+    # the same entry rows, as a child (continuation of e4) and as a root (all)
+    assert cells_of(0, "child", "e4") and cells_of(0, "child", "e4") == cells_of(1, "root", None)
+    assert any(v["eloDiffSum"] is None for v in narrowed.values())
+    assert any(v["eloDiffSum"] is not None for v in narrowed.values())
+    assert {k[3] for k in got[1] if k[0] == 1} == {"continuation", "transposition"}
+
+
 def test_dump_epd(spark, tmp_path):
     pgn_path = tmp_path / "g.pgn"
     pgn_path.write_text(PGN_TEXT)
@@ -303,6 +425,10 @@ def test_probe_entries_key_pushdown(spark, chess_db):
     )
     assert "PushedFilters" in plan
     assert "In(pos_key" in plan.split("PushedFilters")[1][:300]
+    # One scan stage per request: the probes ride in the plan as a
+    # constant, so no probe-side broadcast and no grid shuffle.
+    assert "Exchange" not in plan, plan
+    assert "BroadcastExchange" not in plan, plan
 
 
 def test_merge_databases_equals_single_import(spark, tmp_path):

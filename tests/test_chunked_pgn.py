@@ -398,6 +398,18 @@ def test_pgn_datasource_reader_path_errors(tmp_path):
         PgnDataSourceReader({"path": str(tmp_path / "missing.pgn")})
 
 
+def test_split_planning_rejects_short_sizes(tmp_path):
+    """A `sizes` list shorter than the import list must fail loudly,
+    not silently drop the trailing input files from the plan."""
+    files = []
+    for i in range(3):
+        p = tmp_path / f"f{i}.pgn"
+        p.write_text(f'[Event "G{i}"]\n[Result "*"]\n\n*\n')
+        files.append((str(p), "human"))
+    with pytest.raises(ValueError):
+        importer.plan_pgn_splits(files, 1 << 20, sizes=[10, 10])
+
+
 def test_split_planning_stats_each_file_once(tmp_path, monkeypatch):
     """Driver-listing discipline (guide §5): the import's split planning
     must stat each input file exactly ONCE — the round-13 shape stat'd

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 import chess_pos_db_spark as engine
 
 
@@ -528,6 +530,25 @@ def test_quality_signals_map_only(spark, sf_dir):
     assert "REPARTITION_BY_NUM" in plan or _n_exchanges(plan) == 0
     assert "HashAggregate" not in plan and "Generate" not in plan
     assert "BatchEvalPython" not in plan
+
+
+def test_spread_small_scan_probes_fileless_frames_each_time(spark):
+    """spread_small_scan caches its split-count probe by input-file set.
+    Frames with no input files share no identity, so one frame's count
+    must never be reused for another: a one-partition frame is spread,
+    a frame already at defaultParallelism is returned as is, whichever
+    was probed first."""
+    from chess_pos_db_spark.tables import spread_small_scan
+
+    par = spark.sparkContext.defaultParallelism
+    if par < 2:
+        pytest.skip("needs defaultParallelism >= 2")
+    narrow = spark.range(0, 64, 1, 1)
+    wide = spark.range(0, 64, 1, par)
+    assert narrow.inputFiles() == wide.inputFiles() == []
+    assert spread_small_scan(spark, narrow, "id") is not narrow
+    assert spread_small_scan(spark, wide, "id") is wide
+    assert spread_small_scan(spark, narrow, "id") is not narrow
 
 
 def test_salted_agg_two_phase(spark, sf_dir):
