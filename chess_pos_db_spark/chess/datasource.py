@@ -15,8 +15,8 @@ cluster and Spark schedules/retries chunks like any file source's
 splits. Rows are game records; `(file_idx, game_offset)` is a stable
 total order equal to a sequential read's (offsets are game-start
 bytes, unique within a file), so downstream ordinal assignment — the
-importer's two-pass dense game_id — remains a pure window/join over
-this source's output when dense ids are needed.
+importer's dense game_id — remains a pure window/join over this
+source's output when dense ids are needed.
 
 The reader is metadata-only on the driver (paths + sizes); file bytes
 are touched exclusively inside partitions, executor-side — the
@@ -108,9 +108,9 @@ def _chunk_rows(partition: "PgnInputPartition"):
     for offset, text in pgn.chunk_game_slices(
         partition.path, partition.start, partition.end
     ):
-        if not pgn.game_is_kept(text):
-            continue
         g = pgn.parse_game(text)
+        if not (g["sans"] or g["tags"]):
+            continue  # parse_file's keep filter
         yield (
             partition.path,
             partition.file_idx,

@@ -19,7 +19,8 @@ monotonically_increasing_id, so re-imports produce identical ids.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import json
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
@@ -96,9 +97,10 @@ def read_pgn_files(
     """(path, level) list → raw file DataFrame, read EXECUTOR-side via
     the binaryFile source (one file per task, matching the reference's
     one-parser-thread-per-file). Only the tiny path→(ordinal, level)
-    map travels from the driver; file contents never do. At scale, a
-    chunked DataSource splitting big PGNs on game boundaries would
-    replace the per-file granularity."""
+    map travels from the driver; file contents never do. The importer
+    itself uses parse_games_chunked, which splits big PGNs on game
+    boundaries; this whole-file read is the sequential reference its
+    game ids are tested against."""
     import os
     from urllib.parse import unquote, urlparse
 
@@ -165,19 +167,6 @@ DEFAULT_CHUNK_BYTES = 16 << 20
 MIN_CHUNK_BYTES = 64 << 10  # below this, the 8 KB boundary lookback and
 # per-task overhead dominate the parse itself
 
-_SPLIT_SCHEMA = T.StructType(
-    [
-        T.StructField("file_idx", T.IntegerType(), False),
-        T.StructField("path", T.StringType(), False),
-        T.StructField("source_file", T.StringType(), False),
-        T.StructField("level", T.StringType(), False),
-        T.StructField("chunk_idx", T.IntegerType(), False),
-        T.StructField("start", T.LongType(), False),
-        T.StructField("end", T.LongType(), False),
-        T.StructField("base", T.LongType(), False),  # first game ordinal
-    ]
-)
-
 
 def stat_pgn_sizes(files: list[tuple[str, str]]) -> list[int]:
     """File sizes for the import list, stat'd CONCURRENTLY.
@@ -207,8 +196,7 @@ def plan_pgn_splits(
 ) -> list[tuple]:
     """Driver-side split planning (the Hadoop FileInputFormat analogue):
     byte-range chunks per file, metadata only — no file contents touch
-    the driver. `base` (the chunk's first game ordinal) is filled by the
-    count pass. Pass `sizes` (from stat_pgn_sizes) to avoid a second
+    the driver. Pass `sizes` (from stat_pgn_sizes) to avoid a second
     stat round over the import list."""
     import os
 
@@ -234,16 +222,96 @@ def plan_pgn_splits(
                     ci,
                     ci * chunk_bytes,
                     min((ci + 1) * chunk_bytes, size),
-                    0,
                 )
             )
     return rows
 
 
-def _splits_df(spark: SparkSession, rows: list[tuple]) -> DataFrame:
-    # One split per task: each split is a large independent unit of work
-    # (16 MB of parse by default), so 1:1 task granularity is right.
-    return spark.createDataFrame(rows, _SPLIT_SCHEMA).repartition(len(rows))
+def _parse_chunked(
+    spark: SparkSession,
+    files: list[tuple[str, str]],
+    chunk_bytes: int,
+    file_idx_base: int,
+    hold: Callable[[DataFrame], DataFrame],
+) -> tuple[DataFrame, DataFrame, dict]:
+    """The chunk-splitting source's ONE Python pass → (games, parsed,
+    counts).
+
+    Each split task slices its byte range on game boundaries and parses
+    every game once, tagging it with game_id = (split << 32) | its
+    chunk-local ordinal. `hold` (cache or localCheckpoint) keeps that
+    parse; one groupBy(split) collect over it gives the per-split game
+    counts — one long per chunk, pure metadata — and the report's
+    games/skipped counts. The driver prefix-sums the counts per file
+    into each split's first ordinal (the zipWithIndex pattern), and
+    `games` rebases every id to (file_idx << 32) | (first + local):
+    IDENTICAL to the sequential reader's, so chunking is invisible in
+    output. `games` reads `parsed`; the caller releases `parsed`."""
+    from ..tables import _ship_package
+
+    _ship_package(spark)  # the parse UDF unpickles pgn on workers
+    # ONE concurrent stat round over the import list, shared by the
+    # adaptive-chunk sizing and the split planning (guide §5).
+    sizes = stat_pgn_sizes(files)
+    target_chunks = max(1, 2 * spark.sparkContext.defaultParallelism)
+    eff_chunk = min(
+        chunk_bytes, max(MIN_CHUNK_BYTES, -(-sum(sizes) // target_chunks))
+    )
+    splits = plan_pgn_splits(files, eff_chunk, file_idx_base, sizes=sizes)
+
+    def parse_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+
+            def rows():
+                for split in pdf["id"].tolist():
+                    _, path, source_file, level, _, start, end = splits[split]
+                    game_id = split << 32
+                    for _, text in pgn.chunk_game_slices(path, start, end):
+                        g = pgn.parse_game(text)
+                        if g["sans"] or g["tags"]:  # parse_file's keep filter
+                            yield game_id, level, g, source_file
+                            game_id += 1
+
+            yield _games_pdf(rows())
+
+    # One split per task, each up to 16 MB of parse: the range source
+    # puts split i in partition i, so no shuffle spreads them, and the
+    # split list rides in the task closure.
+    parsed = hold(
+        spark.range(0, len(splits), 1, len(splits)).mapInPandas(
+            parse_batches, schema=GAME_SCHEMA
+        )
+    )
+    split_col = F.shiftright("game_id", 32)
+    split_counts = (
+        parsed.groupBy(split_col.alias("split"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("result").isNull().cast("long")).alias("skipped"),
+        )
+        .collect()
+    )
+    n_by_split = {r["split"]: r["n"] for r in split_counts}
+    offsets = []  # per split: (file_idx << 32) + its first game ordinal
+    prev_file, first = None, 0
+    for split, (file_idx, *_) in enumerate(splits):
+        if file_idx != prev_file:
+            prev_file, first = file_idx, 0
+        offsets.append((file_idx << 32) + first)
+        first += n_by_split.get(split, 0)
+    games = parsed.withColumn(
+        "game_id",
+        F.element_at(
+            F.from_json(F.lit(json.dumps(offsets)), "array<bigint>"),
+            split_col.cast("int") + 1,
+        )
+        + F.col("game_id").bitwiseAND(0xFFFFFFFF),
+    )
+    counts = {
+        "games": sum(n_by_split.values()),
+        "skipped": sum(r["skipped"] for r in split_counts),
+    }
+    return games, parsed, counts
 
 
 def parse_games_chunked(
@@ -258,113 +326,28 @@ def parse_games_chunked(
     the Spark-native source instead byte-range-splits every file on
     game boundaries (pgn.GameStartScanner — the exact split_games state
     rule, so results are byte-identical to the sequential parse) and
-    runs two distributed passes:
-
-      1. COUNT: per chunk, how many kept games start inside it (cheap:
-         boundary scan + tag-regex keep check, no move parsing). The
-         per-chunk counts — one long per 16 MB, pure metadata — come
-         back to the driver, which prefix-sums them into each chunk's
-         first game ordinal. This is the zipWithIndex pattern; it is
-         what makes game_id = (file_idx << 32) | ordinal IDENTICAL to
-         the sequential reader's, so chunking is invisible in output.
-      2. PARSE: per chunk, slice games and parse, assigning ordinals
-         from the chunk's base.
-
-    The count pass re-reads raw bytes (not re-parses); at 100 TB both
-    passes are embarrassingly parallel with no shuffle at all.
+    reads every PGN byte in ONE distributed Python pass: each chunk is
+    parsed once, and game ids are rebased from the per-chunk game
+    counts that pass yields (see _parse_chunked). The pass is
+    embarrassingly parallel and shuffles nothing.
 
     `chunk_bytes` is an UPPER bound: when the corpus is smaller than
     (2 × parallelism) chunks of that size, chunks shrink (down to
     MIN_CHUNK_BYTES) so a single modest file still fans out across the
     cluster — the same adaptive split sizing Spark's own file sources
     do via maxPartitionBytes.
+
+    The parse is local-checkpointed, so the returned frame reads it
+    rather than parsing again; Spark frees it with the frame.
+    import_pgn/append_pgn instead cache it and release it themselves.
     """
-    from ..tables import _ship_package
-
-    _ship_package(spark)  # chunk scan/parse UDFs unpickle pgn on workers
-    # ONE concurrent stat round over the import list, shared by the
-    # adaptive-chunk sizing and the split planning (previously two
-    # serial getsize loops — a driver-side listing stall at large file
-    # counts, guide §5).
-    sizes = stat_pgn_sizes(files)
-    total = sum(sizes)
-    target_chunks = max(1, 2 * spark.sparkContext.defaultParallelism)
-    eff_chunk = min(
-        chunk_bytes, max(MIN_CHUNK_BYTES, -(-total // target_chunks))
-    )
-    rows = plan_pgn_splits(files, eff_chunk, file_idx_base, sizes=sizes)
-
-    def count_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for _, r in pdf.iterrows():
-                slices = pgn.chunk_game_slices(
-                    r["path"], int(r["start"]), int(r["end"])
-                )
-                n = sum(1 for _, text in slices if pgn.game_is_kept(text))
-                out.append(
-                    {
-                        "file_idx": int(r["file_idx"]),
-                        "chunk_idx": int(r["chunk_idx"]),
-                        "n_games": n,
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=["file_idx", "chunk_idx", "n_games"]
-            )
-
-    counts = {
-        (r["file_idx"], r["chunk_idx"]): r["n_games"]
-        for r in _splits_df(spark, rows)
-        .mapInPandas(
-            count_batches, "file_idx int, chunk_idx int, n_games long"
-        )
-        .collect()
-    }
-    bases: dict[tuple[int, int], int] = {}
-    acc_file = -1
-    acc = 0
-    for fi, ci in sorted(counts):
-        if fi != acc_file:
-            acc_file, acc = fi, 0
-        bases[(fi, ci)] = acc
-        acc += counts[(fi, ci)]
-
-    rows2 = [r[:7] + (bases[(r[0], r[4])],) for r in rows]
-
-    def parse_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-
-            def rows():
-                for path, start, end, base, file_idx, level, source_file in zip(
-                    pdf["path"].tolist(),
-                    pdf["start"].tolist(),
-                    pdf["end"].tolist(),
-                    pdf["base"].tolist(),
-                    pdf["file_idx"].tolist(),
-                    pdf["level"].tolist(),
-                    pdf["source_file"].tolist(),
-                ):
-                    ordinal = int(base)
-                    for _, text in pgn.chunk_game_slices(
-                        path, int(start), int(end)
-                    ):
-                        g = pgn.parse_game(text)
-                        if not (g["sans"] or g["tags"]):
-                            continue  # parse_file's keep filter
-                        yield (
-                            (int(file_idx) << 32) | ordinal,
-                            level,
-                            g,
-                            source_file,
-                        )
-                        ordinal += 1
-
-            yield _games_pdf(rows())
-
-    return _splits_df(spark, rows2).mapInPandas(
-        parse_batches, schema=GAME_SCHEMA
-    )
+    return _parse_chunked(
+        spark,
+        files,
+        chunk_bytes,
+        file_idx_base,
+        lambda df: df.localCheckpoint(eager=False),
+    )[0]
 
 
 def _object_if_empty(v: list):
@@ -618,7 +601,9 @@ def import_pgn(
     database migration, a capability the reference's header-only store
     never had. Default False matches the reference's posture (headers
     only; movetext exists only as exploded positions)."""
-    games = parse_games_chunked(spark, files, chunk_bytes).cache()
+    games, parsed, counts = _parse_chunked(
+        spark, files, chunk_bytes, 0, DataFrame.cache
+    )
     # Replay parallelism must not be bound by file count (one giant PGN
     # would otherwise replay on one core): spread games across cores
     # before the python-side replay, the import's hot path.
@@ -670,45 +655,36 @@ def import_pgn(
     layout.write_sorted_run(
         stored_games, f"{db_dir}/games", key=["game_id"], partitions=partitions
     )
-    layout.write_sorted_run(
-        agg, f"{db_dir}/entries", key=["pos_key"], partitions=partitions
-    )
-    (pre if retractions else agg).unpersist()
-
-    # one pass over the cached games for both report counts (was two
-    # cache scans: .count() + .filter(...).count())
-    gstats = games.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("result").isNull().cast("long")).alias("skipped"),
-    ).first()
-    n_games = gstats["n"]
-    n_skipped = int(gstats["skipped"] or 0)
-    stored_entries = spark.read.parquet(f"{db_dir}/entries")
-    n_positions = stored_entries.agg(F.sum("cnt").alias("s")).first()["s"]
     # Games dropped for invalid/illegal moves must be VISIBLE in the
     # import report, not silently absent: every replayed game
     # contributes exactly one (start-position, NO_REVERSE_MOVE) entry
     # (a packed real move is never NO_REVERSE_MOVE, so a mid-game
     # transposition back to the start cannot inflate this), so the
-    # imported-game count is that row group's cnt — no second replay
-    # pass, just a pruned probe of the table already written.
-    start_key = Position.from_fen(START_FEN).key()
-    n_imported = (
-        stored_entries.filter(
-            (F.col("pos_key") == start_key)
-            & (F.col("reverse_move") == NO_REVERSE_MOVE)
-        )
-        .agg(F.sum("cnt").alias("s"))
-        .first()["s"]
+    # imported-game count is that row group's cnt, observed on the
+    # entries write with the positions total.
+    start = (F.col("pos_key") == Position.from_fen(START_FEN).key()) & (
+        F.col("reverse_move") == NO_REVERSE_MOVE
     )
-    games.unpersist()
-    return {
-        "games": n_games,
-        "skipped": n_skipped,
-        "dropped_invalid": int(
-            (n_games - n_skipped) - int(n_imported or 0)
+    obs = Observation()
+    layout.write_sorted_run(
+        agg,
+        f"{db_dir}/entries",
+        key=["pos_key"],
+        partitions=partitions,
+        metrics=(
+            obs,
+            F.sum("cnt").alias("positions"),
+            F.sum(F.when(start, F.col("cnt"))).alias("imported"),
         ),
-        "positions": int(n_positions or 0),
+    )
+    (pre if retractions else agg).unpersist()
+    parsed.unpersist()
+    n_imported = obs.get["imported"] or 0
+    return {
+        "games": counts["games"],
+        "skipped": counts["skipped"],
+        "dropped_invalid": counts["games"] - counts["skipped"] - n_imported,
+        "positions": obs.get["positions"] or 0,
         "db_dir": db_dir,
     }
 
@@ -791,18 +767,14 @@ def append_pgn(
     retr_dir = f"{db_dir}/retractions"
     retr_runs_dir = f"{db_dir}/_append_retr_tmp"
     has_retr = os.path.isdir(retr_dir)
-    prev_max = (
-        spark.read.parquet(f"{db_dir}/games")
-        .agg(F.max(F.shiftright("game_id", 32)))
-        .first()[0]
-    )
+    prev_games = spark.read.parquet(f"{db_dir}/games")
+    prev_max = prev_games.agg(F.max(F.shiftright("game_id", 32))).first()[0]
     next_file_idx = int(prev_max) + 1 if prev_max is not None else 0
-    # cache: games feeds BOTH the stored-games append and the entries
-    # aggregate — without it the full chunked parse runs twice (same
-    # reasoning as import_pgn's cache)
-    games = parse_games_chunked(
-        spark, files, chunk_bytes, file_idx_base=next_file_idx
-    ).cache()
+    # the cached parse feeds BOTH the stored-games append and the
+    # entries aggregate (same reasoning as import_pgn's cache)
+    games, parsed, _ = _parse_chunked(
+        spark, files, chunk_bytes, next_file_idx, DataFrame.cache
+    )
     # Replay parallelism must not be bound by the append's chunk count
     # (a small appended file plans few chunks): spread games across
     # cores before the python-side replay, exactly as import_pgn does —
@@ -834,7 +806,7 @@ def append_pgn(
     # movetext for appended games too (otherwise export_pgn would
     # silently lose every appended game's moves); a header-only
     # database stays header-only.
-    keeps_moves = "sans" in spark.read.parquet(f"{db_dir}/games").columns
+    keeps_moves = "sans" in prev_games.columns
     stored_games = games if keeps_moves else games.drop("sans")
     stored_games.write.mode("append").parquet(f"{db_dir}/games")
     agg.write.mode("overwrite").parquet(runs_dir)
@@ -882,7 +854,7 @@ def append_pgn(
         _swap_dir(retr_dir, retr_tmp)
         shutil.rmtree(retr_runs_dir, ignore_errors=True)
         pre.unpersist()
-    games.unpersist()
+    parsed.unpersist()
     return {"db_dir": db_dir, "file_idx_base": next_file_idx}
 
 
@@ -1078,7 +1050,8 @@ def export_pgn(
     # for the report). fmt emits one row per game, so counting the
     # mapInPandas output equals counting games — and the observe node
     # sits ABOVE the range exchange, so the boundary-sampling pass
-    # (which re-runs only the exchange's child) cannot double-run it.
+    # (which re-runs only the exchange's child) cannot double-run it:
+    # the same rule as layout.write_sorted_run's `metrics`.
     obs = Observation()
     shaped.observe(obs, F.count(F.lit(1)).alias("games")).select(
         "level", "text"

@@ -101,13 +101,6 @@ def parse_date(raw: str) -> tuple[Optional[int], Optional[int], Optional[int]]:
     return num(0), num(1), num(2)
 
 
-def _clean_line(line: str) -> str:
-    s = line.strip()
-    if s[:1] == "\ufeff":  # interior BOM (concatenated files)
-        s = s[1:].strip()
-    return s
-
-
 def _unescape_tag(v: str) -> str:
     # PGN escapes '\"' and '\\' inside tag values; _TAG_RE matches
     # them but keeps the backslashes
@@ -246,21 +239,6 @@ class GameStartScanner:
             self.seen_movetext = False
         if stripped and stripped[:1] not in (b"[", b"%"):
             self.seen_movetext = True
-
-
-def game_is_kept(text: str) -> bool:
-    """Whether parse_file would yield this game chunk (tags or sans
-    nonempty). The tag-line regex short-circuits the common case; only
-    tagless fragments pay for a full parse. Tag detection is scoped to
-    '['-prefixed lines to stay consistent with parse_game — a fake
-    bracketed pair inside a comment must not make the count pass and
-    the parse pass disagree about which games exist."""
-    for line in text.splitlines():
-        s = _clean_line(line)
-        if s.startswith("[") and _TAG_RE.search(s):
-            return True
-    g = parse_game(text)
-    return bool(g["sans"] or g["tags"])
 
 
 def _resolve_read_from(path: str, start: int, lookback: int) -> int:

@@ -78,6 +78,7 @@ def write_sorted_run(
     mode: str = "overwrite",
     file_format: str = "parquet",
     options: dict | None = None,
+    metrics: tuple | None = None,
 ) -> None:
     """Write `df` as a key-clustered sorted run (reference: store()).
 
@@ -85,12 +86,16 @@ def write_sorted_run(
     sources/formats.write_orc_run) share THIS layout pipeline instead
     of re-implementing it — one place owns the run discipline, and
     every container gets the manifest that read_manifest/pruned reads
-    depend on."""
-    writer = (
-        range_partitioned(df, key, partitions)
-        .sortWithinPartitions(*key)
-        .write.mode(mode)
-    )
+    depend on.
+
+    `metrics` = (Observation, *Column) observes the written rows. The
+    observe node sits ABOVE the range exchange: the boundary-sampling
+    job re-runs only the exchange's child, so it cannot count a row
+    twice."""
+    out = range_partitioned(df, key, partitions).sortWithinPartitions(*key)
+    if metrics:
+        out = out.observe(*metrics)
+    writer = out.write.mode(mode)
     for k, v in (options or {}).items():
         writer = writer.option(k, v)
     writer.format(file_format).save(path)

@@ -246,10 +246,14 @@ def test_retractions(spark, chess_db):
     assert rows[0]["cnt"] == 1
 
 
-def test_append_then_query(spark, chess_db, tmp_path):
+def test_append_then_query(spark, tmp_path):
     """append ≡ reference append+merge: counts double after re-adding
-    the same file."""
-    db_dir, _ = chess_db
+    the same file. Appends to its own database, so the module's shared
+    `chess_db` stays single-level whatever the test order."""
+    first = tmp_path / "games.pgn"
+    first.write_text(PGN_TEXT)
+    db_dir = str(tmp_path / "db")
+    importer.import_pgn(spark, [(str(first), "human")], db_dir)
     extra = tmp_path / "more.pgn"
     extra.write_text(PGN_TEXT)
     importer.append_pgn(spark, [(str(extra), "engine")], db_dir)
@@ -341,19 +345,25 @@ def _response_cells(resp: dict) -> dict:
     return out
 
 
-def test_explorer_grid_matches_entries_tally(spark, chess_db):
+def test_explorer_grid_matches_entries_tally(spark, tmp_path):
     """The explorer's driver-side grid fold against an independent tally
     over the entries rows. The batch repeats the start position and asks
     for 1.e4, which is also a child of the start position, so one entry
     row feeds several probes; the first request narrows levels and
-    results (after test_append_then_query the db also holds `engine`
-    rows for the level filter to drop) and keeps game 4's draw, whose
+    results (the db holds the corpus at two levels, `human` and
+    `engine`, so the level filter drops rows) and keeps game 4's draw, whose
     players have no Elo, so its cells have no eloDiffSum; the second
     has a queried move, so continuation and transposition both show.
     The entries are read as two runs, the second holding the same games
     under later ids (as an un-compacted append of the same file leaves
     them), so every cell folds several rows and min/max/sum matter."""
-    db_dir, _ = chess_db
+    files = []
+    for level in ("human", "engine"):
+        p = tmp_path / f"{level}.pgn"
+        p.write_text(PGN_TEXT)
+        files.append((str(p), level))
+    db_dir = str(tmp_path / "db")
+    importer.import_pgn(spark, files, db_dir)
     stored = spark.read.parquet(f"{db_dir}/entries")
     shift = 7 << 32
     entries = stored.unionByName(
@@ -380,6 +390,7 @@ def test_explorer_grid_matches_entries_tally(spark, chess_db):
     want = [_tally_cells(entry_rows, r) for r in requests]
     assert got == want
 
+    assert {r["level"] for r in entry_rows} == {"human", "engine"}
     narrowed = got[0]
     assert {k[4] for k in narrowed} == {"human"}
     assert {k[5] for k in narrowed} == {"W", "D"}

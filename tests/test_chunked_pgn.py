@@ -167,6 +167,62 @@ def test_import_pgn_uses_chunked_source(spark, tmp_path):
     assert stats["positions"] == 14
 
 
+def _persistent_rdd_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+def test_import_and_append_release_the_parse_cache(spark, tmp_path):
+    """The one cached parse belongs to import_pgn/append_pgn: neither
+    leaves a persisted RDD behind when it returns."""
+    from .test_chess import PGN_TEXT
+
+    p = tmp_path / "games.pgn"
+    p.write_text(PGN_TEXT)
+    db = str(tmp_path / "db")
+    before = _persistent_rdd_ids(spark)
+    importer.import_pgn(spark, [(str(p), "human")], db, retractions=True)
+    assert _persistent_rdd_ids(spark) - before == set()
+    q = tmp_path / "more.pgn"
+    q.write_text(PGN_TEXT)
+    importer.append_pgn(spark, [(str(q), "engine")], db)
+    assert _persistent_rdd_ids(spark) - before == set()
+
+
+def test_chunk_parse_has_no_exchange(spark, tmp_path):
+    """Splits come straight off a range source, one per task: the parse
+    plan has no shuffle below its MapInPandas."""
+    p = tmp_path / "big.pgn"
+    p.write_text(_corpus())
+    _, parsed, counts = importer._parse_chunked(
+        spark, [(str(p), "human")], 512, 0, lambda df: df
+    )
+    plan = parsed._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan, plan
+    assert "Exchange" not in plan, plan
+    assert counts == {"games": 40, "skipped": _corpus().count('Result "*"')}
+
+
+def test_import_pgn_job_budget(spark, tmp_path):
+    """One parse pass, and a report observed on the entries write
+    rather than re-read: a create of the test_chess corpus runs at most
+    12 Spark jobs."""
+    from .test_chess import PGN_TEXT
+
+    p = tmp_path / "games.pgn"
+    p.write_text(PGN_TEXT)
+    sc = spark.sparkContext
+    sc.setJobGroup("import-job-budget", "import_pgn job count")
+    try:
+        stats = importer.import_pgn(
+            spark, [(str(p), "human")], str(tmp_path / "db")
+        )
+    finally:
+        jobs = sc.statusTracker().getJobIdsForGroup("import-job-budget")
+        sc.setJobGroup("", "")
+    assert stats["positions"] == 14
+    assert len(jobs) <= 12, len(jobs)
+
+
 def test_scanner_positions_unit():
     """GameStartScanner records exactly the split_games boundaries, as
     absolute byte offsets, independent of feed block sizes."""
