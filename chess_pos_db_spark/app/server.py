@@ -91,7 +91,7 @@ class Engine:
     def _load_games(self, files: list[tuple[str, str]], fmt: str) -> DataFrame:
         if self._check_format(fmt) == "sbgn":
             return bcgn.read_sbgn(self.spark, files)
-        return importer.parse_games(importer.read_pgn_files(self.spark, files))
+        return importer.parse_games_chunked(self.spark, files)
 
     def _require_open(self) -> None:
         if self._entries is None:
@@ -173,41 +173,22 @@ class Engine:
         files = self._files_arg(cmd)
         fmt = self._check_format(cmd.get("format", "pgn"))
         db_dir = cmd["destination"]
+        retractions = bool(cmd.get("retractions", False))
+        store_moves = bool(cmd.get("storeMoves", False))
         if fmt == "pgn":
             stats = importer.import_pgn(
                 self.spark,
                 files,
                 db_dir,
-                retractions=bool(cmd.get("retractions", False)),
-                store_moves=bool(cmd.get("storeMoves", False)),
+                retractions=retractions,
+                store_moves=store_moves,
             )
         else:
-            from ..plans import layout
-
-            if bool(cmd.get("retractions", False)):
-                # honoring-or-failing, never silently dropping: the pgn
-                # branch writes the sidecar, this one does not yet
-                raise ValueError(
-                    "retractions sidecar is not supported for "
-                    "format=sbgn — import via pgn or omit retractions"
-                )
             games = self._load_games(files, fmt).cache()
             try:
-                agg = importer.build_agg_entries(
-                    importer.explode_positions(games)
+                stats = importer.write_database(
+                    games, db_dir, retractions, store_moves
                 )
-                stored = (
-                    games
-                    if bool(cmd.get("storeMoves", False))
-                    else games.drop("sans")
-                )
-                layout.write_sorted_run(
-                    stored, f"{db_dir}/games", key=["game_id"]
-                )
-                layout.write_sorted_run(
-                    agg, f"{db_dir}/entries", key=["pos_key"]
-                )
-                stats = {"games": games.count(), "db_dir": db_dir}
             finally:
                 # a failed write must not leave the parsed corpus pinned
                 # in executor memory for the rest of the session
@@ -340,9 +321,9 @@ class Engine:
 
     def cmd_bench(self, cmd: dict) -> dict:
         """`bench` command (reference: import-throughput measurement
-        doubling as a smoke test): parse+replay the given files into a
-        throwaway aggregation — nothing is written — and report games,
-        positions and positions/second."""
+        doubling as a smoke test): parse+replay the given files through
+        create's reader and aggregate (importer.replay_aggregate) —
+        nothing is written — and report positions and positions/second."""
         import time
 
         from pyspark.sql import functions as F
@@ -351,8 +332,7 @@ class Engine:
         fmt = cmd.get("format", "pgn")
         start = time.perf_counter()
         games = self._load_games(files, fmt)
-        agg = importer.build_agg_entries(importer.explode_positions(games))
-        row = agg.agg(
+        row = importer.replay_aggregate(games).agg(
             F.sum("cnt").alias("positions"),
             F.count("*").alias("unique_entries"),
         ).first()

@@ -76,6 +76,22 @@ ENTRY_SCHEMA_WITH_POS = T.StructType(
 )
 
 AGG_KEY = ["pos_key", "reverse_move", "level", "result"]
+RETR_KEY = ["pos_key", "reverse_move", "eran"]
+# Each stored table's combine (column → sum|min|max, layout.combine_runs).
+# Combining runs of one table is associative, so create, append and
+# merge are one step — partial aggregate, combine, pos_key sorted run —
+# the reference's pre-aggregated sorted runs and k-way merge †.
+ENTRY_COMBINE = {
+    "cnt": "sum",
+    "elo_diff_sum": "sum",
+    "first_game_id": "min",
+    "last_game_id": "max",
+}
+RETR_COMBINE = {"cnt": "sum", "first_game_id": "min"}
+TABLES = {
+    "entries": (AGG_KEY, ENTRY_COMBINE),
+    "retractions": (RETR_KEY, RETR_COMBINE),
+}
 
 
 def norm_binaryfile_path(p: str) -> str:
@@ -233,17 +249,16 @@ def _parse_chunked(
     chunk_bytes: int,
     file_idx_base: int,
     hold: Callable[[DataFrame], DataFrame],
-) -> tuple[DataFrame, DataFrame, dict]:
-    """The chunk-splitting source's ONE Python pass → (games, parsed,
-    counts).
+) -> tuple[DataFrame, DataFrame]:
+    """The chunk-splitting source's ONE Python pass → (games, parsed).
 
     Each split task slices its byte range on game boundaries and parses
     every game once, tagging it with game_id = (split << 32) | its
     chunk-local ordinal. `hold` (cache or localCheckpoint) keeps that
     parse; one groupBy(split) collect over it gives the per-split game
-    counts — one long per chunk, pure metadata — and the report's
-    games/skipped counts. The driver prefix-sums the counts per file
-    into each split's first ordinal (the zipWithIndex pattern), and
+    counts — one long per chunk, pure metadata. The driver prefix-sums
+    the counts per file into each split's first ordinal (the
+    zipWithIndex pattern), and
     `games` rebases every id to (file_idx << 32) | (first + local):
     IDENTICAL to the sequential reader's, so chunking is invisible in
     output. `games` reads `parsed`; the caller releases `parsed`."""
@@ -283,15 +298,9 @@ def _parse_chunked(
         )
     )
     split_col = F.shiftright("game_id", 32)
-    split_counts = (
-        parsed.groupBy(split_col.alias("split"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("result").isNull().cast("long")).alias("skipped"),
-        )
-        .collect()
+    n_by_split = dict(
+        parsed.groupBy(split_col.alias("split")).count().collect()
     )
-    n_by_split = {r["split"]: r["n"] for r in split_counts}
     offsets = []  # per split: (file_idx << 32) + its first game ordinal
     prev_file, first = None, 0
     for split, (file_idx, *_) in enumerate(splits):
@@ -307,11 +316,7 @@ def _parse_chunked(
         )
         + F.col("game_id").bitwiseAND(0xFFFFFFFF),
     )
-    counts = {
-        "games": sum(n_by_split.values()),
-        "skipped": sum(r["skipped"] for r in split_counts),
-    }
-    return games, parsed, counts
+    return games, parsed
 
 
 def parse_games_chunked(
@@ -565,13 +570,150 @@ def explode_positions(
 def build_agg_entries(entries_df: DataFrame) -> DataFrame:
     """Entries → pre-aggregated fact (the stored table). Map-side
     partial aggregation is the reference's in-buffer combine; the
-    shuffle is its spill+merge."""
-    return entries_df.groupBy(*AGG_KEY).agg(
+    shuffle is its spill+merge. Entries carrying `eran` (a retractions
+    replay) aggregate at that finer grain, from which both stored
+    tables combine (see TABLES)."""
+    key = AGG_KEY + (["eran"] if "eran" in entries_df.columns else [])
+    return entries_df.groupBy(*key).agg(
         F.count("*").alias("cnt"),
         F.sum("elo_diff").alias("elo_diff_sum"),
         F.min("game_id").alias("first_game_id"),
         F.max("game_id").alias("last_game_id"),
     )
+
+
+def replay_aggregate(games: DataFrame, eran: bool = False) -> DataFrame:
+    """The one entry-table derivation: games → replay → raw aggregate
+    (keyed by `eran` too when the retractions sidecar is kept).
+
+    Replay parallelism must not be bound by file or chunk count (one
+    giant PGN, or a small appended file, would otherwise replay on one
+    core): games spread across cores before the python-side replay, the
+    import's hot path. Ids are assigned before this, so the repartition
+    cannot affect them."""
+    spark = games.sparkSession
+    spread = games.repartition(spark.sparkContext.defaultParallelism)
+    return build_agg_entries(explode_positions(spread, include_eran=eran))
+
+
+def _write_table(
+    name: str,
+    runs: list[DataFrame],
+    path: str,
+    partitions: int | None,
+    metrics: tuple | None = None,
+) -> None:
+    """The one combine-and-write step: `runs` of stored table `name`
+    combine through its TABLES spec into one sorted run at `path`,
+    clustered on pos_key (the explorer's probe key) like every stored
+    entry table."""
+    key, spec = TABLES[name]
+    layout.write_sorted_run(
+        layout.combine_runs(runs, key, spec),
+        path,
+        key=["pos_key"],
+        partitions=partitions,
+        metrics=metrics,
+    )
+
+
+def _replay_and_write(
+    games: DataFrame,
+    db_dir: str,
+    retractions: bool,
+    partitions: int | None,
+    append: bool,
+    metrics: tuple | None = None,
+) -> None:
+    """Replay `games` once and write entries/ (and the retractions/
+    sidecar) from that one aggregate. `metrics` observes the entries
+    write.
+
+    With the sidecar the aggregate is keyed by eran too and persisted,
+    because it feeds two writes; its eran grain rolls up inside the
+    entries combine (the combine is associative). Without the sidecar
+    nothing is persisted: the aggregate's shuffle is materialised once,
+    before the range write samples it, so the replay still runs once.
+
+    `append` adds the live table to each combine and writes into a tmp
+    dir that then replaces the live one rename-first (`_swap_dir`):
+    compaction straight from memory, with no staging run on disk."""
+    spark = games.sparkSession
+
+    def put(name: str, new: DataFrame, metrics: tuple | None = None) -> None:
+        path = f"{db_dir}/{name}"
+        if append:
+            tmp = f"{db_dir}/_{name}_compact_tmp"
+            live = spark.read.parquet(path)
+            _write_table(name, [new, live], tmp, partitions)
+            _swap_dir(path, tmp)
+        else:
+            _write_table(name, [new], path, partitions, metrics)
+
+    pre = replay_aggregate(games, eran=retractions)
+    if retractions:
+        pre = pre.persist()
+    put("entries", pre, metrics)
+    if retractions:
+        put("retractions", pre.filter(F.col("eran").isNotNull()))
+        pre.unpersist()
+
+
+def write_database(
+    games: DataFrame,
+    db_dir: str,
+    retractions: bool = False,
+    store_moves: bool = False,
+    partitions: int | None = None,
+) -> dict:
+    """`create`'s write for games from any source (the chunked PGN
+    parse, bcgn.read_sbgn): games/ + entries/ (+ retractions/) sorted
+    runs with manifests. Returns the import report, observed on the
+    writes themselves. `games` is read twice, stored and replayed, so
+    the caller holds it (cache) and releases it.
+
+    Games dropped for invalid/illegal moves are VISIBLE in the report,
+    not silently absent: every replayed game contributes exactly one
+    (start-position, NO_REVERSE_MOVE) entry (a packed real move is
+    never NO_REVERSE_MOVE, so a mid-game transposition back to the
+    start cannot inflate this), so the imported-game count is that row
+    group's cnt."""
+    g_obs, e_obs = Observation(), Observation()
+    stored_games = games if store_moves else games.drop("sans")
+    layout.write_sorted_run(
+        stored_games,
+        f"{db_dir}/games",
+        key=["game_id"],
+        partitions=partitions,
+        metrics=(
+            g_obs,
+            F.count(F.lit(1)).alias("games"),
+            F.sum(F.col("result").isNull().cast("long")).alias("skipped"),
+        ),
+    )
+    start = (F.col("pos_key") == Position.from_fen(START_FEN).key()) & (
+        F.col("reverse_move") == NO_REVERSE_MOVE
+    )
+    _replay_and_write(
+        games,
+        db_dir,
+        retractions,
+        partitions,
+        append=False,
+        metrics=(
+            e_obs,
+            F.sum("cnt").alias("positions"),
+            F.sum(F.when(start, F.col("cnt"))).alias("imported"),
+        ),
+    )
+    n_games, skipped = g_obs.get["games"], g_obs.get["skipped"] or 0
+    return {
+        "games": n_games,
+        "skipped": skipped,
+        "dropped_invalid": n_games - skipped - (e_obs.get["imported"] or 0),
+        "positions": e_obs.get["positions"] or 0,
+        "db_dir": db_dir,
+    }
 
 
 def import_pgn(
@@ -583,9 +725,9 @@ def import_pgn(
     retractions: bool = False,
     store_moves: bool = False,
 ) -> dict:
-    """Full `create` command: parse → explode → aggregate → write the
-    database directory (games/ + entries/ sorted runs + manifests).
-    Returns import stats (the reference's progress/skip report).
+    """Full `create` command: parse → write_database (games/ + entries/
+    sorted runs + manifests). Returns import stats (the reference's
+    progress/skip report).
 
     Uses the chunk-splitting source, so ONE large dump parallelizes
     across byte-range tasks (game_ids identical to a sequential read).
@@ -601,92 +743,15 @@ def import_pgn(
     database migration, a capability the reference's header-only store
     never had. Default False matches the reference's posture (headers
     only; movetext exists only as exploded positions)."""
-    games, parsed, counts = _parse_chunked(
+    games, parsed = _parse_chunked(
         spark, files, chunk_bytes, 0, DataFrame.cache
     )
-    # Replay parallelism must not be bound by file count (one giant PGN
-    # would otherwise replay on one core): spread games across cores
-    # before the python-side replay, the import's hot path.
-    replay_parallelism = spark.sparkContext.defaultParallelism
-    entries = explode_positions(
-        games.repartition(replay_parallelism), include_eran=retractions
-    )
-    if retractions:
-        # Pre-aggregate WITH eran (finest grain), then roll up — the
-        # python replay runs once; both tables derive from `pre`.
-        pre = (
-            entries.groupBy(*AGG_KEY, "eran")
-            .agg(
-                F.count("*").alias("cnt"),
-                F.sum("elo_diff").alias("elo_diff_sum"),
-                F.min("game_id").alias("first_game_id"),
-                F.max("game_id").alias("last_game_id"),
-            )
-            .persist()
+    try:
+        return write_database(
+            games, db_dir, retractions, store_moves, partitions
         )
-        agg = pre.groupBy(*AGG_KEY).agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("elo_diff_sum").alias("elo_diff_sum"),
-            F.min("first_game_id").alias("first_game_id"),
-            F.max("last_game_id").alias("last_game_id"),
-        )
-        retr = (
-            pre.filter(F.col("eran").isNotNull())
-            .groupBy("pos_key", "reverse_move", "eran")
-            .agg(
-                F.sum("cnt").alias("cnt"),
-                F.min("first_game_id").alias("first_game_id"),
-            )
-        )
-        layout.write_sorted_run(
-            retr,
-            f"{db_dir}/retractions",
-            key=["pos_key"],
-            partitions=partitions,
-        )
-    else:
-        # Persist the aggregate: repartitionByRange samples its input to
-        # compute range bounds, which would otherwise run the (expensive)
-        # python replay twice.
-        pre = None
-        agg = build_agg_entries(entries).persist()
-
-    stored_games = games if store_moves else games.drop("sans")
-    layout.write_sorted_run(
-        stored_games, f"{db_dir}/games", key=["game_id"], partitions=partitions
-    )
-    # Games dropped for invalid/illegal moves must be VISIBLE in the
-    # import report, not silently absent: every replayed game
-    # contributes exactly one (start-position, NO_REVERSE_MOVE) entry
-    # (a packed real move is never NO_REVERSE_MOVE, so a mid-game
-    # transposition back to the start cannot inflate this), so the
-    # imported-game count is that row group's cnt, observed on the
-    # entries write with the positions total.
-    start = (F.col("pos_key") == Position.from_fen(START_FEN).key()) & (
-        F.col("reverse_move") == NO_REVERSE_MOVE
-    )
-    obs = Observation()
-    layout.write_sorted_run(
-        agg,
-        f"{db_dir}/entries",
-        key=["pos_key"],
-        partitions=partitions,
-        metrics=(
-            obs,
-            F.sum("cnt").alias("positions"),
-            F.sum(F.when(start, F.col("cnt"))).alias("imported"),
-        ),
-    )
-    (pre if retractions else agg).unpersist()
-    parsed.unpersist()
-    n_imported = obs.get["imported"] or 0
-    return {
-        "games": counts["games"],
-        "skipped": counts["skipped"],
-        "dropped_invalid": counts["games"] - counts["skipped"] - n_imported,
-        "positions": obs.get["positions"] or 0,
-        "db_dir": db_dir,
-    }
+    finally:
+        parsed.unpersist()
 
 
 def _swap_dir(live: str, tmp: str) -> None:
@@ -711,16 +776,16 @@ def _swap_dir(live: str, tmp: str) -> None:
 
 
 def _require_local(db_dir: str, op: str) -> None:
-    """append/merge maintain sidecars and staging dirs with local-FS
-    calls (os.path.isdir / shutil): on a remote URI those silently
-    report "no sidecar" and never clean staging — which would silently
-    undercount exact retraction queries. Until the maintenance path
-    speaks the Hadoop FS API, reject remote URIs LOUDLY."""
+    """append/merge maintain sidecars and compaction dirs with local-FS
+    calls (os.path.isdir / os.rename / shutil): on a remote URI those
+    silently report "no sidecar" — which would silently undercount
+    exact retraction queries. Until the maintenance path speaks the
+    Hadoop FS API, reject remote URIs LOUDLY."""
     if "://" in db_dir:
         raise ValueError(
             f"{op}: db_dir {db_dir!r} is a remote URI — the append/"
             f"merge maintenance path requires a local filesystem path "
-            f"(sidecar detection and staging cleanup are local-FS "
+            f"(sidecar detection and compaction swaps are local-FS "
             f"operations); run maintenance against a local copy"
         )
 
@@ -732,10 +797,10 @@ def append_pgn(
     partitions: int | None = None,
     chunk_bytes: int = DEFAULT_CHUNK_BYTES,
 ) -> dict:
-    """`append` command: new files become new runs; a compaction merge
-    (layout.compact_runs) re-establishes the single sorted table. The
-    run staging dir is transient — leaving it around would double-count
-    on the next append.
+    """`append` command: the appended games' aggregate combines with the
+    live entries table straight from memory into one compacted sorted
+    run, which replaces the live table rename-first — the same
+    combine-and-write step as create and merge (see _replay_and_write).
 
     Appended files continue the database's file-ordinal sequence (next
     free file_idx from the existing games table), so game_ids never
@@ -760,48 +825,15 @@ def append_pgn(
     transactional path; this directory layout mirrors the reference's
     non-transactional create/append files †."""
     import os
-    import shutil
 
     _require_local(db_dir, "append_pgn")
-    runs_dir = f"{db_dir}/_append_runs_tmp"
-    retr_dir = f"{db_dir}/retractions"
-    retr_runs_dir = f"{db_dir}/_append_retr_tmp"
-    has_retr = os.path.isdir(retr_dir)
     prev_games = spark.read.parquet(f"{db_dir}/games")
     prev_max = prev_games.agg(F.max(F.shiftright("game_id", 32))).first()[0]
     next_file_idx = int(prev_max) + 1 if prev_max is not None else 0
-    # the cached parse feeds BOTH the stored-games append and the
-    # entries aggregate (same reasoning as import_pgn's cache)
-    games, parsed, _ = _parse_chunked(
+    # the cached parse feeds BOTH the stored-games append and the replay
+    games, parsed = _parse_chunked(
         spark, files, chunk_bytes, next_file_idx, DataFrame.cache
     )
-    # Replay parallelism must not be bound by the append's chunk count
-    # (a small appended file plans few chunks): spread games across
-    # cores before the python-side replay, exactly as import_pgn does —
-    # round-12 audit fix; ids are already assigned at parse, so the
-    # repartition cannot affect them.
-    replay_games = games.repartition(spark.sparkContext.defaultParallelism)
-    pre = None
-    if has_retr:
-        entries = explode_positions(replay_games, include_eran=True)
-        pre = (
-            entries.groupBy(*AGG_KEY, "eran")
-            .agg(
-                F.count("*").alias("cnt"),
-                F.sum("elo_diff").alias("elo_diff_sum"),
-                F.min("game_id").alias("first_game_id"),
-                F.max("game_id").alias("last_game_id"),
-            )
-            .persist()
-        )
-        agg = pre.groupBy(*AGG_KEY).agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("elo_diff_sum").alias("elo_diff_sum"),
-            F.min("first_game_id").alias("first_game_id"),
-            F.max("last_game_id").alias("last_game_id"),
-        )
-    else:
-        agg = build_agg_entries(explode_positions(replay_games))
     # Match the database's fidelity mode: a store_moves database keeps
     # movetext for appended games too (otherwise export_pgn would
     # silently lose every appended game's moves); a header-only
@@ -809,51 +841,13 @@ def append_pgn(
     keeps_moves = "sans" in prev_games.columns
     stored_games = games if keeps_moves else games.drop("sans")
     stored_games.write.mode("append").parquet(f"{db_dir}/games")
-    agg.write.mode("overwrite").parquet(runs_dir)
-
-    # compact [new-run, existing-entries] straight into a temp dir and
-    # swap — the earlier flow physically COPIED the whole existing
-    # entries table into the staging dir first and then rewrote
-    # everything again, doubling the I/O of every append
-    entries_tmp = f"{db_dir}/_entries_compact_tmp"
-    layout.compact_runs(
-        spark,
-        [runs_dir, f"{db_dir}/entries"],
-        entries_tmp,
-        key=AGG_KEY,
-        agg_spec={
-            "cnt": "sum",
-            "elo_diff_sum": "sum",
-            "first_game_id": "min",
-            "last_game_id": "max",
-        },
-        partitions=partitions,
+    _replay_and_write(
+        games,
+        db_dir,
+        os.path.isdir(f"{db_dir}/retractions"),
+        partitions,
+        append=True,
     )
-    _swap_dir(f"{db_dir}/entries", entries_tmp)
-    shutil.rmtree(runs_dir, ignore_errors=True)
-
-    if has_retr:
-        new_retr = (
-            pre.filter(F.col("eran").isNotNull())
-            .groupBy("pos_key", "reverse_move", "eran")
-            .agg(
-                F.sum("cnt").alias("cnt"),
-                F.min("first_game_id").alias("first_game_id"),
-            )
-        )
-        new_retr.write.mode("overwrite").parquet(retr_runs_dir)
-        retr_tmp = f"{db_dir}/_retr_compact_tmp"
-        layout.compact_runs(
-            spark,
-            [retr_runs_dir, retr_dir],
-            retr_tmp,
-            key=["pos_key", "reverse_move", "eran"],
-            agg_spec={"cnt": "sum", "first_game_id": "min"},
-            partitions=partitions,
-        )
-        _swap_dir(retr_dir, retr_tmp)
-        shutil.rmtree(retr_runs_dir, ignore_errors=True)
-        pre.unpersist()
     parsed.unpersist()
     return {"db_dir": db_dir, "file_idx_base": next_file_idx}
 
@@ -875,42 +869,20 @@ def merge_databases(
     database IDENTICAL (game_ids included) to importing A+B in one
     shot; first/last_game_id min/max-combine correctly because the
     shift preserves within-database order and earlier databases get
-    smaller ids.
+    smaller ids. The shifted tables go through create's and append's
+    combine-and-write step.
 
     Retraction sidecars merge the same way when EVERY source has one
     (a partial merge would silently under-count); otherwise the
     destination has none.
     """
     import os
+    from functools import reduce
 
     for d in [*db_dirs, dest_dir]:
         _require_local(d, "merge_databases")
-    bases: list[int] = []
-    next_base = 0
-    n_games = 0
-    games_parts = []
-    for d in db_dirs:
-        bases.append(next_base)
-        g = spark.read.parquet(f"{d}/games")
-        # per-source game count rides the base-computation agg that
-        # already scans this dimension — the merged count is exactly
-        # the sum (every game kept once, per the id-shift contract), so
-        # the old post-write re-read of dest_dir/games is a second full
-        # pass the report never needed
-        row = g.agg(
-            F.max(F.shiftright("game_id", 32)).alias("mx"),
-            F.count(F.lit(1)).alias("n"),
-        ).first()
-        mx = row["mx"]
-        n_games += int(row["n"])
-        next_base += int(mx) + 1 if mx is not None else 0
-
-    def _shift(col: str, base: int):
-        return (F.col(col) + F.lit(base << 32)).alias(col)
-
-    moves_flags = {
-        d: "sans" in spark.read.parquet(f"{d}/games").columns for d in db_dirs
-    }
+    sources = [spark.read.parquet(f"{d}/games") for d in db_dirs]
+    moves_flags = {d: "sans" in g.columns for d, g in zip(db_dirs, sources)}
     if len(set(moves_flags.values())) > 1:
         # Refuse loudly rather than silently null movetext for the
         # header-only sources (export would then emit moveless games).
@@ -919,57 +891,42 @@ def merge_databases(
             f"{moves_flags}; re-import the header-only sources with "
             "store_moves=True (or export+drop the others) first"
         )
-    for d, base in zip(db_dirs, bases):
-        g = spark.read.parquet(f"{d}/games")
-        games_parts.append(g.withColumn("game_id", _shift("game_id", base)))
-    games = games_parts[0]
-    for g in games_parts[1:]:
-        games = games.unionByName(g)
+    bases: list[int] = []
+    next_base = 0
+    n_games = 0
+    for g in sources:
+        bases.append(next_base)
+        # the merged game count is exactly the sum of the sources' (every
+        # game kept once, per the id-shift contract), so it rides the
+        # base-computation agg instead of re-reading dest_dir/games
+        row = g.agg(
+            F.max(F.shiftright("game_id", 32)).alias("mx"),
+            F.count(F.lit(1)).alias("n"),
+        ).first()
+        n_games += int(row["n"])
+        next_base += int(row["mx"]) + 1 if row["mx"] is not None else 0
+
+    def shifted(df: DataFrame, base: int, *cols: str) -> DataFrame:
+        return df.withColumns(
+            {c: F.col(c) + F.lit(base << 32) for c in cols}
+        )
+
+    games = reduce(
+        DataFrame.unionByName,
+        [shifted(g, base, "game_id") for g, base in zip(sources, bases)],
+    )
     layout.write_sorted_run(
         games, f"{dest_dir}/games", key=["game_id"], partitions=partitions
     )
-
-    entry_parts = []
-    for d, base in zip(db_dirs, bases):
-        e = spark.read.parquet(f"{d}/entries")
-        entry_parts.append(
-            e.withColumn("first_game_id", _shift("first_game_id", base))
-            .withColumn("last_game_id", _shift("last_game_id", base))
-        )
-    union = entry_parts[0]
-    for e in entry_parts[1:]:
-        union = union.unionByName(e)
-    merged = union.groupBy(*AGG_KEY).agg(
-        F.sum("cnt").alias("cnt"),
-        F.sum("elo_diff_sum").alias("elo_diff_sum"),
-        F.min("first_game_id").alias("first_game_id"),
-        F.max("last_game_id").alias("last_game_id"),
-    )
-    layout.write_sorted_run(
-        merged, f"{dest_dir}/entries", key=["pos_key"], partitions=partitions
-    )
-
+    tables = {"entries": ("first_game_id", "last_game_id")}
     if all(os.path.isdir(f"{d}/retractions") for d in db_dirs):
-        retr_parts = []
-        for d, base in zip(db_dirs, bases):
-            r = spark.read.parquet(f"{d}/retractions")
-            retr_parts.append(
-                r.withColumn("first_game_id", _shift("first_game_id", base))
-            )
-        runion = retr_parts[0]
-        for r in retr_parts[1:]:
-            runion = runion.unionByName(r)
-        rmerged = runion.groupBy("pos_key", "reverse_move", "eran").agg(
-            F.sum("cnt").alias("cnt"),
-            F.min("first_game_id").alias("first_game_id"),
-        )
-        layout.write_sorted_run(
-            rmerged,
-            f"{dest_dir}/retractions",
-            key=["pos_key"],
-            partitions=partitions,
-        )
-
+        tables["retractions"] = ("first_game_id",)
+    for name, id_cols in tables.items():
+        runs = [
+            shifted(spark.read.parquet(f"{d}/{name}"), base, *id_cols)
+            for d, base in zip(db_dirs, bases)
+        ]
+        _write_table(name, runs, f"{dest_dir}/{name}", partitions)
     return {"db_dir": dest_dir, "games": n_games, "sources": len(db_dirs)}
 
 

@@ -1262,7 +1262,7 @@ def embedding_lsh_candidates(
     boundary (explicit select, §4.1)."""
     import numpy as np
 
-    from .similarity import _N_PLANES, _plane
+    from .similarity import _N_PLANES, _embedding_matrix, _plane
 
     b_planes = n_planes if n_planes is not None else _N_PLANES
     planes_mat = np.array(
@@ -1287,9 +1287,9 @@ def embedding_lsh_candidates(
             n = len(arr)
             if n == 0:
                 continue
-            flat = np.asarray(arr.flatten(), dtype=np.float64)
-            mat = flat.reshape(n, -1)
-            dots = mat @ planes_mat
+            dots = _embedding_matrix(arr, planes_mat.shape[0]) @ planes_mat
+            # half-to-even np.round vs half-up F.round: see
+            # similarity.sign_lsh_bucketed
             bits = (np.round(dots, 6) > 0).astype(np.int64)
             buckets = (bits.reshape(n, n_t, n_p) << shifts).sum(axis=2)
             yield pa.RecordBatch.from_arrays(

@@ -164,6 +164,27 @@ def sign_lsh_bucket(
     return bucket
 
 
+def _embedding_matrix(arr, dims: int):
+    """One Arrow batch's list<float> embeddings → an (n × dims) float64
+    matrix, or ValueError. ``flatten()`` skips null lists and
+    concatenates ragged ones, so a bare ``reshape(n, -1)`` would shift
+    every later row of the batch onto the wrong vector; a null or
+    wrong-length embedding (or a null component) fails loudly."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    span = pc.min_max(pc.list_value_length(arr)).as_py()
+    if arr.null_count or span != {"min": dims, "max": dims}:
+        raise ValueError(
+            f"embeddings must be non-null lists of {dims} values: batch "
+            f"has {arr.null_count} null row(s), lengths {span}"
+        )
+    values = arr.flatten()
+    if values.null_count:
+        raise ValueError(f"{values.null_count} null embedding component(s)")
+    return np.asarray(values, dtype=np.float64).reshape(len(arr), dims)
+
+
 def sign_lsh_bucketed(emb, table: int = 0, n_planes: int | None = None):
     """(vec_id, embedding, bucket): the single-table sign-LSH bucket
     assignment as ONE batched numpy matmul per Arrow batch (guide §4.2).
@@ -173,7 +194,10 @@ def sign_lsh_bucketed(emb, table: int = 0, n_planes: int | None = None):
     bit-prefix pin): the round-to-6dp-before-sign guard absorbs
     fold-order ulp differences between the BLAS sum and the JVM
     sequential fold — the same discipline that pins Spark against
-    DuckDB's unordered SUM. Why: b interpreted zip_with+aggregate
+    DuckDB's unordered SUM. One edge it does not absorb: np.round
+    rounds half-to-even where Spark's F.round rounds half-up, so a dot
+    landing exactly on a 6dp halfway point can flip its bit between
+    the two paths. Why: b interpreted zip_with+aggregate
     folds per row (HOFs are not codegen'd) dominated the ANN-family
     signature stages (measured at sf0.1: dedup_embedding_ann
     1.66 → 0.57 s, see OPTIMIZATION_r14.md §12). Only
@@ -199,8 +223,7 @@ def sign_lsh_bucketed(emb, table: int = 0, n_planes: int | None = None):
             n = len(arr)
             if n == 0:
                 continue
-            flat = np.asarray(arr.flatten(), dtype=np.float64)
-            dots = flat.reshape(n, -1) @ planes_mat
+            dots = _embedding_matrix(arr, planes_mat.shape[0]) @ planes_mat
             bits = (np.round(dots, 6) > 0).astype(np.int64)
             buckets = (bits << shifts).sum(axis=1)
             yield pa.RecordBatch.from_arrays(

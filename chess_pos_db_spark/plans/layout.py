@@ -102,6 +102,26 @@ def write_sorted_run(
     _write_manifest(path, key)
 
 
+def combine_runs(
+    runs: Sequence[DataFrame], key: Sequence[str], agg_spec: dict[str, str]
+) -> DataFrame:
+    """The reference's aggregate-combining merge as one plan: UNION ALL
+    of the runs' key + `agg_spec` columns → `groupBy(key).agg`.
+
+    `agg_spec` maps column → one of sum|min|max (the entry combine:
+    cnt/elo_diff_sum are summed, first_game_id min'd, last_game_id
+    max'd). Columns outside key + spec are dropped, so a finer-grained
+    run (an extra key column) combines straight into the coarser key."""
+    fns = {"sum": F.sum, "min": F.min, "max": F.max}
+    cols = [*key, *agg_spec]
+    union = runs[0].select(*cols)
+    for r in runs[1:]:
+        union = union.unionByName(r.select(*cols))
+    return union.groupBy(*key).agg(
+        *[fns[how](c).alias(c) for c, how in agg_spec.items()]
+    )
+
+
 def compact_runs(
     spark: SparkSession,
     run_paths: Sequence[str],
@@ -110,22 +130,17 @@ def compact_runs(
     agg_spec: dict[str, str],
     partitions: int | None = None,
 ) -> DataFrame:
-    """Aggregate-combining merge of N sorted runs → one sorted run.
-
-    `agg_spec` maps column → one of sum|min|max (the reference's entry
-    combine: cnt/elo_diff_sum are summed, first_game_id min'd,
-    last_game_id max'd). Returns the compacted DataFrame (lazily
-    re-readable from `out_path`).
+    """Aggregate-combining merge of N sorted runs on disk → one sorted
+    run: `combine_runs` over the runs read from `run_paths`, written
+    clustered on `key`. Returns the compacted DataFrame (lazily
+    re-readable from `out_path`). Runs already in memory go to
+    `combine_runs` directly, as the chess append does.
     """
     if not run_paths:
         raise ValueError("compact_runs: no run paths given")
-    fns = {"sum": F.sum, "min": F.min, "max": F.max}
-    runs = [spark.read.parquet(p) for p in run_paths]
-    union = runs[0]
-    for r in runs[1:]:
-        union = union.unionByName(r)
-    aggs = [fns[how](c).alias(c) for c, how in agg_spec.items()]
-    merged = union.groupBy(*key).agg(*aggs)
+    merged = combine_runs(
+        [spark.read.parquet(p) for p in run_paths], key, agg_spec
+    )
     write_sorted_run(merged, out_path, key, partitions=partitions)
     return spark.read.parquet(out_path)
 

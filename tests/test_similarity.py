@@ -574,3 +574,33 @@ def test_ivf_layout_delete_empties_a_cell(spark, tmp_path):
     survivors = spark.read.parquet(out)
     assert survivors.filter(F.col("cell") == target).count() == 0
     assert survivors.count() == 20 - victims.count()
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [[None, [0.2] * 64], [[0.5] * 63, [0.2] * 65]],
+    ids=["null", "ragged"],
+)
+def test_batched_lsh_rejects_null_and_ragged_embeddings(spark, bad):
+    """A null or wrong-length embedding fails both batched signature
+    stages loudly. Arrow's flatten() skips a null list and concatenates
+    ragged ones, so a bare reshape would bucket every later row of the
+    batch with the wrong vector (the ragged pair keeps the batch's total
+    at n × 64, so a size check alone would not see it)."""
+    from pyspark.sql import types as T
+    from chess_pos_db_spark.llm.dedup import embedding_lsh_candidates
+
+    schema = T.StructType(
+        [
+            T.StructField("vec_id", T.LongType(), False),
+            T.StructField("embedding", T.ArrayType(T.FloatType()), True),
+        ]
+    )
+    rows = [[0.1] * 64, *bad, [-0.3] * 64]
+    emb = spark.createDataFrame(list(enumerate(rows)), schema).coalesce(1)
+    for stage in (
+        lambda: sim.sign_lsh_bucketed(emb).collect(),
+        lambda: embedding_lsh_candidates(emb).collect(),
+    ):
+        with pytest.raises(Exception, match="ValueError: .*embedding"):
+            stage()
