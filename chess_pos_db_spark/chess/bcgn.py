@@ -18,17 +18,16 @@ SBGN ("spark binary game notation") layout, little-endian:
               the (deterministic) movegen, exactly like BCGN's
               movetext decoding needs its movegen.
 
-The Spark source is `binaryFile` + an Arrow-batched decoder
-(mapInPandas) emitting the same game schema as the PGN path, so the
-rest of the import pipeline is format-agnostic.
+The Spark source is the PGN source's split skeleton
+(importer.plan_splits + importer.read_splits) with one whole-file
+split per file, decoded into the same game schema as the PGN path, so
+the rest of the import pipeline is format-agnostic.
 """
 
 from __future__ import annotations
 
 import struct
 from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -167,68 +166,33 @@ def decode_file(data: bytes) -> Iterator[dict]:
         }
 
 
+def _file_games(path: str, start: int, end: int) -> Iterator[tuple[int, dict]]:
+    """One SBGN file → (ordinal, game in pgn.parse_game's shape), the
+    shape importer.read_splits builds rows from. The split is always
+    the whole file; SBGN carries no site, date text, round or ECO."""
+    with open(path, "rb") as f:
+        data = f.read()
+    for i, g in enumerate(decode_file(data)):
+        tags = {
+            "Event": g["event"],
+            "White": g["white"],
+            "Black": g["black"],
+            "WhiteElo": g["white_elo"],
+            "BlackElo": g["black_elo"],
+        }
+        yield i, {**g, "tags": tags}
+
+
 def read_sbgn(spark: SparkSession, paths: list[tuple[str, str]]) -> DataFrame:
-    """SBGN files → game rows (same schema as importer.parse_games), via
-    binaryFile scan + Arrow-batched decode."""
-    import os
+    """SBGN files → game rows (importer.GAME_SCHEMA), read by workers at
+    the paths as given, like the PGN source.
 
-    from .importer import GAME_SCHEMA, norm_binaryfile_path as norm
+    SBGN has no game-boundary sync marker to split on, so each file is
+    one split (a chunk as large as any file). One split per file makes
+    split i file i, so read_splits' (split << 32) | ordinal ids are
+    already (file_idx << 32) | ordinal — no count pass."""
+    import sys
 
-    level_by_path = {norm(p): lvl for p, lvl in paths}
-    file_idx_by_path = {norm(p): i for i, (p, _) in enumerate(paths)}
-    if len(file_idx_by_path) != len(paths):
-        # same loud contract as importer.read_pgn_files: duplicate
-        # paths silently collapse to one (idx, level) entry and emit
-        # colliding game_ids
-        dupes = sorted(
-            k for k in {norm(p) for p, _ in paths}
-            if sum(1 for q, _ in paths if norm(q) == k) > 1
-        )
-        raise ValueError(f"duplicate input paths in import list: {dupes}")
+    from .importer import plan_splits, read_splits
 
-    raw = spark.read.format("binaryFile").load(
-        [os.path.abspath(p) for p, _ in paths]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for _, row in pdf.iterrows():
-                path = row["path"]
-                key = norm(path)
-                if key not in file_idx_by_path:
-                    # fail LOUDLY like the importer: a silent
-                    # file_idx=0 fallback would collide game_ids
-                    # across files
-                    raise ValueError(
-                        f"binaryFile row {path!r} (decoded {key!r}) "
-                        f"matches no input path"
-                    )
-                level = level_by_path[key]
-                fidx = file_idx_by_path[key]
-                for g_idx, g in enumerate(decode_file(bytes(row["content"]))):
-                    out.append(
-                        {
-                            "game_id": (fidx << 32) | g_idx,
-                            "level": level,
-                            "result": g["result"],
-                            "event": g["event"],
-                            "site": None,
-                            "date_raw": None,
-                            "year": g["year"],
-                            "month": g["month"],
-                            "day": g["day"],
-                            "round": None,
-                            "white": g["white"],
-                            "black": g["black"],
-                            "white_elo": g["white_elo"],
-                            "black_elo": g["black_elo"],
-                            "eco": None,
-                            "ply_count": len(g["sans"]),
-                            "source_file": path,
-                            "sans": g["sans"],
-                        }
-                    )
-            yield pd.DataFrame(out, columns=[f.name for f in GAME_SCHEMA.fields])
-
-    return raw.mapInPandas(batches, schema=GAME_SCHEMA)
+    return read_splits(spark, plan_splits(paths, sys.maxsize), _file_games)

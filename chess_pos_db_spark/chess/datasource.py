@@ -8,9 +8,9 @@ Python Data Source API makes it a public, declarative surface:
     spark.dataSource.register(PgnDataSource)
     spark.read.format("pgn").load("/dumps/*.pgn")
 
-One InputPartition per byte-range chunk — the same game-boundary
-split planning the importer uses (`plan_pgn_splits` +
-`chunk_game_slices`), so a single large dump fans out across the
+One InputPartition per byte-range chunk — the same byte ranges and
+game-boundary reads the importer uses (`pgn.byte_ranges` +
+`pgn.chunk_games`), so a single large dump fans out across the
 cluster and Spark schedules/retries chunks like any file source's
 splits. Rows are game records; `(file_idx, game_offset)` is a stable
 total order equal to a sequential read's (offsets are game-start
@@ -44,23 +44,15 @@ _SCHEMA_DDL = (
     "year int, month int, day int"
 )
 
-DEFAULT_CHUNK_BYTES = 16 << 20
-
 
 def _chunk_partitions(
     path: str, file_idx: int, size: int, chunk_bytes: int
 ) -> list["PgnInputPartition"]:
-    """Byte-range partitions for one file (ONE definition of the split
-    loop for the batch and stream readers)."""
-    n_chunks = max(1, -(-size // chunk_bytes))
+    """Byte-range partitions for one file, for the batch and stream
+    readers."""
     return [
-        PgnInputPartition(
-            path,
-            file_idx,
-            ci * chunk_bytes,
-            min((ci + 1) * chunk_bytes, size),
-        )
-        for ci in range(n_chunks)
+        PgnInputPartition(path, file_idx, start, end)
+        for start, end in pgn.byte_ranges(size, chunk_bytes)
     ]
 
 
@@ -105,12 +97,9 @@ def _chunk_rows(partition: "PgnInputPartition"):
     (module-level on purpose: the stream reader used to call the batch
     reader's method UNBOUND with itself as self, which only worked
     while the body never touched instance state)."""
-    for offset, text in pgn.chunk_game_slices(
+    for offset, g in pgn.chunk_games(
         partition.path, partition.start, partition.end
     ):
-        g = pgn.parse_game(text)
-        if not (g["sans"] or g["tags"]):
-            continue  # parse_file's keep filter
         yield (
             partition.path,
             partition.file_idx,
@@ -148,7 +137,7 @@ class PgnDataSourceReader(DataSourceReader):
             raise ValueError(f"pgn source matched no files: {raw}")
         self._files = expanded
         self._chunk_bytes = int(
-            options.get("chunk_bytes", DEFAULT_CHUNK_BYTES)
+            options.get("chunk_bytes", pgn.DEFAULT_CHUNK_BYTES)
         )
         self._sizes = {p: os.path.getsize(p) for p in self._files}
 
@@ -216,7 +205,9 @@ class PgnDataSource(DataSource):
 class PgnStreamReader(DataSourceStreamReader):
     def __init__(self, options: dict):
         self._options = dict(options)
-        self._chunk_bytes = int(options.get("chunk_bytes", DEFAULT_CHUNK_BYTES))
+        self._chunk_bytes = int(
+            options.get("chunk_bytes", pgn.DEFAULT_CHUNK_BYTES)
+        )
 
     def _current_files(self) -> list[str]:
         raw = self._options.get("path")

@@ -94,97 +94,11 @@ TABLES = {
 }
 
 
-def norm_binaryfile_path(p: str) -> str:
-    """binaryFile URI / local path → canonical absolute path.
-
-    ONE normalization shared by every binaryFile consumer (this module
-    and chess/bcgn.read_sbgn): game_id parity depends on both sides
-    decoding percent-encoded file: URIs and relative inputs
-    identically — a divergent copy would mis-assign file ordinals."""
-    import os
-    from urllib.parse import unquote, urlparse
-
-    return os.path.abspath(unquote(urlparse(p).path) or p)
-
-
-def read_pgn_files(
-    spark: SparkSession, files: list[tuple[str, str]]
-) -> DataFrame:
-    """(path, level) list → raw file DataFrame, read EXECUTOR-side via
-    the binaryFile source (one file per task, matching the reference's
-    one-parser-thread-per-file). Only the tiny path→(ordinal, level)
-    map travels from the driver; file contents never do. The importer
-    itself uses parse_games_chunked, which splits big PGNs on game
-    boundaries; this whole-file read is the sequential reference its
-    game ids are tested against."""
-    import os
-    from urllib.parse import unquote, urlparse
-
-    from ..tables import _ship_package
-
-    _ship_package(spark)  # parse UDFs unpickle package modules on workers
-
-    meta = {
-        os.path.abspath(path): (idx, path, level)
-        for idx, (path, level) in enumerate(files)
-    }
-    if len(meta) != len(files):
-        # Duplicate paths would silently collapse to one (idx, level)
-        # entry — and duplicate game_ids downstream. Fail loud instead.
-        dupes = sorted(
-            p for p in {os.path.abspath(p) for p, _ in files}
-            if sum(1 for q, _ in files if os.path.abspath(q) == p) > 1
-        )
-        raise ValueError(f"duplicate input paths in import list: {dupes}")
-
-    schema = T.StructType(
-        [
-            T.StructField("file_idx", T.IntegerType(), False),
-            T.StructField("source_file", T.StringType(), False),
-            T.StructField("level", T.StringType(), False),
-            T.StructField("text", T.StringType(), False),
-        ]
-    )
-
-    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            idxs, srcs, lvls, texts = [], [], [], []
-            for uri, content in zip(pdf["path"], pdf["content"]):
-                key = norm_binaryfile_path(uri)
-                if key not in meta:
-                    raise ValueError(
-                        f"binaryFile row {uri!r} (decoded {key!r}) does not "
-                        f"match any input path — URI/abspath round-trip "
-                        f"mismatch; input paths: {sorted(meta)[:5]}..."
-                    )
-                idx, src, lvl = meta[key]
-                idxs.append(idx)
-                srcs.append(src)
-                lvls.append(lvl)
-                texts.append(bytes(content).decode("utf-8", "replace"))
-            yield pd.DataFrame(
-                {
-                    "file_idx": idxs,
-                    "source_file": srcs,
-                    "level": lvls,
-                    "text": texts,
-                }
-            )
-
-    raw = (
-        spark.read.format("binaryFile")
-        .load([os.path.abspath(p) for p, _ in files])
-        .select("path", "content")
-    )
-    return raw.mapInPandas(decode, schema)
-
-
-DEFAULT_CHUNK_BYTES = 16 << 20
 MIN_CHUNK_BYTES = 64 << 10  # below this, the 8 KB boundary lookback and
 # per-task overhead dominate the parse itself
 
 
-def stat_pgn_sizes(files: list[tuple[str, str]]) -> list[int]:
+def stat_sizes(files: list[tuple[str, str]]) -> list[int]:
     """File sizes for the import list, stat'd CONCURRENTLY.
 
     Listing is driver-side, single-process work (guide §5): a serial
@@ -193,7 +107,7 @@ def stat_pgn_sizes(files: list[tuple[str, str]]) -> list[int]:
     overlaps the I/O waits (stat releases the GIL), bounding wall time
     at ~n_files/32 round-trips; each file is stat'd exactly ONCE per
     import (pinned in test_chunked_pgn) — callers pass the result into
-    plan_pgn_splits instead of re-statting."""
+    plan_splits instead of re-statting."""
     import os
     from concurrent.futures import ThreadPoolExecutor
 
@@ -204,43 +118,73 @@ def stat_pgn_sizes(files: list[tuple[str, str]]) -> list[int]:
         return list(ex.map(os.path.getsize, paths))
 
 
-def plan_pgn_splits(
+def plan_splits(
     files: list[tuple[str, str]],
     chunk_bytes: int,
     file_idx_base: int = 0,
     sizes: list[int] | None = None,
 ) -> list[tuple]:
-    """Driver-side split planning (the Hadoop FileInputFormat analogue):
-    byte-range chunks per file, metadata only — no file contents touch
-    the driver. Pass `sizes` (from stat_pgn_sizes) to avoid a second
-    stat round over the import list."""
-    import os
+    """Driver-side split planning for every game-file format (the Hadoop
+    FileInputFormat analogue): byte-range chunks per file, metadata
+    only — no file contents touch the driver. Pass `sizes` (from
+    stat_sizes) to avoid a second stat round over the import list.
 
+    Paths are read by workers at the same POSIX path (os.path.getsize
+    here, open() in the task), so they must be visible to every worker
+    under that path. A path listed twice would import its games twice
+    under colliding ids, so the plan refuses it."""
+    import os
+    from collections import Counter
+
+    abspaths = [os.path.abspath(p) for p, _ in files]
+    dupes = sorted(p for p, n in Counter(abspaths).items() if n > 1)
+    if dupes:
+        raise ValueError(f"duplicate input paths in import list: {dupes}")
     if sizes is None:
-        sizes = stat_pgn_sizes(files)
-    seen = set()
-    rows = []
-    for (idx, (path, level)), size in zip(
-        enumerate(files, start=file_idx_base), sizes, strict=True
-    ):
-        ap = os.path.abspath(path)
-        if ap in seen:
-            raise ValueError(f"duplicate input path in import list: {path}")
-        seen.add(ap)
-        n_chunks = max(1, -(-size // chunk_bytes))
-        for ci in range(n_chunks):
-            rows.append(
-                (
-                    idx,
-                    ap,
-                    path,
-                    level,
-                    ci,
-                    ci * chunk_bytes,
-                    min((ci + 1) * chunk_bytes, size),
-                )
-            )
-    return rows
+        sizes = stat_sizes(files)
+    return [
+        (idx, ap, path, level, start, end)
+        for (idx, (path, level)), ap, size in zip(
+            enumerate(files, start=file_idx_base), abspaths, sizes, strict=True
+        )
+        for start, end in pgn.byte_ranges(size, chunk_bytes)
+    ]
+
+
+def read_splits(
+    spark: SparkSession,
+    splits: list[tuple],
+    read: Callable[[str, int, int], Iterator[tuple[int, dict]]],
+) -> DataFrame:
+    """The game readers' one skeleton: planned splits → game rows
+    (GAME_SCHEMA), one task per split.
+
+    The range source puts split i in partition i, so no shuffle spreads
+    them, and the split list rides in the task closure. `read(path,
+    start, end)` yields the split's (key, parsed game) pairs in file
+    order (the key is unused here); each game is tagged game_id =
+    (split << 32) | its ordinal within the split, and rows are built
+    columnar (_games_pdf)."""
+    from ..tables import _ship_package
+
+    _ship_package(spark)  # the read UDF unpickles package modules on workers
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+
+            def rows():
+                for split in pdf["id"].tolist():
+                    _, path, source_file, level, start, end = splits[split]
+                    game_id = split << 32
+                    for _, g in read(path, start, end):
+                        yield game_id, level, g, source_file
+                        game_id += 1
+
+            yield _games_pdf(rows())
+
+    return spark.range(0, len(splits), 1, len(splits)).mapInPandas(
+        batches, schema=GAME_SCHEMA
+    )
 
 
 def _parse_chunked(
@@ -253,50 +197,25 @@ def _parse_chunked(
     """The chunk-splitting source's ONE Python pass → (games, parsed).
 
     Each split task slices its byte range on game boundaries and parses
-    every game once, tagging it with game_id = (split << 32) | its
-    chunk-local ordinal. `hold` (cache or localCheckpoint) keeps that
-    parse; one groupBy(split) collect over it gives the per-split game
-    counts — one long per chunk, pure metadata. The driver prefix-sums
-    the counts per file into each split's first ordinal (the
-    zipWithIndex pattern), and
-    `games` rebases every id to (file_idx << 32) | (first + local):
-    IDENTICAL to the sequential reader's, so chunking is invisible in
-    output. `games` reads `parsed`; the caller releases `parsed`."""
-    from ..tables import _ship_package
-
-    _ship_package(spark)  # the parse UDF unpickles pgn on workers
+    every game once (read_splits over pgn.chunk_games), tagging it with
+    game_id = (split << 32) | its chunk-local ordinal. `hold` (cache or
+    localCheckpoint) keeps that parse; one groupBy(split) collect over
+    it gives the per-split game counts — one long per chunk, pure
+    metadata. The driver prefix-sums the counts per file into each
+    split's first ordinal (the zipWithIndex pattern), and `games`
+    rebases every id to (file_idx << 32) | (first + local): IDENTICAL
+    to the ids of a sequential pgn.parse_file over each whole file, so
+    chunking is invisible in output. `games` reads `parsed`; the caller
+    releases `parsed`."""
     # ONE concurrent stat round over the import list, shared by the
     # adaptive-chunk sizing and the split planning (guide §5).
-    sizes = stat_pgn_sizes(files)
+    sizes = stat_sizes(files)
     target_chunks = max(1, 2 * spark.sparkContext.defaultParallelism)
     eff_chunk = min(
         chunk_bytes, max(MIN_CHUNK_BYTES, -(-sum(sizes) // target_chunks))
     )
-    splits = plan_pgn_splits(files, eff_chunk, file_idx_base, sizes=sizes)
-
-    def parse_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-
-            def rows():
-                for split in pdf["id"].tolist():
-                    _, path, source_file, level, _, start, end = splits[split]
-                    game_id = split << 32
-                    for _, text in pgn.chunk_game_slices(path, start, end):
-                        g = pgn.parse_game(text)
-                        if g["sans"] or g["tags"]:  # parse_file's keep filter
-                            yield game_id, level, g, source_file
-                            game_id += 1
-
-            yield _games_pdf(rows())
-
-    # One split per task, each up to 16 MB of parse: the range source
-    # puts split i in partition i, so no shuffle spreads them, and the
-    # split list rides in the task closure.
-    parsed = hold(
-        spark.range(0, len(splits), 1, len(splits)).mapInPandas(
-            parse_batches, schema=GAME_SCHEMA
-        )
-    )
+    splits = plan_splits(files, eff_chunk, file_idx_base, sizes=sizes)
+    parsed = hold(read_splits(spark, splits, pgn.chunk_games))
     split_col = F.shiftright("game_id", 32)
     n_by_split = dict(
         parsed.groupBy(split_col.alias("split")).count().collect()
@@ -322,7 +241,7 @@ def _parse_chunked(
 def parse_games_chunked(
     spark: SparkSession,
     files: list[tuple[str, str]],
-    chunk_bytes: int = DEFAULT_CHUNK_BYTES,
+    chunk_bytes: int = pgn.DEFAULT_CHUNK_BYTES,
     file_idx_base: int = 0,
 ) -> DataFrame:
     """Chunk-splitting PGN source: ONE large file imports in parallel.
@@ -333,8 +252,9 @@ def parse_games_chunked(
     rule, so results are byte-identical to the sequential parse) and
     reads every PGN byte in ONE distributed Python pass: each chunk is
     parsed once, and game ids are rebased from the per-chunk game
-    counts that pass yields (see _parse_chunked). The pass is
-    embarrassingly parallel and shuffles nothing.
+    counts that pass yields (see _parse_chunked). The parse itself is
+    embarrassingly parallel; the one shuffle is that count's tiny
+    groupBy(split), one row per chunk.
 
     `chunk_bytes` is an UPPER bound: when the corpus is smaller than
     (2 × parallelism) chunks of that size, chunks shrink (down to
@@ -399,33 +319,6 @@ def _games_pdf(rows) -> pd.DataFrame:
         ap["source_file"](source_file)
         ap["sans"](g["sans"])
     return pd.DataFrame({k: _object_if_empty(v) for k, v in cols.items()})
-
-
-def parse_games(files_df: DataFrame) -> DataFrame:
-    """Raw file rows → one row per game (tags + SAN list), including
-    unknown-result games (result NULL) so skip counts are queryable."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-
-            def rows():
-                for file_idx, level, source_file, text in zip(
-                    pdf["file_idx"].tolist(),
-                    pdf["level"].tolist(),
-                    pdf["source_file"].tolist(),
-                    pdf["text"].tolist(),
-                ):
-                    for g_idx, g in enumerate(pgn.parse_file(text)):
-                        yield (
-                            (int(file_idx) << 32) | g_idx,
-                            level,
-                            g,
-                            source_file,
-                        )
-
-            yield _games_pdf(rows())
-
-    return files_df.mapInPandas(batches, schema=GAME_SCHEMA)
 
 
 def explode_positions(
@@ -666,9 +559,9 @@ def write_database(
     store_moves: bool = False,
     partitions: int | None = None,
 ) -> dict:
-    """`create`'s write for games from any source (the chunked PGN
-    parse, bcgn.read_sbgn): games/ + entries/ (+ retractions/) sorted
-    runs with manifests. Returns the import report, observed on the
+    """`create`'s write for games from either reader (read_splits under
+    the chunked PGN parse or bcgn.read_sbgn): games/ + entries/ (+
+    retractions/) sorted runs with manifests. Returns the import report, observed on the
     writes themselves. `games` is read twice, stored and replayed, so
     the caller holds it (cache) and releases it.
 
@@ -721,7 +614,7 @@ def import_pgn(
     files: list[tuple[str, str]],
     db_dir: str,
     partitions: int | None = None,
-    chunk_bytes: int = DEFAULT_CHUNK_BYTES,
+    chunk_bytes: int = pgn.DEFAULT_CHUNK_BYTES,
     retractions: bool = False,
     store_moves: bool = False,
 ) -> dict:
@@ -795,7 +688,7 @@ def append_pgn(
     files: list[tuple[str, str]],
     db_dir: str,
     partitions: int | None = None,
-    chunk_bytes: int = DEFAULT_CHUNK_BYTES,
+    chunk_bytes: int = pgn.DEFAULT_CHUNK_BYTES,
 ) -> dict:
     """`append` command: the appended games' aggregate combines with the
     live entries table straight from memory into one compacted sorted

@@ -16,7 +16,7 @@ probe inputs.
 from __future__ import annotations
 
 import re
-from typing import Iterator, Optional
+from typing import Iterable, Iterator, Optional
 
 _TAG_RE = re.compile(r'\[\s*(\w+)\s+"((?:[^"\\]|\\.)*)"\s*\]')
 _RESULT_TOKENS = {"1-0": "W", "0-1": "B", "1/2-1/2": "D", "*": None}
@@ -162,11 +162,21 @@ def parse_game(chunk: str) -> dict:
     }
 
 
-def parse_file(text: str) -> Iterator[dict]:
-    for chunk in split_games(text):
-        g = parse_game(chunk)
+def _kept(slices: Iterable[tuple[int, str]]) -> Iterator[tuple[int, dict]]:
+    """(key, game text) → (key, parsed game), minus empty games (no tags
+    and no moves: stray text between games) — every PGN reader's one
+    keep rule."""
+    for key, text in slices:
+        g = parse_game(text)
         if g["sans"] or g["tags"]:
-            yield g
+            yield key, g
+
+
+def parse_file(text: str) -> Iterator[dict]:
+    """A whole PGN text → its games in file order: the sequential read
+    every split-parallel read must reproduce."""
+    for _, g in _kept(enumerate(split_games(text))):
+        yield g
 
 
 # ---------------------------------------------------------------------------
@@ -187,6 +197,17 @@ def parse_file(text: str) -> Iterator[dict]:
 # (one-line exporters, huge {comments}) cannot desynchronize a
 # boundary; see _resolve_read_from.
 # ---------------------------------------------------------------------------
+
+DEFAULT_CHUNK_BYTES = 16 << 20
+
+
+def byte_ranges(size: int, chunk_bytes: int) -> list[tuple[int, int]]:
+    """[start, end) ranges of at most `chunk_bytes` covering a file of
+    `size` bytes; an empty file still gets one (empty) range."""
+    return [
+        (s, min(s + chunk_bytes, size))
+        for s in range(0, max(size, 1), chunk_bytes)
+    ]
 
 
 class GameStartScanner:
@@ -345,6 +366,13 @@ def chunk_game_slices(
             text = text.lstrip("﻿")
         out.append((a, text))
     return out
+
+
+def chunk_games(path: str, start: int, end: int) -> Iterator[tuple[int, dict]]:
+    """The kept games STARTING in byte range [start, end) of a PGN
+    file, as (absolute_start_offset, parsed game) in file order: one
+    split of the split-parallel read."""
+    return _kept(chunk_game_slices(path, start, end))
 
 
 _RESULT_TO_TOKEN = {"W": "1-0", "B": "0-1", "D": "1/2-1/2", None: "*"}

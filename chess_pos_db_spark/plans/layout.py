@@ -506,10 +506,9 @@ def delete_rows(
             "version": None, "rows_deleted": 0,
             "files_rewritten": 0, "files_total": len(rels),
         }
-    # input_file_name() yields percent-encoded file: URIs — decode the
-    # same way the importer's binaryFile path mapping does, or a store
-    # under a path with spaces would flag every touched file as
-    # outside the manifest
+    # input_file_name() yields percent-encoded file: URIs — decode
+    # them back to local paths, or a store under a path with spaces
+    # would flag every touched file as outside the manifest
     touched = {
         os.path.relpath(unquote(urlparse(r["f"]).path), os.path.abspath(path))
         for r in hits

@@ -56,9 +56,7 @@ def test_spark_source_parity(spark, tmp_path):
     sbgn_path = str(tmp_path / "g.sbgn")
     bcgn.write_file(_games(), sbgn_path)
 
-    games_pgn = importer.parse_games(
-        importer.read_pgn_files(spark, [(str(pgn_path), "human")])
-    )
+    games_pgn = importer.parse_games_chunked(spark, [(str(pgn_path), "human")])
     games_bin = bcgn.read_sbgn(spark, [(sbgn_path, "human")])
 
     agg_pgn = importer.build_agg_entries(importer.explode_positions(games_pgn))
@@ -94,8 +92,8 @@ def test_sbgn_corrupt_records_fail_loudly():
 
 def test_read_sbgn_rejects_duplicate_paths(spark, tmp_path):
     """Duplicate input paths collapse the (idx, level) maps silently
-    and emit colliding game_ids — the same loud contract as
-    importer.read_pgn_files."""
+    and emit colliding game_ids — the same loud contract as the pgn
+    import's."""
     import pytest
 
     from chess_pos_db_spark.chess import bcgn
@@ -106,3 +104,37 @@ def test_read_sbgn_rejects_duplicate_paths(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="duplicate input paths"):
         bcgn.read_sbgn(spark, [(f, "human"), (f, "engine")])
+
+
+def test_read_sbgn_two_files(spark, tmp_path):
+    """Two SBGN files read as two whole-file splits off the range
+    source: no shuffle below the decode, the second file's ids start at
+    1 << 32, and the rows are each file's decode on the driver, with
+    the paths as given."""
+    files = []
+    for i, (games, level) in enumerate(
+        ((_games(), "human"), (_games()[1:], "engine"))
+    ):
+        path = str(tmp_path / f"g{i}.sbgn")
+        bcgn.write_file(games, path)
+        files.append((path, level))
+    df = bcgn.read_sbgn(spark, files)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan, plan
+    assert "Exchange" not in plan, plan
+    expected = []
+    for file_idx, (path, level) in enumerate(files):
+        with open(path, "rb") as f:
+            decoded = list(bcgn.decode_file(f.read()))
+        for i, g in enumerate(decoded):
+            expected.append(
+                (
+                    (file_idx << 32) | i, level, g["result"], g["event"],
+                    None, None, g["year"], g["month"], g["day"], None,
+                    g["white"], g["black"], g["white_elo"], g["black_elo"],
+                    None, len(g["sans"]), path, g["sans"],
+                )
+            )
+    got = sorted((tuple(r) for r in df.collect()), key=lambda t: t[0])
+    assert got == expected
+    assert min(r[0] for r in got if r[16] == files[1][0]) == 1 << 32

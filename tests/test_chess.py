@@ -408,9 +408,7 @@ def test_explorer_grid_matches_entries_tally(spark, tmp_path):
 def test_dump_epd(spark, tmp_path):
     pgn_path = tmp_path / "g.pgn"
     pgn_path.write_text(PGN_TEXT)
-    games = importer.parse_games(
-        importer.read_pgn_files(spark, [(str(pgn_path), "human")])
-    )
+    games = importer.parse_games_chunked(spark, [(str(pgn_path), "human")])
     entries = importer.explode_positions(games, include_positions=True)
     out = str(tmp_path / "dump")
     query.dump_epd(entries, out, min_count=2)
@@ -550,9 +548,7 @@ def test_transposition_stats(spark, tmp_path):
 """
     p = tmp_path / "t.pgn"
     p.write_text(text)
-    games = importer.parse_games(
-        importer.read_pgn_files(spark, [(str(p), "human")])
-    )
+    games = importer.parse_games_chunked(spark, [(str(p), "human")])
     entries = importer.explode_positions(games)
     agg = importer.build_agg_entries(entries)
     stats = query.transposition_stats(agg).collect()

@@ -1,7 +1,8 @@
 """Chunk-splitting PGN source (S1): byte-range splits must be invisible
 in output — a single large file parsed via chunks yields byte-identical
-game rows (including game_ids) to the sequential reader, for ANY chunk
-size, including chunks smaller than one game. Reference behavior:
+game rows (including game_ids) to the sequential reader — pgn.parse_file
+over each whole file on the driver — for ANY chunk size, including
+chunks smaller than one game. Reference behavior:
 `src/chess/Pgn.h` LazyPgnFileReader † streams sequentially; the Spark
 source parallelizes the same semantics.
 """
@@ -56,6 +57,24 @@ def _corpus(n_games: int = 40, seed: int = 7) -> str:
     return "".join(chunks)
 
 
+def _sequential(spark, files):
+    """The sequential reference, independent of Spark's file sources:
+    pgn.parse_file over each whole file on the driver, with ids
+    (file_idx << 32) | ordinal."""
+    from pathlib import Path
+
+    rows = [
+        ((file_idx << 32) | i, level, g, path)
+        for file_idx, (path, level) in enumerate(files)
+        for i, g in enumerate(
+            pgn.parse_file(Path(path).read_bytes().decode("utf-8", "replace"))
+        )
+    ]
+    return spark.createDataFrame(
+        importer._games_pdf(rows), importer.GAME_SCHEMA
+    )
+
+
 def _rows(df):
     return sorted(
         (tuple(r) for r in df.collect()), key=lambda t: t[0]
@@ -68,9 +87,7 @@ def test_chunked_equals_sequential(spark, tmp_path, chunk_bytes):
     reproduces the sequential parse exactly, game_ids included."""
     p = tmp_path / "big.pgn"
     p.write_text(_corpus())
-    seq = importer.parse_games(
-        importer.read_pgn_files(spark, [(str(p), "human")])
-    )
+    seq = _sequential(spark, [(str(p), "human")])
     chk = importer.parse_games_chunked(
         spark, [(str(p), "human")], chunk_bytes=chunk_bytes
     )
@@ -88,9 +105,7 @@ def test_chunked_game_larger_than_chunk(spark, tmp_path):
     )
     p = tmp_path / "huge.pgn"
     p.write_text(text)
-    seq = importer.parse_games(
-        importer.read_pgn_files(spark, [(str(p), "human")])
-    )
+    seq = _sequential(spark, [(str(p), "human")])
     chk = importer.parse_games_chunked(
         spark, [(str(p), "human")], chunk_bytes=512
     )
@@ -111,9 +126,7 @@ def test_chunked_no_blank_line_between_games(spark, tmp_path):
         chk = importer.parse_games_chunked(
             spark, [(str(p), "human")], chunk_bytes=cb
         )
-        seq = importer.parse_games(
-            importer.read_pgn_files(spark, [(str(p), "human")])
-        )
+        seq = _sequential(spark, [(str(p), "human")])
         assert _rows(chk) == _rows(seq), cb
 
 
@@ -146,9 +159,7 @@ def test_chunked_entries_match_many_small_files(spark, tmp_path):
     one = agg_rows(
         importer.parse_games_chunked(spark, [(str(big), "human")], 777)
     )
-    many = agg_rows(
-        importer.parse_games(importer.read_pgn_files(spark, smalls))
-    )
+    many = agg_rows(_sequential(spark, smalls))
     assert one == many
 
 
@@ -284,9 +295,7 @@ def test_chunked_movetext_line_longer_than_lookback(spark, tmp_path):
     )
     p = tmp_path / "longline.pgn"
     p.write_text(text)
-    seq = importer.parse_games(
-        importer.read_pgn_files(spark, [(str(p), "human")])
-    )
+    seq = _sequential(spark, [(str(p), "human")])
     for cb in [1024, 4096, 12000]:
         chk = importer.parse_games_chunked(
             spark, [(str(p), "human")], chunk_bytes=cb
@@ -305,9 +314,7 @@ def test_chunked_cr_only_line_terminators(spark, tmp_path):
     )
     p = tmp_path / "cr.pgn"
     p.write_bytes(text.encode())
-    seq = importer.parse_games(
-        importer.read_pgn_files(spark, [(str(p), "human")])
-    )
+    seq = _sequential(spark, [(str(p), "human")])
     assert len(_rows(seq)) == 2
     for cb in [16, 40, 1 << 20]:
         chk = importer.parse_games_chunked(
@@ -386,9 +393,7 @@ def test_bom_prefixed_file(spark, tmp_path):
     )
     p = tmp_path / "bom.pgn"
     p.write_bytes(b"\xef\xbb\xbf" + text.encode())
-    seq = importer.parse_games(
-        importer.read_pgn_files(spark, [(str(p), "human")])
-    )
+    seq = _sequential(spark, [(str(p), "human")])
     rows_seq = _rows(seq)
     assert len(rows_seq) == 2
     for cb in [16, 64, 1 << 20]:
@@ -465,7 +470,7 @@ def test_split_planning_rejects_short_sizes(tmp_path):
         p.write_text(f'[Event "G{i}"]\n[Result "*"]\n\n*\n')
         files.append((str(p), "human"))
     with pytest.raises(ValueError):
-        importer.plan_pgn_splits(files, 1 << 20, sizes=[10, 10])
+        importer.plan_splits(files, 1 << 20, sizes=[10, 10])
 
 
 def test_split_planning_stats_each_file_once(tmp_path, monkeypatch):
@@ -474,7 +479,7 @@ def test_split_planning_stats_each_file_once(tmp_path, monkeypatch):
     every file twice (adaptive-chunk sizing and split planning each ran
     their own serial getsize loop), doubling a stall that already grows
     linearly with file count. Pinned over a many-file list; also pins
-    that plan_pgn_splits accepts pre-stat'd sizes without re-statting."""
+    that plan_splits accepts pre-stat'd sizes without re-statting."""
     import os
 
     files = []
@@ -492,13 +497,13 @@ def test_split_planning_stats_each_file_once(tmp_path, monkeypatch):
 
     monkeypatch.setattr(os.path, "getsize", counting_getsize)
 
-    sizes = importer.stat_pgn_sizes(files)
+    sizes = importer.stat_sizes(files)
     assert len(calls) == len(files)  # one stat per file, concurrent pool
     assert sizes == [real_getsize(p) for p, _ in files]
 
     calls.clear()
-    rows = importer.plan_pgn_splits(files, 1 << 20, sizes=sizes)
+    rows = importer.plan_splits(files, 1 << 20, sizes=sizes)
     assert calls == []  # pre-stat'd sizes are trusted, no second round
     assert len(rows) == len(files)  # tiny files -> one chunk each
     # metadata integrity: every chunk carries the stat'd size as `end`
-    assert [r[6] for r in rows] == sizes
+    assert [r[-1] for r in rows] == sizes

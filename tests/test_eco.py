@@ -14,9 +14,7 @@ def classified(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("eco")
     p = root / "g.pgn"
     p.write_text(PGN_TEXT)
-    games = importer.parse_games(
-        importer.read_pgn_files(spark, [(str(p), "human")])
-    )
+    games = importer.parse_games_chunked(spark, [(str(p), "human")])
     entries = importer.explode_positions(games)
     table = eco.build_eco_table(spark)
     out = eco.classify_games(entries, table).collect()

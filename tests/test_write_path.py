@@ -67,6 +67,36 @@ def test_sbgn_create_equals_pgn_create(spark, tmp_path):
             pgn_rows = _rows(spark, f"{dbs['pgn']}/{t}")
             assert pgn_rows and pgn_rows == _rows(spark, f"{dbs['sbgn']}/{t}")
         assert os.path.isdir(f"{dbs['sbgn']}/retractions") == retractions
+        # the games rows carry the input path as given, like pgn's
+        sources = spark.read.parquet(f"{dbs['sbgn']}/games").select(
+            "source_file"
+        )
+        assert {r[0] for r in sources.collect()} == {sbgn_path}
+
+
+@pytest.mark.parametrize("retractions,budget", [(False, 11), (True, 17)])
+def test_sbgn_create_job_budget(spark, tmp_path, retractions, budget):
+    """The sbgn read is a range source feeding the decode, with no
+    listing or count job of its own: an Engine sbgn create, counting
+    its open, runs at most 11 jobs (17 with the sidecar)."""
+    sbgn_path = str(tmp_path / "g.sbgn")
+    bcgn.write_file(_games(), sbgn_path)
+    eng = server.Engine(spark)
+    cmd = {
+        "command": "create",
+        "destination": str(tmp_path / "db"),
+        "files": {"human": [sbgn_path]},
+        "format": "sbgn",
+        "retractions": retractions,
+    }
+    resp: dict = {}
+    n = _jobs(
+        spark,
+        f"sbgn-create-budget-{retractions}",
+        lambda: resp.update(eng.handle(cmd)),
+    )
+    assert resp["ok"], resp
+    assert n <= budget, n
 
 
 @pytest.mark.parametrize("retractions,budget", [(False, 13), (True, 19)])
