@@ -460,6 +460,26 @@ def _dump_response(out: dict) -> str:
         )
 
 
+def _respond(engine: Engine, line: str) -> str | None:
+    """One non-blank command line → its one JSON response line, or
+    None for 'exit'. Shared by the TCP handler and the console loop:
+    bad JSON and valid JSON that is not an object ('[1,2]', '"x"', '3',
+    which would AttributeError on .get before the engine's own error
+    guard) both get an ok:false response instead of killing the
+    connection or loop."""
+    try:
+        cmd = json.loads(line)
+    except json.JSONDecodeError as exc:
+        return _dump_response({"ok": False, "error": f"bad json: {exc}"})
+    if not isinstance(cmd, dict):
+        return _dump_response(
+            {"ok": False, "error": "command must be a JSON object"}
+        )
+    if cmd.get("command") == "exit":
+        return None
+    return _dump_response(engine.handle(cmd))
+
+
 def serve_tcp(engine: Engine, host: str = "127.0.0.1", port: int = 0):
     """Start a line-JSON TCP server; returns (server, thread, port).
     Each connection handles commands until 'exit' or EOF."""
@@ -481,27 +501,10 @@ def serve_tcp(engine: Engine, host: str = "127.0.0.1", port: int = 0):
                     continue
                 if not line:
                     continue
-                try:
-                    cmd = json.loads(line)
-                except json.JSONDecodeError as exc:
-                    out = {"ok": False, "error": f"bad json: {exc}"}
-                else:
-                    # valid JSON that is not an object ('[1,2]', '"x"',
-                    # '3') would AttributeError on .get BEFORE the
-                    # engine's error guard — killing the connection
-                    # with no reply instead of answering ok:false
-                    if not isinstance(cmd, dict):
-                        out = {
-                            "ok": False,
-                            "error": "command must be a JSON object",
-                        }
-                    elif cmd.get("command") == "exit":
-                        break
-                    else:
-                        out = engine.handle(cmd)
-                self.wfile.write(
-                    (_dump_response(out) + "\n").encode("utf-8")
-                )
+                reply = _respond(engine, line)
+                if reply is None:
+                    break
+                self.wfile.write((reply + "\n").encode("utf-8"))
                 self.wfile.flush()
 
     class _Server(socketserver.ThreadingTCPServer):
@@ -536,26 +539,7 @@ def console_loop(engine: Engine, stdin, stdout) -> None:
         line = line.strip()
         if not line:
             continue
-        try:
-            cmd = json.loads(line)
-        except json.JSONDecodeError as exc:
-            print(
-                json.dumps({"ok": False, "error": f"bad json: {exc}"}),
-                file=stdout,
-                flush=True,
-            )
-            continue
-        # same non-object guard as the TCP handler: a '[1,2]' line
-        # would AttributeError on .get and kill the whole console loop
-        if not isinstance(cmd, dict):
-            print(
-                json.dumps(
-                    {"ok": False, "error": "command must be a JSON object"}
-                ),
-                file=stdout,
-                flush=True,
-            )
-            continue
-        if cmd.get("command") == "exit":
+        reply = _respond(engine, line)
+        if reply is None:
             break
-        print(_dump_response(engine.handle(cmd)), file=stdout, flush=True)
+        print(reply, file=stdout, flush=True)

@@ -193,8 +193,9 @@ def _parse_chunked(
     chunk_bytes: int,
     file_idx_base: int,
     hold: Callable[[DataFrame], DataFrame],
-) -> tuple[DataFrame, DataFrame]:
-    """The chunk-splitting source's ONE Python pass → (games, parsed).
+) -> tuple[DataFrame, DataFrame, int]:
+    """The chunk-splitting source's ONE Python pass → (games, parsed,
+    game count).
 
     Each split task slices its byte range on game boundaries and parses
     every game once (read_splits over pgn.chunk_games), tagging it with
@@ -206,7 +207,7 @@ def _parse_chunked(
     rebases every id to (file_idx << 32) | (first + local): IDENTICAL
     to the ids of a sequential pgn.parse_file over each whole file, so
     chunking is invisible in output. `games` reads `parsed`; the caller
-    releases `parsed`."""
+    releases `parsed`. The third value is the parsed game count."""
     # ONE concurrent stat round over the import list, shared by the
     # adaptive-chunk sizing and the split planning (guide §5).
     sizes = stat_sizes(files)
@@ -235,7 +236,7 @@ def _parse_chunked(
         )
         + F.col("game_id").bitwiseAND(0xFFFFFFFF),
     )
-    return games, parsed
+    return games, parsed, sum(n_by_split.values())
 
 
 def parse_games_chunked(
@@ -475,17 +476,23 @@ def build_agg_entries(entries_df: DataFrame) -> DataFrame:
     )
 
 
-def replay_aggregate(games: DataFrame, eran: bool = False) -> DataFrame:
+def replay_aggregate(
+    games: DataFrame, eran: bool = False, n_games: int | None = None
+) -> DataFrame:
     """The one entry-table derivation: games → replay → raw aggregate
     (keyed by `eran` too when the retractions sidecar is kept).
 
     Replay parallelism must not be bound by file or chunk count (one
     giant PGN, or a small appended file, would otherwise replay on one
     core): games spread across cores before the python-side replay, the
-    import's hot path. Ids are assigned before this, so the repartition
-    cannot affect them."""
-    spark = games.sparkSession
-    spread = games.repartition(spark.sparkContext.defaultParallelism)
+    import's hot path. `n_games`, a count the caller already holds,
+    caps the spread at one game per task, so a small create or append
+    schedules no empty Python-worker tasks. Ids are assigned before
+    this, so the repartition cannot affect them."""
+    parts = games.sparkSession.sparkContext.defaultParallelism
+    if n_games is not None:
+        parts = max(1, min(parts, n_games))
+    spread = games.repartition(parts)
     return build_agg_entries(explode_positions(spread, include_eran=eran))
 
 
@@ -516,11 +523,12 @@ def _replay_and_write(
     retractions: bool,
     partitions: int | None,
     append: bool,
+    n_games: int,
     metrics: tuple | None = None,
 ) -> None:
     """Replay `games` once and write entries/ (and the retractions/
-    sidecar) from that one aggregate. `metrics` observes the entries
-    write.
+    sidecar) from that one aggregate. `n_games` caps the replay spread
+    (replay_aggregate); `metrics` observes the entries write.
 
     With the sidecar the aggregate is keyed by eran too and persisted,
     because it feeds two writes; its eran grain rolls up inside the
@@ -543,7 +551,7 @@ def _replay_and_write(
         else:
             _write_table(name, [new], path, partitions, metrics)
 
-    pre = replay_aggregate(games, eran=retractions)
+    pre = replay_aggregate(games, eran=retractions, n_games=n_games)
     if retractions:
         pre = pre.persist()
     put("entries", pre, metrics)
@@ -593,6 +601,7 @@ def write_database(
         retractions,
         partitions,
         append=False,
+        n_games=g_obs.get["games"],
         metrics=(
             e_obs,
             F.sum("cnt").alias("positions"),
@@ -636,7 +645,7 @@ def import_pgn(
     database migration, a capability the reference's header-only store
     never had. Default False matches the reference's posture (headers
     only; movetext exists only as exploded positions)."""
-    games, parsed = _parse_chunked(
+    games, parsed, _ = _parse_chunked(
         spark, files, chunk_bytes, 0, DataFrame.cache
     )
     try:
@@ -724,7 +733,7 @@ def append_pgn(
     prev_max = prev_games.agg(F.max(F.shiftright("game_id", 32))).first()[0]
     next_file_idx = int(prev_max) + 1 if prev_max is not None else 0
     # the cached parse feeds BOTH the stored-games append and the replay
-    games, parsed = _parse_chunked(
+    games, parsed, n_games = _parse_chunked(
         spark, files, chunk_bytes, next_file_idx, DataFrame.cache
     )
     # Match the database's fidelity mode: a store_moves database keeps
@@ -740,6 +749,7 @@ def append_pgn(
         os.path.isdir(f"{db_dir}/retractions"),
         partitions,
         append=True,
+        n_games=n_games,
     )
     parsed.unpersist()
     return {"db_dir": db_dir, "file_idx_base": next_file_idx}

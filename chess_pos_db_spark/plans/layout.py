@@ -15,7 +15,8 @@ tracked by a directory manifest. The Spark-native equivalents:
                     planning, spill, and open-file budgets are the
                     shuffle's problem, not ours;
 - manifest        → `_meta.json` sidecar with format name/version and
-                    the key/agg spec.
+                    the sort key; a versioned store's manifest adds
+                    the snapshot list and schema (see below).
 
 At 100 TB: range partitioning keeps each output file key-clustered so
 point-lookup joins prune partitions; `partitions` should be sized so
@@ -92,6 +93,25 @@ def write_sorted_run(
     observe node sits ABOVE the range exchange: the boundary-sampling
     job re-runs only the exchange's child, so it cannot count a row
     twice."""
+    _sorted_write(
+        df, path, key, partitions, mode, file_format, options, metrics
+    )
+    _write_manifest(path, key)
+
+
+def _sorted_write(
+    df: DataFrame,
+    path: str,
+    key: Sequence[str],
+    partitions: int | None,
+    mode: str = "overwrite",
+    file_format: str = "parquet",
+    options: dict | None = None,
+    metrics: tuple | None = None,
+) -> None:
+    """write_sorted_run's body without the manifest: range → sort →
+    observe above the exchange → write. Versioned-store commits use it
+    directly; their manifest lives at the store root, not in v{n}/."""
     out = range_partitioned(df, key, partitions).sortWithinPartitions(*key)
     if metrics:
         out = out.observe(*metrics)
@@ -99,7 +119,6 @@ def write_sorted_run(
     for k, v in (options or {}).items():
         writer = writer.option(k, v)
     writer.format(file_format).save(path)
-    _write_manifest(path, key)
 
 
 def combine_runs(
@@ -170,10 +189,18 @@ def _dump_manifest(
     reader would see empty/partial JSON. `filename` lets other manifest
     owners (plans/mv.py) share the pattern instead of re-implementing
     a weaker write."""
-    full = os.path.join(path, filename)
+    _atomic_write(
+        os.path.join(path, filename), json.dumps(manifest, default=str)
+    )
+
+
+def _atomic_write(full: str, text: str) -> None:
+    """Write `text` to `full` via a same-directory tmp + os.replace, so
+    a reader sees the old file or the new one, never a partial one.
+    Every manifest, cursor and sidecar JSON in this module lands here."""
     tmp = full + ".tmp"
     with open(tmp, "w") as f:
-        json.dump(manifest, f, default=str)
+        f.write(text)
     os.replace(tmp, full)
 
 
@@ -255,13 +282,7 @@ def write_zorder_run(
     its leading column. At 100 TB this is the layout for tables probed
     along two+ independent dimensions (the data-skipping strategy
     popularized by Delta/Databricks OPTIMIZE ZORDER)."""
-    z = zorder_column(df, cols, bits)
-    (
-        range_partitioned(df, [z], partitions)
-        .sortWithinPartitions(z)
-        .write.mode(mode)
-        .parquet(path)
-    )
+    _sorted_write(df, path, [zorder_column(df, cols, bits)], partitions, mode)
     _write_manifest(path, [f"zorder({', '.join(cols)})"])
 
 
@@ -389,21 +410,87 @@ def append_versioned(df: DataFrame, path: str, key: Sequence[str],
             "sort_key": list(key),
             "snapshots": [],
         }
-    snaps = manifest.setdefault("snapshots", [])
-    v = (max((s["id"] for s in snaps), default=0)) + 1
-    vdir = f"v{v}"
-    (
-        range_partitioned(df, key, partitions)
-        .sortWithinPartitions(*key)
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, vdir))
+    manifest.setdefault("snapshots", [])
+    return _commit_version(
+        path, manifest, df, key, partitions, {"supersedes": []}
     )
-    snaps.append({"id": v, "dirs": [vdir], "supersedes": []})
-    # latest write's schema: the empty-store read fallback (a delete
-    # that removes every row must still return a typed DataFrame)
-    manifest["schema"] = df.schema.json()
+
+
+def _commit_version(
+    path: str,
+    manifest: dict,
+    df: DataFrame,
+    key: Sequence[str],
+    partitions: int | None,
+    entry: dict,
+    schema=None,
+    break_kind: str | None = None,
+    metrics: tuple | None = None,
+) -> int:
+    """The one snapshot commit every versioned verb ends in: allocate
+    the next version id, write `df` as a sorted run on `key` into
+    v{id}/, append the snapshot entry ({"id", "dirs"} + `entry`) and
+    dump the manifest. The manifest dump is the single commit point: a
+    crash before it leaves an orphan v-dir invisible to every reader,
+    and a replay rewrites the same version id.
+
+    `schema` is the schema recorded for the empty-store read fallback
+    (default: `df`'s; a delete that removes every row must still return
+    a typed DataFrame). `break_kind` ("evolve" | "rekey") commits a
+    SCHEMA-BREAK version keyed on `key`: the entry records the key on
+    each side of the break, so a changelog export spanning several
+    breaks uses each era's own key (the top-level sort_key only ever
+    holds the latest), and `key` becomes the store's sort key.
+    `metrics` observes the written rows, as in write_sorted_run.
+    Returns the version id."""
+    v = max((s["id"] for s in manifest["snapshots"]), default=0) + 1
+    vdir = f"v{v}"
+    _sorted_write(
+        df, os.path.join(path, vdir), key, partitions, metrics=metrics
+    )
+    if break_kind is not None:
+        entry = {
+            **entry,
+            "schema_break": True,
+            "break_kind": break_kind,
+            "sort_key_before": list(manifest["sort_key"]),
+            "sort_key_after": list(key),
+        }
+        manifest["sort_key"] = list(key)
+    manifest["snapshots"].append({"id": v, "dirs": [vdir], **entry})
+    manifest["schema"] = (df.schema if schema is None else schema).json()
     _dump_manifest(path, manifest)
     return v
+
+
+def _touched_files(
+    path: str, rels: Sequence[str], matched: DataFrame, verb: str
+) -> tuple[set[str], int]:
+    """The live files holding `matched`'s rows, as paths relative to the
+    store, and the matched row count: one groupBy(input_file_name())
+    collect, bounded by file count. A matched file outside `rels`
+    means manifest and data directory disagree, which raises."""
+    from urllib.parse import unquote, urlparse
+
+    hits = (
+        matched.groupBy(F.input_file_name().alias("f"))
+        .agg(F.count("*").alias("n"))
+        .collect()
+    )
+    # input_file_name() yields percent-encoded file: URIs — decode
+    # them back to local paths, or a store under a path with spaces
+    # would flag every touched file as outside the manifest
+    touched = {
+        os.path.relpath(unquote(urlparse(r["f"]).path), os.path.abspath(path))
+        for r in hits
+    }
+    unknown = touched - set(rels)
+    if unknown:
+        raise ValueError(
+            f"{verb}: matched files outside the live snapshot set "
+            f"{sorted(unknown)} — manifest and data directory disagree"
+        )
+    return touched, sum(int(r["n"]) for r in hits)
 
 
 def compact_versioned(
@@ -415,29 +502,18 @@ def compact_versioned(
 ) -> int:
     """Aggregate-combining merge of every live version into ONE new
     version that supersedes them (the reference's `merge` command with
-    snapshot semantics). Old files stay for time travel."""
-    fns = {"sum": F.sum, "min": F.min, "max": F.max}
+    snapshot semantics, through combine_runs). Old files stay for time
+    travel."""
     manifest = read_manifest(path)
     if not manifest["snapshots"]:
         raise ValueError(f"compact_versioned: no snapshots at {path!r}")
     live = _live_snapshot_ids(manifest)
-    df = _read_dirs(spark, path, manifest, live)
-    aggs = [fns[how](c).alias(c) for c, how in agg_spec.items()]
-    merged = df.groupBy(*key).agg(*aggs)
-    v = (max(s["id"] for s in manifest["snapshots"])) + 1
-    vdir = f"v{v}"
-    (
-        range_partitioned(merged, key, partitions)
-        .sortWithinPartitions(*key)
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, vdir))
+    merged = combine_runs(
+        [_read_dirs(spark, path, manifest, live)], key, agg_spec
     )
-    manifest["snapshots"].append(
-        {"id": v, "dirs": [vdir], "supersedes": sorted(live)}
+    return _commit_version(
+        path, manifest, merged, key, partitions, {"supersedes": sorted(live)}
     )
-    manifest["schema"] = merged.schema.json()
-    _dump_manifest(path, manifest)
-    return v
 
 
 def delete_rows(
@@ -479,74 +555,34 @@ def delete_rows(
     a predicate matching nothing returns version=None and writes
     nothing.
     """
-    from urllib.parse import unquote, urlparse
-
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
     manifest = read_manifest(path)
     if not manifest["snapshots"]:
         raise ValueError(f"delete_rows: no snapshots at {path!r}")
     live = _live_snapshot_ids(manifest)
     rels = _snapshot_files(path, manifest, live)
-    if not rels:
-        return {
-            "version": None, "rows_deleted": 0,
-            "files_rewritten": 0, "files_total": 0,
-        }
-    src = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.normpath(os.path.join(path, r)) for r in rels]
-    )
-    hits = (
-        src.filter(pred)
-        .groupBy(F.input_file_name().alias("f"))
-        .agg(F.count("*").alias("n"))
-        .collect()
-    )
-    if not hits:
+    touched, rows_deleted = set(), 0
+    if rels:
+        src = _read_files(spark, path, rels)
+        touched, rows_deleted = _touched_files(
+            path, rels, src.filter(pred), "delete_rows"
+        )
+    if not touched:
         return {
             "version": None, "rows_deleted": 0,
             "files_rewritten": 0, "files_total": len(rels),
         }
-    # input_file_name() yields percent-encoded file: URIs — decode
-    # them back to local paths, or a store under a path with spaces
-    # would flag every touched file as outside the manifest
-    touched = {
-        os.path.relpath(unquote(urlparse(r["f"]).path), os.path.abspath(path))
-        for r in hits
-    }
-    unknown = touched - set(rels)
-    if unknown:
-        raise ValueError(
-            f"delete_rows: matched files outside the live snapshot set "
-            f"{sorted(unknown)} — manifest and data directory disagree"
-        )
-    rows_deleted = sum(int(r["n"]) for r in hits)
-    key = manifest["sort_key"]
-    keep = (
-        spark.read.option("mergeSchema", "true")
-        .parquet(*[os.path.normpath(os.path.join(path, r)) for r in sorted(touched)])
-        .filter(~F.coalesce(pred, F.lit(False)))
+    keep = _read_files(spark, path, sorted(touched)).filter(
+        ~F.coalesce(pred, F.lit(False))
     )
-    v = (max(s["id"] for s in manifest["snapshots"])) + 1
-    vdir = f"v{v}"
-    (
-        range_partitioned(keep, key, partitions)
-        .sortWithinPartitions(*key)
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, vdir))
+    v = _commit_version(
+        path, manifest, keep, manifest["sort_key"], partitions,
+        {"files": sorted(set(rels) - touched), "supersedes": sorted(live)},
+        # union schema of the LIVE set (not just the touched files): the
+        # empty-store fallback must still show columns only untouched
+        # files carry
+        schema=src.schema,
     )
-    manifest["snapshots"].append(
-        {
-            "id": v,
-            "dirs": [vdir],
-            "files": sorted(set(rels) - touched),
-            "supersedes": sorted(live),
-        }
-    )
-    # union schema of the LIVE set (not just the touched files): the
-    # empty-store fallback must still show columns only untouched
-    # files carry
-    manifest["schema"] = src.schema.json()
-    _dump_manifest(path, manifest)
     return {
         "version": v,
         "rows_deleted": rows_deleted,
@@ -604,8 +640,6 @@ def upsert_rows(
     what lets a store-to-store replica (streaming/jobs.
     store_apply_stream) keep folding a source that evolved.
     """
-    from urllib.parse import unquote, urlparse
-
     from pyspark.sql import Window
 
     manifest = read_manifest(path)
@@ -663,10 +697,9 @@ def upsert_rows(
     chg = chg.withColumn(op_col, guarded).localCheckpoint(eager=True)
 
     store_cols = None
+    touched, rows_removed, keep = set(), 0, None
     if rels:
-        src = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.normpath(os.path.join(path, r)) for r in rels]
-        )
+        src = _read_files(spark, path, rels)
         store_cols = src.columns
         unknown = set(chg.columns) - {op_col} - set(store_cols)
         if unknown:
@@ -694,42 +727,19 @@ def upsert_rows(
             "upsert_rows",
         )
         keys_df = chg.select(*key).distinct()
-        hits = (
-            src.join(F.broadcast(keys_df), on=list(key), how="left_semi")
-            .groupBy(F.input_file_name().alias("f"))
-            .agg(F.count("*").alias("n"))
-            .collect()
+        touched, rows_removed = _touched_files(
+            path,
+            rels,
+            src.join(F.broadcast(keys_df), on=list(key), how="left_semi"),
+            "upsert_rows",
         )
-        touched = {
-            os.path.relpath(
-                unquote(urlparse(r["f"]).path), os.path.abspath(path)
-            )
-            for r in hits
-        }
-        unknown_files = touched - set(rels)
-        if unknown_files:
-            raise ValueError(
-                f"upsert_rows: matched files outside the live snapshot "
-                f"set {sorted(unknown_files)} — manifest and data "
-                "directory disagree"
-            )
-        rows_removed = sum(int(r["n"]) for r in hits)
         if touched:
-            # align to the store schema: touched files can predate an
-            # additive evolution (other files carry columns these
-            # lack), and the batch itself may be evolving the schema —
-            # the rewritten rows answer typed NULL for columns their
-            # source files never had, exactly as the by-reference read
-            # would have
-            keep = spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.normpath(os.path.join(path, r)) for r in sorted(touched)]
-            )
-            have = dict(keep.dtypes)
-            src_types = dict(src.dtypes)
-            for c in store_cols:
-                if c not in have:
-                    keep = keep.withColumn(c, F.lit(None).cast(src_types[c]))
-            # the USING-join form moves the join columns to the FRONT
+            # _restrict_to_files aligns to the store schema: touched
+            # files can predate an additive evolution, and the batch
+            # itself may be evolving the schema — the rewritten rows
+            # answer typed NULL for columns their source files never
+            # had, exactly as the by-reference read would have.
+            # The USING-join form moves the join columns to the FRONT
             # of the output even for semi/anti joins, so re-select the
             # store's column order after it — otherwise an upsert on a
             # store whose key is not its leading column(s) (any
@@ -737,15 +747,9 @@ def upsert_rows(
             # schema. Masked before adaptive run sizing: multi-file
             # stores kept untouched files in the old order and the
             # mergeSchema read hid the drift.
-            keep = keep.select(*store_cols).join(
+            keep = _restrict_to_files(spark, path, src, touched).join(
                 F.broadcast(keys_df), on=list(key), how="left_anti"
             ).select(*store_cols)
-        else:
-            keep = None
-    else:
-        touched = set()
-        rows_removed = 0
-        keep = None
 
     adds = chg.filter(F.col(op_col).isin("I", "U")).drop(op_col)
     if adds.isEmpty() and not touched:
@@ -763,28 +767,12 @@ def upsert_rows(
                     c, F.lit(None).cast(dict(src.dtypes)[c])
                 )
         adds = adds.select(*store_cols)
-        out = adds if keep is None else keep.unionByName(adds)
-    else:
-        out = adds
+    out = adds if keep is None else keep.unionByName(adds)
     rows_upserted = adds.count()
-    v = (max(s["id"] for s in manifest["snapshots"])) + 1
-    vdir = f"v{v}"
-    (
-        range_partitioned(out, key, partitions)
-        .sortWithinPartitions(*key)
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, vdir))
+    v = _commit_version(
+        path, manifest, out, key, partitions,
+        {"files": sorted(set(rels) - touched), "supersedes": sorted(live)},
     )
-    manifest["snapshots"].append(
-        {
-            "id": v,
-            "dirs": [vdir],
-            "files": sorted(set(rels) - touched),
-            "supersedes": sorted(live),
-        }
-    )
-    manifest["schema"] = out.schema.json()
-    _dump_manifest(path, manifest)
     return {
         "version": v,
         "rows_removed": rows_removed,
@@ -914,46 +902,19 @@ def evolve_schema(
           if c not in set(drops)]
     )
     new_key = [renames.get(k, k) for k in key]
-
-    v = max(s["id"] for s in manifest["snapshots"]) + 1
-    vdir = f"v{v}"
-    # row count observed during the rewrite job itself — no second
-    # scan. The observe node sits ABOVE the range exchange: below it,
-    # repartitionByRange's boundary-sampling pass would run the child a
-    # second time and double the count.
+    # row count observed during the rewrite job itself — no second scan
     obs = Observation()
-    (
-        range_partitioned(df, new_key, partitions)
-        .sortWithinPartitions(*new_key)
-        .observe(obs, F.count(F.lit(1)).alias("rows"))
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, vdir))
+    v = _commit_version(
+        path, manifest, df, new_key, partitions,
+        {"supersedes": sorted(live)}, break_kind="evolve",
+        metrics=(obs, F.count(F.lit(1)).alias("rows")),
     )
-    n_rows = obs.get["rows"]
-    manifest["snapshots"].append(
-        {
-            "id": v,
-            "dirs": [vdir],
-            "supersedes": sorted(live),
-            "schema_break": True,
-            "break_kind": "evolve",
-            # the key on each side of this break, recorded per-version
-            # so a changelog export spanning multiple breaks uses each
-            # era's own key (the manifest's top-level sort_key only
-            # ever holds the latest)
-            "sort_key_before": list(key),
-            "sort_key_after": new_key,
-        }
-    )
-    manifest["sort_key"] = new_key
-    manifest["schema"] = df.schema.json()
-    _dump_manifest(path, manifest)
     return {
         "version": v,
         "renamed": renames,
         "dropped": drops,
         "retyped": retypes,
-        "rows": n_rows,
+        "rows": obs.get["rows"],
     }
 
 
@@ -1037,36 +998,17 @@ def rekey_store(
             "a wider key"
         )
 
-    v = max(s["id"] for s in manifest["snapshots"]) + 1
-    vdir = f"v{v}"
     obs = Observation()
-    (
-        range_partitioned(df, new_key, partitions)
-        .sortWithinPartitions(*new_key)
-        .observe(obs, F.count(F.lit(1)).alias("rows"))
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, vdir))
+    v = _commit_version(
+        path, manifest, df, new_key, partitions,
+        {"supersedes": sorted(live)}, break_kind="rekey",
+        metrics=(obs, F.count(F.lit(1)).alias("rows")),
     )
-    n_rows = int(obs.get["rows"])
-    manifest["snapshots"].append(
-        {
-            "id": v,
-            "dirs": [vdir],
-            "supersedes": sorted(live),
-            "schema_break": True,
-            "break_kind": "rekey",
-            "sort_key_before": old_key,
-            "sort_key_after": new_key,
-        }
-    )
-    manifest["sort_key"] = new_key
-    manifest["schema"] = df.schema.json()
-    _dump_manifest(path, manifest)
     return {
         "version": v,
         "old_key": old_key,
         "new_key": new_key,
-        "rows": n_rows,
+        "rows": int(obs.get["rows"]),
     }
 
 
@@ -1112,10 +1054,16 @@ def _read_dirs(spark, path, manifest, ids) -> DataFrame:
         return spark.createDataFrame(
             [], StructType.fromJson(json.loads(manifest["schema"]))
         )
-    # mergeSchema: snapshots written before a column existed read as
-    # NULL for it — additive schema evolution without rewriting history
-    # (the Iceberg/Delta add-column semantic; footer union is per-file
-    # metadata work, not data). Rename/retype still require a rewrite.
+    return _read_files(spark, path, rels)
+
+
+def _read_files(spark: SparkSession, path: str, rels) -> DataFrame:
+    """The store's parquet files `rels` (relative to `path`) as one
+    scan. mergeSchema: snapshots written before a column existed read
+    as NULL for it — additive schema evolution without rewriting
+    history (the Iceberg/Delta add-column semantic; footer union is
+    per-file metadata work, not data). Rename/retype still require a
+    rewrite."""
     return spark.read.option("mergeSchema", "true").parquet(
         *[os.path.normpath(os.path.join(path, r)) for r in rels]
     )
@@ -1438,10 +1386,7 @@ def expire_snapshots(path: str, before: int, force: bool = False) -> list[str]:
                         gap_from = min(gap_from, prior[0])
                 cursor["last_exported"] = floor
                 cursor["forced_gap"] = [gap_from, floor]
-                tmp = cursor_file + ".tmp"
-                with open(tmp, "w") as f:
-                    json.dump(cursor, f)
-                os.replace(tmp, cursor_file)
+                _atomic_write(cursor_file, json.dumps(cursor))
         except OSError:
             pass
     # advance each branch's OWN time-travel floor (after the commit,
@@ -1473,9 +1418,7 @@ def _restrict_to_files(
     empty LocalRelation — filter(false) is optimized away, no scan."""
     if not rels:
         return full.filter(F.lit(False))
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.normpath(os.path.join(path, r)) for r in sorted(rels)]
-    )
+    df = _read_files(spark, path, sorted(rels))
     have = dict(df.dtypes)
     for c, t in full.dtypes:
         if c not in have:
@@ -1724,33 +1667,19 @@ def export_changes(
             if is_rebase
             else era_sort_key(manifest, v, key)
         )
-        if is_rebase:
-            # a non-additive evolution (evolve_schema): the diff across
-            # the break is not well-defined (snapshot_diff refuses), so
-            # the version exports as a REBASE — the full new-schema
-            # snapshot in 'I' rows plus a marker; replay_changelog
-            # re-seeds its fold here, and the sort_key may itself have
-            # been renamed, so the key switches to the one the break
-            # version recorded (per-era, survives multiple breaks)
+        if is_rebase or v == base or v == 1:
+            # the full snapshot as 'I' rows: version 1 has no
+            # predecessor, `base` is the initial snapshot base, and a
+            # non-additive evolution (evolve_schema) exports as a
+            # REBASE — the diff across the break is not well-defined
+            # (snapshot_diff refuses), so the full new-schema snapshot
+            # goes out plus a marker; replay_changelog re-seeds its
+            # fold there, under the key the break version recorded
+            # (the sort_key may itself have been renamed; per-era,
+            # survives multiple breaks)
             snap = read_snapshot(spark, path, v)
             payload = [c for c in snap.columns if c not in ekey]
-            out = snap.select(
-                *ekey, F.lit("I").alias("op"), *payload
-            )
-        elif v == base:
-            snap = read_snapshot(spark, path, v)
-            payload = [c for c in snap.columns if c not in ekey]
-            out = snap.select(
-                *ekey, F.lit("I").alias("op"), *payload
-            )
-        elif v == 1:
-            # version 1 has no predecessor: its entire content exports
-            # as inserts
-            snap = read_snapshot(spark, path, 1)
-            payload = [c for c in snap.columns if c not in ekey]
-            out = snap.select(
-                *ekey, F.lit("I").alias("op"), *payload
-            )
+            out = snap.select(*ekey, F.lit("I").alias("op"), *payload)
         else:
             diff = snapshot_diff(spark, path, v - 1, v, ekey, scan=scan)
             op = (
@@ -1769,39 +1698,28 @@ def export_changes(
         # change so pre-sidecar consumers and the bootstrap read stay
         # current (atomic replace, like the cursor).
         schema_json = out.schema.json()
-        tmp = os.path.join(vdir, "_schema.json.tmp")
-        with open(tmp, "w") as f:
-            f.write(schema_json)
-        os.replace(tmp, os.path.join(vdir, "_schema.json"))
+        _atomic_write(os.path.join(vdir, "_schema.json"), schema_json)
         if is_rebase:
             # marker for fold consumers: this version is a FULL
             # re-seed (truncate-and-insert), not an incremental delta
             # (written after the data, like the schema sidecar, so a
             # crash replay rewrites both)
-            tmp = os.path.join(vdir, "_rebase.json.tmp")
-            with open(tmp, "w") as f:
-                json.dump(
-                    {"reason": "schema_break", "key": list(ekey)}, f
-                )
-            os.replace(tmp, os.path.join(vdir, "_rebase.json"))
+            _atomic_write(
+                os.path.join(vdir, "_rebase.json"),
+                json.dumps({"reason": "schema_break", "key": list(ekey)}),
+            )
         schema_file = os.path.join(out_dir, "_schema.json")
         current = None
         if os.path.isfile(schema_file):
             with open(schema_file) as f:
                 current = f.read()
         if current != schema_json:
-            tmp = schema_file + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(schema_json)
-            os.replace(tmp, schema_file)
+            _atomic_write(schema_file, schema_json)
         # advance last_exported IN the cursor dict — a forced-vacuum
         # gap marker (expire_snapshots force=True) must survive the
         # export resuming, or read_changes loses the real story
         cursor["last_exported"] = v
-        tmp = cursor_file + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(cursor, f)
-        os.replace(tmp, cursor_file)
+        _atomic_write(cursor_file, json.dumps(cursor))
         exported.append(v)
     # register/advance this export's cursor in the store manifest so
     # expire_snapshots can see which history a changelog still needs
@@ -1988,15 +1906,7 @@ def compact_changelog(
     folded = replay_changelog(spark, out_dir, key, to_version=v)
     # the fold key may have been renamed by a schema-break rebase at or
     # below V — recover it the same way replay_changelog did
-    fold_key = list(key)
-    for w in range(v, 0, -1):
-        marker = os.path.join(
-            out_dir, "changes", f"to_version={w}", "_rebase.json"
-        )
-        if os.path.isfile(marker):
-            with open(marker) as f:
-                fold_key = list(json.load(f).get("key", fold_key))
-            break
+    fold_key, _ = _latest_rebase(out_dir, key, v, 1)
     payload = [c for c in folded.columns if c not in fold_key]
     base = folded.select(*fold_key, F.lit("I").alias("op"), *payload)
     vdir = os.path.join(out_dir, "changes", f"to_version={v}")
@@ -2022,25 +1932,18 @@ def compact_changelog(
     obs = Observation()
     base.observe(obs, F.count(F.lit(1)).alias("rows")).write.parquet(tmpdir)
     n_rows = obs.get["rows"]
-    schema_json = base.schema.json()
-    tmp = os.path.join(tmpdir, "_schema.json.tmp")
-    with open(tmp, "w") as f:
-        f.write(schema_json)
-    os.replace(tmp, os.path.join(tmpdir, "_schema.json"))
-    tmp = os.path.join(tmpdir, "_rebase.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"reason": "log_compaction", "key": fold_key}, f)
-    os.replace(tmp, os.path.join(tmpdir, "_rebase.json"))
+    _atomic_write(os.path.join(tmpdir, "_schema.json"), base.schema.json())
+    _atomic_write(
+        os.path.join(tmpdir, "_rebase.json"),
+        json.dumps({"reason": "log_compaction", "key": fold_key}),
+    )
     shutil.rmtree(olddir, ignore_errors=True)
     if os.path.isdir(vdir):
         os.rename(vdir, olddir)
     os.rename(tmpdir, vdir)
     shutil.rmtree(olddir, ignore_errors=True)
     cursor["compacted_to"] = max(int(cursor.get("compacted_to") or 0), v)
-    tmp = cursor_file + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(cursor, f)
-    os.replace(tmp, cursor_file)
+    _atomic_write(cursor_file, json.dumps(cursor))
     removed = 0
     for w in range(1, v):
         d = os.path.join(out_dir, "changes", f"to_version={w}")
@@ -2048,6 +1951,22 @@ def compact_changelog(
             shutil.rmtree(d, ignore_errors=True)
             removed += 1
     return {"base_version": v, "dirs_removed": removed, "rows": int(n_rows)}
+
+
+def _latest_rebase(
+    out_dir: str, key: Sequence[str], last: int, first: int
+) -> tuple[list[str], int | None]:
+    """The newest rebase-marked version in `first..last` and the fold
+    key its ``_rebase.json`` recorded (a schema break may have renamed
+    the key): ``(key, version)``, or ``(list(key), None)`` without one."""
+    for v in range(last, first - 1, -1):
+        marker = os.path.join(
+            out_dir, "changes", f"to_version={v}", "_rebase.json"
+        )
+        if os.path.isfile(marker):
+            with open(marker) as f:
+                return list(json.load(f).get("key", key)), v
+    return list(key), None
 
 
 # replay_changelog cuts its fold lineage every this-many merge_changes
@@ -2118,16 +2037,8 @@ def replay_changelog(
             "compacted base) — the log cannot answer pre-anchor "
             "state; read the store's own snapshot instead"
         )
-    fold_key = list(key)
-    for v in range(last, start - 1, -1):
-        marker = os.path.join(
-            out_dir, "changes", f"to_version={v}", "_rebase.json"
-        )
-        if os.path.isfile(marker):
-            with open(marker) as f:
-                fold_key = list(json.load(f).get("key", fold_key))
-            start = v
-            break
+    fold_key, rebase = _latest_rebase(out_dir, key, last, start)
+    start = rebase or start
     from pyspark.sql.types import StructType
 
     schema_file = os.path.join(

@@ -113,7 +113,6 @@ def store_delete_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             F.length("text").cast("long").alias("text_len"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -222,7 +221,7 @@ def store_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         "change",
         F.length("old.text").cast("long").alias("old_len"),
         F.length("new.text").cast("long").alias("new_len"),
-    ).orderBy("doc_id")
+    )
 
 
 @register(
@@ -268,7 +267,6 @@ def store_vacuumed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             F.length("text").cast("long").alias("text_len"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -319,7 +317,7 @@ def store_cdc_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     log = spark.read.parquet(os.path.join(out, "changes"))
     return log.select(
         F.col("to_version").cast("int").alias("to_version"), "doc_id", "op"
-    ).orderBy("to_version", "doc_id")
+    )
 
 
 @register(
@@ -356,7 +354,7 @@ def store_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.length("text").cast("long").alias("text_len"),
         )
 
-    return as_of(1).unionByName(as_of(2)).orderBy("as_of", "doc_id")
+    return as_of(1).unionByName(as_of(2))
 
 
 @register(
@@ -406,7 +404,7 @@ def store_changelog_replayed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         F.length("text").cast("long").alias("text_len"),
-    ).orderBy("doc_id")
+    )
 
 
 @register(
@@ -450,7 +448,6 @@ def store_row_history(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("to_version").cast("long").alias("last_version"),
             F.max_by("op", "to_version").alias("last_op"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -499,7 +496,6 @@ def store_schema_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.length("text").cast("long").alias("text_len"),
             "lang",
         )
-        .orderBy("doc_id")
     )
 
 
@@ -536,7 +532,6 @@ def store_tagged_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             F.length("text").cast("long").alias("text_len"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -615,7 +610,7 @@ def store_replicated_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.length("text").cast("long").alias("text_len"),
         "lang",
-    ).orderBy("doc_id")
+    )
 
 
 # the upsert lifecycle's slices: disjoint U/D (a key carrying both
@@ -690,7 +685,6 @@ def store_upsert_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             F.length("text").cast("long").alias("text_len"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -803,7 +797,7 @@ def store_rebased_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         F.length("text").cast("long").alias("text_len"),
-    ).orderBy("doc_id")
+    )
 
 
 @register(
@@ -922,7 +916,7 @@ def store_schema_renamed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _ensure_lifecycle_store(spark, sf_dir, "renamed", build)
     out = os.path.join(path, "_cdc_export")
-    return layout.replay_changelog(spark, out, ["doc_id"]).orderBy("doc_id")
+    return layout.replay_changelog(spark, out, ["doc_id"])
 
 
 @register(
@@ -975,7 +969,6 @@ def store_compacted_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             F.length("text").cast("long").alias("text_len"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1026,7 +1019,6 @@ def store_changelog_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             F.length("text").cast("long").alias("text_len"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1109,7 +1101,6 @@ def store_multi_era_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         era("pre", "doc_id", 2)
         .unionAll(era("mid", "id", 4))
         .unionAll(era("head", "doc_key", None))
-        .orderBy("era", "key_id")
     )
 
 
@@ -1171,7 +1162,6 @@ def store_rekeyed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.length("text").cast("long").alias("text_len"),
         )
-        .orderBy("source", "doc_id")
     )
 
 
@@ -1253,5 +1243,4 @@ def store_branch_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", "source",
             F.length("text").cast("long").alias("text_len"),
         )
-        .orderBy("doc_id")
     )

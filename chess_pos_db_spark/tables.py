@@ -71,10 +71,15 @@ def _ship_package(spark: SparkSession) -> None:
 
 # Split-count probe cache for spread_small_scan: the probe forces an
 # analyzed-plan→RDD translation on the driver, so pay it once per
-# (session, input-file-set) instead of on every plan build. Valid
-# because the split count is a pure function of the file set and
-# session-fixed confs (maxPartitionBytes / openCostInBytes /
-# defaultParallelism); keyed on applicationId so new sessions re-probe.
+# (session, input-file-set, split-sizing confs) instead of on every
+# plan build. Valid because the split count is a pure function of the
+# file set, maxPartitionBytes, openCostInBytes and defaultParallelism;
+# the two confs are session-mutable, so they are part of the key, and
+# applicationId makes new sessions re-probe.
+_SPLIT_CONFS = (
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes",
+)
 _SPREAD_PROBE: dict[tuple, int] = {}
 
 
@@ -100,7 +105,11 @@ def spread_small_scan(
     LEAF scans: probing a composite plan would execute its upstream."""
     par = spark.sparkContext.defaultParallelism
     files = tuple(df.inputFiles())
-    cache_key = (spark.sparkContext.applicationId, files)
+    cache_key = (
+        spark.sparkContext.applicationId,
+        files,
+        *(spark.conf.get(c) for c in _SPLIT_CONFS),
+    )
     n = _SPREAD_PROBE.get(cache_key)
     if n is None:
         n = df.rdd.getNumPartitions()

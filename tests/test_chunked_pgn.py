@@ -204,13 +204,13 @@ def test_chunk_parse_has_no_exchange(spark, tmp_path):
     plan has no shuffle below its MapInPandas."""
     p = tmp_path / "big.pgn"
     p.write_text(_corpus())
-    games, parsed = importer._parse_chunked(
+    games, parsed, n_games = importer._parse_chunked(
         spark, [(str(p), "human")], 512, 0, lambda df: df
     )
     plan = parsed._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan, plan
     assert "Exchange" not in plan, plan
-    assert games.count() == 40
+    assert games.count() == n_games == 40
     skipped = games.filter(games["result"].isNull()).count()
     assert skipped == _corpus().count('Result "*"')
 

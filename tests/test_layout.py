@@ -2843,3 +2843,100 @@ def test_adaptive_run_sizing(spark, entries, tmp_path):
     assert (
         spark.read.parquet(ada).count() == spark.read.parquet(exp).count()
     )
+
+
+def test_snapshot_verbs_write_exact_manifest(spark, tmp_path):
+    """Manifest shape of every snapshot verb, pinned on one store: each
+    commit appends exactly this entry dict and records exactly this
+    top-level sort_key and schema; earlier entries never change, and no
+    version dir gets a _meta.json of its own."""
+    import json
+    import os
+
+    from pyspark.sql import types as T
+
+    def schema(*cols):
+        return T.StructType(
+            [T.StructField(c, typ, True) for c, typ in cols]
+        ).json()
+
+    k, key, cnt, tag = (
+        ("k", T.LongType()), ("key", T.LongType()),
+        ("cnt", T.LongType()), ("tag", T.StringType()),
+    )
+    path = str(tmp_path / "store")
+    want: list[dict] = []
+
+    def check(entry, sort_key, sch):
+        want.append(entry)
+        m = layout.read_manifest(path)
+        assert m["snapshots"] == want
+        assert (m["format"], m["version"]) == (layout.FORMAT_NAME, 1)
+        assert m["sort_key"] == sort_key
+        assert m["schema"] == sch
+        assert not os.path.exists(
+            os.path.join(path, entry["dirs"][0], layout.MANIFEST_NAME)
+        )
+
+    def rows(data):
+        return spark.createDataFrame(data, "k long, cnt long")
+
+    layout.append_versioned(rows([(1, 1), (2, 1)]), path, ["k"], partitions=1)
+    check({"id": 1, "dirs": ["v1"], "supersedes": []}, ["k"], schema(k, cnt))
+    layout.append_versioned(rows([(2, 1), (3, 1)]), path, ["k"], partitions=1)
+    check({"id": 2, "dirs": ["v2"], "supersedes": []}, ["k"], schema(k, cnt))
+
+    layout.compact_versioned(spark, path, ["k"], {"cnt": "sum"}, partitions=1)
+    check(
+        {"id": 3, "dirs": ["v3"], "supersedes": [1, 2]}, ["k"],
+        schema(k, cnt),
+    )
+
+    layout.delete_rows(spark, path, "k = 1", partitions=1)
+    check(
+        {"id": 4, "dirs": ["v4"], "files": [], "supersedes": [3]}, ["k"],
+        schema(k, cnt),
+    )
+
+    # an insert of a new key touches no file: v4's one file carries
+    # into v5 by reference, and the batch adds the `tag` column
+    (v4_file,) = [
+        os.path.join("v4", f)
+        for f in os.listdir(os.path.join(path, "v4"))
+        if f.endswith(".parquet")
+    ]
+    layout.upsert_rows(
+        spark, path,
+        spark.createDataFrame(
+            [(9, 5, "x", "I")], "k long, cnt long, tag string, op string"
+        ),
+        partitions=1, allow_new_columns=True,
+    )
+    check(
+        {"id": 5, "dirs": ["v5"], "files": [v4_file], "supersedes": [4]},
+        ["k"], schema(k, cnt, tag),
+    )
+
+    layout.evolve_schema(spark, path, renames={"k": "key"}, partitions=1)
+    check(
+        {
+            "id": 6, "dirs": ["v6"], "supersedes": [5],
+            "schema_break": True, "break_kind": "evolve",
+            "sort_key_before": ["k"], "sort_key_after": ["key"],
+        },
+        ["key"], schema(key, cnt, tag),
+    )
+
+    layout.rekey_store(spark, path, ["cnt", "key"], partitions=1)
+    check(
+        {
+            "id": 7, "dirs": ["v7"], "supersedes": [6],
+            "schema_break": True, "break_kind": "rekey",
+            "sort_key_before": ["key"], "sort_key_after": ["cnt", "key"],
+        },
+        ["cnt", "key"], schema(key, cnt, tag),
+    )
+    with open(os.path.join(path, layout.MANIFEST_NAME)) as f:
+        assert set(json.load(f)) == {
+            "format", "version", "sort_key", "snapshots", "schema"
+        }

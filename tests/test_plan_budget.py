@@ -58,7 +58,7 @@ SHUFFLE_BUDGET = {
     # round-8 delete lifecycle (query-path budgets: a pending delete
     # may not add shuffles over the non-delete twin — tombstone and
     # top-2 masks are candidate-sized broadcast anti-joins)
-    "store_delete_rows": 1,  # presentation ORDER BY's range exchange
+    "store_delete_rows": 0,  # snapshot read, no exchange
     "search_bm25_deleted": 1,  # pruned postings -> doclen join
     "dedup_lsh_index_delete": 2,  # identical to dedup_lsh_index_probe
     "similarity_ivf_deleted": 0,  # identical to similarity_ivf_layout
@@ -69,9 +69,9 @@ SHUFFLE_BUDGET = {
     "dedup_lsh_index_compacted": 2,  # identical to dedup_lsh_index_probe
     "similarity_ivf_maintained": 0,  # identical to similarity_ivf_layout
     "agg_view_retracted": 1,  # presentation ORDER BY over the |grain| view
-    "store_snapshot_diff": 3,  # full-outer SMJ (2) + presentation ORDER BY
-    "store_vacuumed": 1,  # identical read shape to store_delete_rows
-    "store_cdc_export": 1,  # log read + presentation ORDER BY
+    "store_snapshot_diff": 2,  # full-outer SMJ (2)
+    "store_vacuumed": 0,  # identical read shape to store_delete_rows
+    "store_cdc_export": 0,  # log read
 }
 
 

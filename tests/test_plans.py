@@ -551,6 +551,39 @@ def test_spread_small_scan_probes_fileless_frames_each_time(spark):
     assert spread_small_scan(spark, narrow, "id") is not narrow
 
 
+def test_spread_small_scan_reprobes_after_split_conf_change(spark, tmp_path):
+    """The split-count cache key includes maxPartitionBytes and
+    openCostInBytes: changing either mid-session re-probes the same
+    leaf scan instead of reusing a count the old setting produced. A
+    one-file scan is one split under a large maxPartitionBytes, so it
+    is spread; under a maxPartitionBytes of 1/(2 x parallelism) of the
+    file it is 2 x parallelism splits, and is returned as is."""
+    import os
+
+    from chess_pos_db_spark.tables import spread_small_scan
+
+    par = spark.sparkContext.defaultParallelism
+    if par < 2:
+        pytest.skip("needs defaultParallelism >= 2")
+    path = str(tmp_path / "leaf")
+    spark.range(0, 1 << 16, 1, 1).write.parquet(path)
+    (part,) = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    size = os.path.getsize(os.path.join(path, part))
+    conf = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, str(1 << 30))
+        df = spark.read.parquet(path)
+        assert df.rdd.getNumPartitions() == 1
+        assert spread_small_scan(spark, df, "id") is not df
+        spark.conf.set(conf, str(max(1, size // (2 * par))))
+        df = spark.read.parquet(path)
+        assert df.rdd.getNumPartitions() >= par
+        assert spread_small_scan(spark, df, "id") is df
+    finally:
+        spark.conf.set(conf, old)
+
+
 def test_salted_agg_two_phase(spark, sf_dir):
     """Skew defense: the salted aggregation must plan BOTH phases as
     hash aggregates over different keys — (key, salt) then (key) — so

@@ -416,40 +416,49 @@ def test_tcp_bad_encoding_gets_error_response(spark, tmp_path):
         server.shutdown()
 
 
-def test_tcp_non_object_json_gets_error_and_connection_survives(spark):
-    """A valid-JSON line that is not an object ('[1,2]', '"x"', '3')
-    must get an ok:false response and leave the connection usable —
+def test_tcp_and_console_answer_lines_identically(engine_db):
+    """Both front ends run one line step: the same input lines get the
+    same response lines, and 'exit' stops both (the line after it is
+    never answered; the TCP server closes the connection). Bad JSON and
+    valid JSON that is not an object ('[1,2]', '"exit"', '3') get an
+    ok:false response and leave the connection or loop answering —
     the naked .get('command') used to AttributeError BEFORE the
-    engine's error guard, closing the socket with no reply (and the
-    console loop would die entirely)."""
+    engine's error guard, closing the socket with no reply."""
     import io
+    import json
     import socket
 
-    from chess_pos_db_spark.app.server import Engine, console_loop, serve_tcp
+    lines = [
+        "{bad",
+        "[1,2]",
+        '"exit"',
+        "3",
+        '{"command": "nope"}',
+        '{"command": "stats"}',
+        '{"command": "exit"}',
+        '{"command": "stats"}',
+    ]
+    out = io.StringIO()
+    server.console_loop(engine_db, io.StringIO("\n".join(lines) + "\n"), out)
+    console = out.getvalue().splitlines()
 
-    eng = Engine(spark)
-    server, thread, port = serve_tcp(eng)
+    srv, thread, port = server.serve_tcp(engine_db)
     try:
         with socket.create_connection(("127.0.0.1", port)) as sock:
             f = sock.makefile("rwb")
-            for payload in (b"[1,2,3]\n", b'"exit"\n', b"3\n"):
-                f.write(payload)
-                f.flush()
-                resp = f.readline().decode("utf-8")
-                assert '"ok": false' in resp and "JSON object" in resp
-            # the connection still answers real commands afterwards
-            f.write(b'{"command": "stats"}\n')
+            f.write(("\n".join(lines) + "\n").encode("utf-8"))
             f.flush()
-            resp = f.readline().decode("utf-8")
-            assert '"ok": false' in resp and "no database open" in resp
+            tcp = [raw.decode("utf-8").rstrip("\n") for raw in f]
     finally:
-        server.shutdown()
+        srv.shutdown()
 
-    out = io.StringIO()
-    console_loop(eng, io.StringIO('[1,2]\n{"command": "nope"}\n'), out)
-    lines = out.getvalue().strip().splitlines()
-    assert len(lines) == 2  # loop survived the non-object line
-    assert "JSON object" in lines[0] and "unknown command" in lines[1]
+    assert tcp == console
+    got = [json.loads(r) for r in console]
+    assert [r["ok"] for r in got] == [False] * 5 + [True]
+    assert "bad json" in got[0]["error"]
+    assert all("JSON object" in r["error"] for r in got[1:4])
+    assert "unknown command" in got[4]["error"]
+    assert "games" in got[5]["stats"]
 
 
 def test_sql_nonfinite_floats_stay_valid_json(engine_db):

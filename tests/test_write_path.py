@@ -145,3 +145,28 @@ def test_entry_tables_are_pos_key_runs(spark, tmp_path):
         for t in ("entries", "retractions"):
             key = layout.read_manifest(f"{db}/{t}")["sort_key"]
             assert key == ["pos_key"], (verb, t, key)
+
+
+def test_one_game_append_replays_in_one_partition(
+    spark, tmp_path, monkeypatch
+):
+    """The replay spread is capped by the game count append already
+    holds from its parse: a 1-game append replays in one partition, not
+    defaultParallelism mostly empty Python-worker tasks."""
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("needs defaultParallelism >= 2")
+    db = _import(spark, tmp_path, "db", retractions=False)
+    one = tmp_path / "one.pgn"
+    one.write_text(PGN_TEXT.split("\n\n[")[0] + "\n")
+    seen = []
+    real = importer.replay_aggregate
+
+    def spy(*args, **kwargs):
+        seen.append(real(*args, **kwargs))
+        return seen[-1]
+
+    monkeypatch.setattr(importer, "replay_aggregate", spy)
+    importer.append_pgn(spark, [(str(one), "engine")], db)
+    (agg,) = seen
+    plan = agg._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange SinglePartition, REPARTITION_BY_NUM" in plan, plan
