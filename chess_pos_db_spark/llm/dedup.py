@@ -655,7 +655,7 @@ def _contraction_fixpoint(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
         .localCheckpoint()
     )
 
-    def _fingerprint(e: DataFrame):
+    def _edge_checksum(e: DataFrame):
         # order-insensitive exact-enough convergence probe: count plus a
         # 64-bit XOR content checksum (overflow-free under ANSI mode;
         # edges are distinct so XOR never self-cancels a state change) —
@@ -664,10 +664,10 @@ def _contraction_fixpoint(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
             e.agg(F.count("*"), F.bit_xor(F.xxhash64("u", "v"))).head()
         )
 
-    fp = _fingerprint(edges)
+    fp = _edge_checksum(edges)
     while True:
         edges = _small_star(_large_star(edges)).localCheckpoint()
-        nfp = _fingerprint(edges)
+        nfp = _edge_checksum(edges)
         if nfp == fp:
             break
         fp = nfp
@@ -1252,7 +1252,8 @@ def embedding_lsh_candidates(
     Signature stage (round-14, guide §4.2): the L·b plane dots per row
     were interpreted zip_with+aggregate folds (HOFs are not codegen'd)
     — measured 2.77 s noop at sf0.1. Now ONE float64 (n × d) @ (d ×
-    L·b) numpy matmul per Arrow batch with the bits packed vectorized:
+    L·b) numpy matmul per Arrow batch with the bits packed vectorized
+    (similarity._sign_lsh_kernel, shared with sign_lsh_bucketed):
     0.22 s (12.8×), bucket-for-bucket identical (subtract-checked both
     ways at sf0.1; tools/ab_emb_lsh.py keeps the losing JVM variant).
     The round-to-6dp-before-sign guard absorbs fold-order ulp
@@ -1260,41 +1261,26 @@ def embedding_lsh_candidates(
     the same discipline that already pins Spark against DuckDB's
     unordered SUM. Only (vec_id, embedding) crosses the Python
     boundary (explicit select, §4.1)."""
-    import numpy as np
+    from .similarity import _sign_lsh_kernel
 
-    from .similarity import _N_PLANES, _embedding_matrix, _plane
-
-    b_planes = n_planes if n_planes is not None else _N_PLANES
-    planes_mat = np.array(
-        [
-            _plane(tbl * b_planes + p)
-            for tbl in range(n_tables)
-            for p in range(b_planes)
-        ],
-        dtype=np.float64,
-    ).T  # (dims, n_tables*b_planes)
+    kernel = _sign_lsh_kernel(range(n_tables), n_planes)
     id_type = dict(emb.dtypes)["vec_id"]
 
     def _sig_batches(batches):
         import numpy as np
         import pyarrow as pa
 
-        n_t, n_p = planes_mat.shape[1] // b_planes, b_planes
-        shifts = np.arange(n_p, dtype=np.int64)
-        tbl_ids = np.arange(n_t, dtype=np.int32)
+        tbl_ids = np.arange(n_tables, dtype=np.int32)
         for batch in batches:
-            arr = batch.column("embedding")
-            n = len(arr)
+            n = batch.num_rows
             if n == 0:
                 continue
-            dots = _embedding_matrix(arr, planes_mat.shape[0]) @ planes_mat
-            # half-to-even np.round vs half-up F.round: see
-            # similarity.sign_lsh_bucketed
-            bits = (np.round(dots, 6) > 0).astype(np.int64)
-            buckets = (bits.reshape(n, n_t, n_p) << shifts).sum(axis=2)
+            buckets = kernel(batch.column("embedding"))
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(np.repeat(np.asarray(batch.column("vec_id")), n_t)),
+                    pa.array(
+                        np.repeat(np.asarray(batch.column("vec_id")), n_tables)
+                    ),
                     pa.array(np.tile(tbl_ids, n)),
                     pa.array(buckets.reshape(-1)),
                 ],

@@ -34,11 +34,13 @@ append survivors).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..tables import t
+from ..tables import build_once, fingerprint, fixture_home, t
 from .dedup import (
     _N_BANDS,
     ROWS_PER_BAND,
@@ -102,16 +104,6 @@ def _meta_masked(m) -> int:
 def _generations(spark: SparkSession, prefix: str) -> list[str]:
     n = _read_meta(spark, prefix)["n_deltas"]
     return [""] + [f"_d{i}" for i in range(1, n + 1)]
-
-
-def _fingerprint(docs: DataFrame) -> tuple[int, int]:
-    """(count, sum doc_id) — cheap corpus identity for staleness
-    detection; in-place text edits under unchanged ids are NOT seen
-    (immutable-snapshot corpora; mutators rebuild explicitly)."""
-    fp = docs.groupBy().agg(
-        F.count("*").alias("n"), F.sum("doc_id").alias("s")
-    ).first()
-    return int(fp["n"]), int(fp["s"] or 0)
 
 
 def _check_batch(docs: DataFrame) -> tuple[int, int]:
@@ -192,10 +184,12 @@ def ensure_lsh_index(
     spark: SparkSession, docs: DataFrame, prefix: str, buckets: int = 16
 ) -> bool:
     """Build only if absent or stale for THIS corpus (fingerprint
-    mismatch) — registered queries go through here so a previously
-    returned lazy probe plan never races a rebuild's drop+rewrite.
+    mismatch), so a previously returned lazy probe plan never races a
+    rebuild's drop+rewrite. The record checked is the index's own meta
+    row, not a tables.build_once marker: callers' `append_*`/`delete_*`
+    mutate an index under any prefix and keep that row current.
     Returns True iff a build ran."""
-    n, s = _fingerprint(docs)
+    n, s = fingerprint(docs, "doc_id")
     if spark.catalog.tableExists(f"{prefix}_meta"):
         m = _read_meta(spark, prefix)
         if m["n_docs"] == n and m["fp_sum_ids"] == s:
@@ -405,10 +399,7 @@ def delete_from_lsh_index(
     from ..plans.bucketing import drop_orphaned_table, write_bucketed
 
     ids = doc_ids.select("doc_id").distinct().localCheckpoint(eager=True)
-    stats = ids.groupBy().agg(
-        F.count("*").alias("n"), F.sum("doc_id").alias("s")
-    ).first()
-    n_ids, s_ids = int(stats["n"]), int(stats["s"] or 0)
+    n_ids, s_ids = fingerprint(ids, "doc_id")
     if n_ids == 0:
         return 0  # empty retraction feed: nothing to swap or commit
     n_present = ids.join(
@@ -612,12 +603,6 @@ def stream_lsh_dedup_gate(
     q.awaitTermination()
 
 
-def _lshix_prefix(sf_dir: str) -> str:
-    import re
-
-    return "lshix_" + re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir).strip("_")
-
-
 # Oracle: full-corpus signatures + banded CTEs (shared with dedup_near —
 # the index changes the ACCESS PATH, never the collision set), final
 # select restricted to (indexed side) × (batch side) by the same
@@ -650,11 +635,9 @@ def dedup_lsh_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexed×batch pairs: the materialized index must reproduce the
     from-scratch collision set exactly."""
     docs = t(spark, sf_dir, "documents")
-    prefix = _lshix_prefix(sf_dir)
+    prefix = os.path.basename(fixture_home(spark, sf_dir, "lshix"))
     ensure_lsh_index(spark, docs.filter(F.col("doc_id") % 2 == 0), prefix)
-    return probe_lsh_index(
-        spark, docs.filter(F.col("doc_id") % 2 == 1), prefix
-    ).orderBy("doc_id")
+    return probe_lsh_index(spark, docs.filter(F.col("doc_id") % 2 == 1), prefix)
 
 
 @register(
@@ -668,29 +651,50 @@ def dedup_lsh_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-generation index. The oracle is the one-shot collision set of
     the probe batch against BOTH indexed thirds — append+probe must be
     exactly equivalent to a fresh build over the union, the property
-    that makes the delta lifecycle trustworthy. Idempotent per corpus:
-    a matching two-generation index short-circuits the build+append,
-    so a previously returned plan never races a rebuild."""
+    that makes the delta lifecycle trustworthy. Built at most once per
+    corpus (tables.build_once), so a previously returned plan never
+    races a rebuild."""
     docs = t(spark, sf_dir, "documents")
-    prefix = _lshix_prefix(sf_dir) + "_inc"
-    indexed = docs.filter(F.col("doc_id") % 3 < 2)
-    n, s = _fingerprint(indexed)
-    rebuild = True
-    if spark.catalog.tableExists(f"{prefix}_meta"):
-        m = _read_meta(spark, prefix)
-        if m["n_deltas"] == 1 and m["n_docs"] == n and m["fp_sum_ids"] == s:
-            rebuild = False
-    if rebuild:
+    home = fixture_home(spark, sf_dir, "lshix_inc")
+    prefix = os.path.basename(home)
+
+    def build() -> None:
         build_lsh_index(spark, docs.filter(F.col("doc_id") % 3 == 0), prefix)
         append_to_lsh_index(spark, docs.filter(F.col("doc_id") % 3 == 1), prefix)
-    return probe_lsh_index(
-        spark, docs.filter(F.col("doc_id") % 3 == 2), prefix
-    ).orderBy("doc_id")
+
+    build_once(spark, home, docs, "doc_id", build, table=f"{prefix}_meta")
+    return probe_lsh_index(spark, docs.filter(F.col("doc_id") % 3 == 2), prefix)
 
 
 # the deleted slice: doc_id % 10 == 4 is a subset of the even
 # (indexed) ids, so live = evens minus it
 _LSH_DELETE_MOD = "% 10 = 4"
+
+
+def _deleted_index(
+    spark: SparkSession, sf_dir: str, kind: str, then=None
+) -> str:
+    """The prefix of an index over the even doc_ids with the
+    _LSH_DELETE_MOD slice deleted (and `then(prefix)` run after),
+    built at most once per corpus (tables.build_once): the shared
+    lifecycle of dedup_lsh_index_delete and _compacted."""
+    docs = t(spark, sf_dir, "documents")
+    home = fixture_home(spark, sf_dir, kind)
+    prefix = os.path.basename(home)
+
+    def build() -> None:
+        indexed = docs.filter(F.col("doc_id") % 2 == 0)
+        build_lsh_index(spark, indexed, prefix)
+        delete_from_lsh_index(
+            spark,
+            indexed.filter(F.expr(f"doc_id {_LSH_DELETE_MOD}")).select("doc_id"),
+            prefix,
+        )
+        if then is not None:
+            then(prefix)
+
+    build_once(spark, home, docs, "doc_id", build, table=f"{prefix}_meta")
+    return prefix
 
 
 @register(
@@ -705,31 +709,13 @@ def dedup_lsh_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch against the LIVE indexed docs only: deletes must remove
     every match through a deleted doc INCLUDING the bucket-minimum
     case where top-2 storage alone could not recover the next live
-    member. Idempotent per corpus: a matching post-delete fingerprint
-    skips the build+delete, so a previously returned plan never races
-    a rebuild."""
-    docs = t(spark, sf_dir, "documents")
-    prefix = _lshix_prefix(sf_dir) + "_del"
-    indexed = docs.filter(F.col("doc_id") % 2 == 0)
-    live = indexed.filter(F.expr(f"NOT (doc_id {_LSH_DELETE_MOD})"))
-    n, s = _fingerprint(live)
-    rebuild = True
-    if spark.catalog.tableExists(f"{prefix}_meta"):
-        m = _read_meta(spark, prefix)
-        if m["n_deltas"] == 0 and m["n_docs"] == n and m["fp_sum_ids"] == s:
-            rebuild = False
-    if rebuild:
-        build_lsh_index(spark, indexed, prefix)
-        delete_from_lsh_index(
-            spark,
-            indexed.filter(F.expr(f"doc_id {_LSH_DELETE_MOD}")).select(
-                "doc_id"
-            ),
-            prefix,
-        )
+    member. Built at most once per corpus (tables.build_once), so a
+    previously returned plan never races a rebuild."""
+    prefix = _deleted_index(spark, sf_dir, "lshix_del")
     return probe_lsh_index(
-        spark, docs.filter(F.col("doc_id") % 2 == 1), prefix
-    ).orderBy("doc_id")
+        spark, t(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 1),
+        prefix,
+    )
 
 
 @register(
@@ -744,39 +730,18 @@ def dedup_lsh_index_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     odd doc_ids probe the compacted index. The oracle is the same live
     collision set as dedup_lsh_index_delete: compaction must change
     the PHYSICAL state only (deleted docs' band keys leave disk,
-    pinned in pytest), never an answer. Idempotent per corpus: a
-    compacted post-delete fingerprint (0 generations, 0 masked) skips
-    the build+delete+compact."""
+    pinned in pytest), never an answer. Built at most once per corpus
+    (tables.build_once)."""
     from .maintenance import maintain_indexes
 
-    docs = t(spark, sf_dir, "documents")
-    prefix = _lshix_prefix(sf_dir) + "_delc"
-    indexed = docs.filter(F.col("doc_id") % 2 == 0)
-    live = indexed.filter(F.expr(f"NOT (doc_id {_LSH_DELETE_MOD})"))
-    n, s = _fingerprint(live)
-    rebuild = True
-    if spark.catalog.tableExists(f"{prefix}_meta"):
-        m = _read_meta(spark, prefix)
-        if (
-            m["n_deltas"] == 0
-            and _meta_masked(m) == 0
-            and m["n_docs"] == n
-            and m["fp_sum_ids"] == s
-        ):
-            rebuild = False
-    if rebuild:
-        build_lsh_index(spark, indexed, prefix)
-        delete_from_lsh_index(
-            spark,
-            indexed.filter(F.expr(f"doc_id {_LSH_DELETE_MOD}")).select(
-                "doc_id"
-            ),
-            prefix,
-        )
+    def compact(prefix: str) -> None:
         rep = maintain_indexes(
             spark, lsh_prefixes=[prefix], max_masked_frac=0.001
         )
         assert rep["lsh"][prefix] == "compacted"
+
+    prefix = _deleted_index(spark, sf_dir, "lshix_delc", then=compact)
     return probe_lsh_index(
-        spark, docs.filter(F.col("doc_id") % 2 == 1), prefix
-    ).orderBy("doc_id")
+        spark, t(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 1),
+        prefix,
+    )

@@ -20,11 +20,13 @@ rounding boundary, and ties are broken by doc_id).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import ORACLES, register
-from ..tables import t
+from ..tables import build_once, fingerprint, fixture_home, t
 
 _QUERY_TERMS = ["window", "table", "merge"]
 _BM25_K1 = 1.2
@@ -619,10 +621,9 @@ def delete_from_index(
     live = _existing_doc_ids(spark, prefix)
     if tombs is not None:
         live = live.join(tombs, "doc_id", "left_anti")
-    stats = ids.join(live, "doc_id", "left_semi").groupBy().agg(
-        F.count("*").alias("n"), F.sum("doc_id").alias("s")
-    ).first()
-    n_live_hits = int(stats["n"])
+    n_live_hits, _ = fingerprint(
+        ids.join(live, "doc_id", "left_semi"), "doc_id"
+    )
     n_ids = ids.count()
     if n_ids == 0:
         # an empty retraction feed is a legitimate no-op — writing an
@@ -826,26 +827,6 @@ def search_indexed(
 _BM25_ORACLE_SQL = ORACLES["search_bm25"]
 
 
-def _index_prefix(sf_dir: str) -> str:
-    """Deterministic catalog prefix per corpus dir (identifier-safe)."""
-    import re
-
-    return "bm25ix_" + re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir).strip("_")
-
-
-def _corpus_fingerprint(docs: DataFrame) -> tuple[int, int]:
-    """(row count, sum of doc_id) — the cheap identity an index's meta
-    row records so ensure_index can tell 'same corpus' from 'stale
-    index' with one two-column aggregate (no text scan). In-place TEXT
-    edits under unchanged doc_ids are NOT detected — callers that
-    mutate documents must rebuild explicitly (fixture corpora are
-    immutable, and at scale a corpus snapshot gets a fresh prefix)."""
-    fp = docs.groupBy().agg(
-        F.count("*").alias("n"), F.sum("doc_id").alias("s")
-    ).first()
-    return int(fp["n"]), int(fp["s"] or 0)
-
-
 def ensure_index(
     spark: SparkSession, docs: DataFrame, prefix: str, buckets: int = 16
 ) -> bool:
@@ -854,9 +835,11 @@ def ensure_index(
     queries go through this instead of rebuilding per call: once built
     for a corpus, the catalog tables are never dropped or rewritten
     again, so a previously returned (lazy) query DataFrame can never
-    race a rebuild's drop+rewrite of the tables it scans. Returns True
-    iff a build ran."""
-    n, s = _corpus_fingerprint(docs)
+    race a rebuild's drop+rewrite of the tables it scans. The record
+    checked is the index's own meta row, not a tables.build_once
+    marker: callers' `append_*`/`delete_*` mutate an index under any
+    prefix and keep that row current. Returns True iff a build ran."""
+    n, s = fingerprint(docs, "doc_id")
     if spark.catalog.tableExists(f"{prefix}_meta"):
         m = _read_meta(spark, prefix)
         if m["n_docs"] == n and m["fp_sum_ids"] == s:
@@ -881,7 +864,7 @@ def search_bm25_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the sibling phrase/proximity queries on the same prefix, read
     the already-built tables, so no returned DataFrame ever races a
     rebuild."""
-    prefix = _index_prefix(sf_dir)
+    prefix = os.path.basename(fixture_home(spark, sf_dir, "bm25ix"))
     ensure_index(spark, t(spark, sf_dir, "documents"), prefix)
     return search_indexed(spark, prefix, _QUERY_TERMS)
 
@@ -896,19 +879,18 @@ def search_bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalent to a fresh build over everything — df, avgdl and n_docs
     all reflect the union, which is the property that makes the sorted
     run lifecycle trustworthy (reference append/merge economics †,
-    chess importer U2). Idempotent per corpus: when the two-generation
-    index already exists with the full-corpus fingerprint, the
-    build+append is skipped — so a previously returned DataFrame never
-    races a rebuild of the tables it scans."""
-    prefix = _index_prefix(sf_dir) + "_inc"
+    chess importer U2). Built at most once per corpus
+    (tables.build_once), so a previously returned DataFrame never races
+    a rebuild of the tables it scans."""
     docs = t(spark, sf_dir, "documents")
-    n, s = _corpus_fingerprint(docs)
-    if spark.catalog.tableExists(f"{prefix}_meta"):
-        m = _read_meta(spark, prefix)
-        if m["n_deltas"] == 1 and m["n_docs"] == n and m["fp_sum_ids"] == s:
-            return search_indexed_incremental(spark, prefix, _QUERY_TERMS)
-    build_inverted_index(spark, docs.filter(F.col("doc_id") % 2 == 0), prefix)
-    append_to_index(spark, docs.filter(F.col("doc_id") % 2 == 1), prefix)
+    home = fixture_home(spark, sf_dir, "bm25ix_inc")
+    prefix = os.path.basename(home)
+
+    def build() -> None:
+        build_inverted_index(spark, docs.filter(F.col("doc_id") % 2 == 0), prefix)
+        append_to_index(spark, docs.filter(F.col("doc_id") % 2 == 1), prefix)
+
+    build_once(spark, home, docs, "doc_id", build, table=f"{prefix}_meta")
     return search_indexed_incremental(spark, prefix, _QUERY_TERMS)
 
 
@@ -928,31 +910,19 @@ def search_bm25_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
     must together answer exactly as a fresh build over the live corpus
     — the property that makes tombstone deletes trustworthy (physical
     purge happens at the next compact_index, pinned equivalent in
-    tests). Idempotent per corpus: a matching post-delete fingerprint
-    skips the build+delete, so a previously returned plan never races
-    a rebuild."""
-    prefix = _index_prefix(sf_dir) + "_del"
+    tests). Built at most once per corpus (tables.build_once), so a
+    previously returned plan never races a rebuild."""
     docs = t(spark, sf_dir, "documents")
-    live = docs.filter(~F.expr(_DELETED_PRED))
-    n, s = _corpus_fingerprint(live)
-    if spark.catalog.tableExists(f"{prefix}_meta"):
-        m = _read_meta(spark, prefix)
-        if (
-            # <= 1, not == 1: a corpus with NO doc_id % 11 == 2 rows
-            # makes delete_from_index an empty-feed no-op (0 tombstone
-            # generations), and the live-corpus fingerprint already
-            # identifies the post-delete state — requiring exactly 1
-            # would rebuild on every call AND let a previously returned
-            # lazy plan race the rebuild's drop+rewrite
-            _n_tomb_gens(m) <= 1
-            and m["n_docs"] == n
-            and m["fp_sum_ids"] == s
-        ):
-            return search_indexed(spark, prefix, _QUERY_TERMS)
-    build_inverted_index(spark, docs, prefix)
-    delete_from_index(
-        spark, docs.filter(F.expr(_DELETED_PRED)).select("doc_id"), prefix
-    )
+    home = fixture_home(spark, sf_dir, "bm25ix_del")
+    prefix = os.path.basename(home)
+
+    def build() -> None:
+        build_inverted_index(spark, docs, prefix)
+        delete_from_index(
+            spark, docs.filter(F.expr(_DELETED_PRED)).select("doc_id"), prefix
+        )
+
+    build_once(spark, home, docs, "doc_id", build, table=f"{prefix}_meta")
     return search_indexed(spark, prefix, _QUERY_TERMS)
 
 
@@ -1026,7 +996,7 @@ def search_phrase_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-boundary phrase count answered from the positional index
     (build + phrase walk); oracle is the token-bigram count over the
     corpus — append+index must reproduce it exactly."""
-    prefix = _index_prefix(sf_dir)
+    prefix = os.path.basename(fixture_home(spark, sf_dir, "bm25ix"))
     ensure_index(spark, t(spark, sf_dir, "documents"), prefix)
     return phrase_indexed(spark, prefix, _PHRASE)
 
@@ -1164,7 +1134,7 @@ def search_proximity_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'window' followed by 'table' within 3 tokens, answered from the
     positional index — the Lucene-style slop query a retrieval eval
     set builder needs beyond exact phrases."""
-    prefix = _index_prefix(sf_dir)
+    prefix = os.path.basename(fixture_home(spark, sf_dir, "bm25ix"))
     ensure_index(spark, t(spark, sf_dir, "documents"), prefix)
     return proximity_indexed(spark, prefix, "window", "table")
 
@@ -1183,26 +1153,15 @@ def search_bm25_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is the BM25 SQL over the live corpus: append+delete+
     compact+query must equal a fresh build over (everything minus the
     deleted slice) — the composition property none of the single-step
-    queries pin externally. Idempotent per corpus: a compacted
-    post-lifecycle fingerprint (0 delta gens, 0 tombstone gens) skips
-    the rebuild."""
+    queries pin externally. Built at most once per corpus
+    (tables.build_once)."""
     from .maintenance import maintain_indexes
 
-    prefix = _index_prefix(sf_dir) + "_mnt"
     docs = t(spark, sf_dir, "documents")
-    live = docs.filter(~F.expr(_DELETED_PRED))
-    n, s = _corpus_fingerprint(live)
-    rebuild = True
-    if spark.catalog.tableExists(f"{prefix}_meta"):
-        m = _read_meta(spark, prefix)
-        if (
-            m["n_deltas"] == 0
-            and _n_tomb_gens(m) == 0
-            and m["n_docs"] == n
-            and m["fp_sum_ids"] == s
-        ):
-            rebuild = False
-    if rebuild:
+    home = fixture_home(spark, sf_dir, "bm25ix_mnt")
+    prefix = os.path.basename(home)
+
+    def build() -> None:
         build_inverted_index(spark, docs.filter(F.col("doc_id") % 2 == 0), prefix)
         append_to_index(spark, docs.filter(F.col("doc_id") % 2 == 1), prefix)
         delete_from_index(
@@ -1212,4 +1171,6 @@ def search_bm25_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, postings_prefixes=[prefix], max_generations=1
         )
         assert rep["postings"][prefix] == "compacted"
+
+    build_once(spark, home, docs, "doc_id", build, table=f"{prefix}_meta")
     return search_indexed(spark, prefix, _QUERY_TERMS)

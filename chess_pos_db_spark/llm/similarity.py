@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..tables import t
+from ..tables import build_once, fixture_home, t
 
 _QUERY_VEC_ID = 0
 _TOP_K = 10
@@ -185,6 +185,33 @@ def _embedding_matrix(arr, dims: int):
     return np.asarray(values, dtype=np.float64).reshape(len(arr), dims)
 
 
+def _sign_lsh_kernel(tables, n_planes: int | None = None):
+    """The one batched sign-LSH bucket kernel: returns ``kernel(arr)``
+    mapping one Arrow batch's list<float> embeddings to an
+    (n × len(tables)) int64 matrix of bucket ids, column j being hash
+    table ``tables[j]`` (planes tbl·b .. tbl·b+b−1, as in
+    ``sign_lsh_bucket``). The plane matrix is built once, driver-side;
+    per batch it is ONE (n × dims) @ (dims × L·b) matmul, the
+    round-to-6dp-before-sign guard, and the bits shift-packed per
+    table."""
+    import numpy as np
+
+    b = _N_PLANES if n_planes is None else n_planes
+    tables = list(tables)
+    planes = np.array(
+        [_plane(tbl * b + p) for tbl in tables for p in range(b)],
+        dtype=np.float64,
+    ).T  # (dims, L·b)
+    shifts = np.arange(b, dtype=np.int64)
+
+    def kernel(arr):
+        dots = _embedding_matrix(arr, planes.shape[0]) @ planes
+        bits = (np.round(dots, 6) > 0).astype(np.int64)
+        return (bits.reshape(len(arr), len(tables), b) << shifts).sum(axis=2)
+
+    return kernel
+
+
 def sign_lsh_bucketed(emb, table: int = 0, n_planes: int | None = None):
     """(vec_id, embedding, bucket): the single-table sign-LSH bucket
     assignment as ONE batched numpy matmul per Arrow batch (guide §4.2).
@@ -203,29 +230,16 @@ def sign_lsh_bucketed(emb, table: int = 0, n_planes: int | None = None):
     1.66 → 0.57 s, see OPTIMIZATION_r14.md §12). Only
     (vec_id, embedding) crosses the boundary; embedding is passed
     through untouched so verifiers keep using it JVM-side."""
-    import numpy as np
-
-    if n_planes is None:
-        n_planes = _N_PLANES
-    planes_mat = np.array(
-        [_plane(table * n_planes + p) for p in range(n_planes)],
-        dtype=np.float64,
-    ).T  # (dims, n_planes)
+    kernel = _sign_lsh_kernel([table], n_planes)
     fields = dict(emb.dtypes)
 
     def _bucket_batches(batches):
-        import numpy as np
         import pyarrow as pa
 
-        shifts = np.arange(planes_mat.shape[1], dtype=np.int64)
         for batch in batches:
-            arr = batch.column("embedding")
-            n = len(arr)
-            if n == 0:
+            if batch.num_rows == 0:
                 continue
-            dots = _embedding_matrix(arr, planes_mat.shape[0]) @ planes_mat
-            bits = (np.round(dots, 6) > 0).astype(np.int64)
-            buckets = (bits << shifts).sum(axis=1)
+            buckets = kernel(batch.column("embedding"))[:, 0]
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column("vec_id"),
@@ -465,6 +479,18 @@ def _probe_cells(q_embedding, centroids, cnorms, nprobe: int) -> list[int]:
     return [int(c) for c in np.argsort(-q_scores, kind="stable")[:nprobe]]
 
 
+def _query_vec(emb: DataFrame):
+    """The query vector's embedding, from a pushed-down point filter on
+    the source table (never a by-id scan of a layout's cell
+    directories); fails loudly when the corpus lacks it."""
+    qrow = emb.filter(F.col("vec_id") == _QUERY_VEC_ID).select("embedding").head()
+    if qrow is None:
+        raise ValueError(
+            f"query vector: vec_id {_QUERY_VEC_ID} not found in embeddings"
+        )
+    return qrow.embedding
+
+
 def _ivf_query(
     spark: SparkSession,
     sf_dir: str,
@@ -485,12 +511,7 @@ def _ivf_query(
     cells = _cell_assignments(emb, centroids, cnorms)
     bucketed = emb.join(cells, "vec_id")
 
-    qrow = emb.filter(F.col("vec_id") == _QUERY_VEC_ID).select("embedding").head()
-    if qrow is None:
-        raise ValueError(
-            f"IVF query: vec_id {_QUERY_VEC_ID} not found in embeddings"
-        )
-    probe_cells = _probe_cells(qrow.embedding, centroids, cnorms, nprobe)
+    probe_cells = _probe_cells(_query_vec(emb), centroids, cnorms, nprobe)
 
     q = emb.filter(F.col("vec_id") == _QUERY_VEC_ID).select(
         F.col("embedding").alias("qv")
@@ -593,14 +614,22 @@ def write_ivf_layout(
     must be reused at query time.
     """
     centroids, cnorms = _ivf_trained_centroids(spark, sf_dir, k=k)
-    emb = t(spark, sf_dir, "embeddings")
+    _write_cells(t(spark, sf_dir, "embeddings"), out_dir, centroids, cnorms)
+    return centroids, cnorms
+
+
+def _write_cells(
+    emb: DataFrame, layout_dir: str, centroids, cnorms, mode="overwrite"
+) -> None:
+    """Write `emb` into `layout_dir` partitioned by its cell under the
+    given quantizer: the one layout write every build and append
+    goes through."""
     (
         emb.join(_cell_assignments(emb, centroids, cnorms), "vec_id")
-        .write.mode("overwrite")
+        .write.mode(mode)
         .partitionBy("cell")
-        .parquet(out_dir)
+        .parquet(layout_dir)
     )
-    return centroids, cnorms
 
 
 def ivf_query_layout(
@@ -651,23 +680,34 @@ def ivf_query_layout(
     )
 
 
-def _ivf_layout_home(
-    spark: SparkSession, sf_dir: str, variant: str = ""
-) -> tuple[str, str]:
-    """(layout directory, meta table name) for this corpus — the layout
-    lives under the local warehouse next to the catalog tables; the
-    single-row meta table records the corpus fingerprint so the layout
-    is written at most once per corpus (same ensure discipline as the
-    postings and LSH indexes)."""
-    import os
-    import re
-    from urllib.parse import urlparse
+def _built_layout(
+    spark: SparkSession, sf_dir: str, kind: str, base=None, then=None
+):
+    """(layout dir, centroids, cnorms) of one registered layout
+    lifecycle, built at most once per corpus (tables.build_once): `base`
+    (default: every vector) written under its own frozen relational
+    quantizer, then `then(path, centroids, cnorms)` runs the variant's
+    delete/append/maintain steps."""
+    emb = t(spark, sf_dir, "embeddings")
+    base = emb if base is None else base
+    centroids, cnorms = _ivf_centroids(spark, sf_dir, emb=base)
+    path = fixture_home(spark, sf_dir, kind)
 
-    tag = re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir).strip("_")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    return (
-        os.path.join(wh, f"ivf_layout{variant}_{tag}"),
-        f"ivflay{variant}_{tag}_meta",
+    def build():
+        _write_cells(base, path, centroids, cnorms)
+        if then is not None:
+            then(path, centroids, cnorms)
+
+    build_once(spark, path, emb, "vec_id", build)
+    return path, centroids, cnorms
+
+
+def _layout_topk(spark: SparkSession, sf_dir: str, kind: str, **lifecycle):
+    """ANN top-k of the query vector over a built layout lifecycle."""
+    path, centroids, cnorms = _built_layout(spark, sf_dir, kind, **lifecycle)
+    return ivf_query_layout(
+        spark, path, centroids, cnorms,
+        query_vec=_query_vec(t(spark, sf_dir, "embeddings")),
     )
 
 
@@ -680,45 +720,10 @@ def similarity_ivf_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     at any scale, with zero per-query assignment work). Uses the
     relational deterministic quantizer so the oracle is the same SQL as
     similarity_ivf: same candidate set, same scores — the layout
-    changes the ACCESS PATH, never the answer. Build-once semantics: a
-    matching corpus fingerprint in the meta table skips the rewrite, so
-    a previously returned lazy plan never races an overwrite of the
-    directories it scans."""
-    emb = t(spark, sf_dir, "embeddings")
-    path, meta_table = _ivf_layout_home(spark, sf_dir)
-    fp = emb.groupBy().agg(
-        F.count("*").alias("n"), F.sum("vec_id").alias("s")
-    ).first()
-    n, s = int(fp["n"]), int(fp["s"] or 0)
-    centroids, cnorms = _ivf_centroids(spark, sf_dir)
-    fresh = True
-    if spark.catalog.tableExists(meta_table):
-        m = spark.table(meta_table).first()
-        if m["n_vecs"] == n and m["fp_sum_ids"] == s:
-            fresh = False
-    if fresh:
-        (
-            emb.join(_cell_assignments(emb, centroids, cnorms), "vec_id")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(path)
-        )
-        from ..plans.bucketing import drop_orphaned_table
-
-        drop_orphaned_table(spark, meta_table)
-        spark.createDataFrame(
-            [(n, s)], "n_vecs bigint, fp_sum_ids bigint"
-        ).write.mode("overwrite").saveAsTable(meta_table)
-    qrow = (
-        emb.filter(F.col("vec_id") == _QUERY_VEC_ID).select("embedding").head()
-    )
-    if qrow is None:
-        raise ValueError(
-            f"IVF layout query: vec_id {_QUERY_VEC_ID} not in embeddings"
-        )
-    return ivf_query_layout(
-        spark, path, centroids, cnorms, query_vec=qrow.embedding
-    )
+    changes the ACCESS PATH, never the answer. Built at most once per
+    corpus (tables.build_once), so a previously returned lazy plan
+    never races an overwrite of the directories it scans."""
+    return _layout_topk(spark, sf_dir, "ivf_layout")
 
 
 def append_ivf_layout(
@@ -734,12 +739,7 @@ def append_ivf_layout(
     needs no generation bookkeeping at all). Centroids MUST be the
     index's frozen quantizer — assigning a batch with retrained
     centroids would route it inconsistently with the resident data."""
-    (
-        new_emb.join(_cell_assignments(new_emb, centroids, cnorms), "vec_id")
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(layout_dir)
-    )
+    _write_cells(new_emb, layout_dir, centroids, cnorms, mode="append")
 
 
 def delete_from_ivf_layout(
@@ -844,45 +844,14 @@ def similarity_ivf_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
     same quantizer over the FULL corpus (frozen centroids are data
     copies; deletes never move cell boundaries) with deleted vectors
     excluded from the candidate set only: delete+query must equal a
-    fresh layout over the live vectors. Build-once per corpus via
-    fingerprinted meta over the LIVE set."""
-    emb = t(spark, sf_dir, "embeddings")
-    doomed = emb.filter(F.expr(_IVF_DELETE_PRED))
-    live = emb.filter(~F.expr(_IVF_DELETE_PRED))
-    centroids, cnorms = _ivf_centroids(spark, sf_dir)
-    path, meta_table = _ivf_layout_home(spark, sf_dir, variant="_del")
-    fp = live.groupBy().agg(
-        F.count("*").alias("n"), F.sum("vec_id").alias("s")
-    ).first()
-    n, s = int(fp["n"]), int(fp["s"] or 0)
-    fresh = True
-    if spark.catalog.tableExists(meta_table):
-        m = spark.table(meta_table).first()
-        if m["n_vecs"] == n and m["fp_sum_ids"] == s:
-            fresh = False
-    if fresh:
-        (
-            emb.join(_cell_assignments(emb, centroids, cnorms), "vec_id")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(path)
-        )
-        delete_from_ivf_layout(spark, doomed, path, centroids, cnorms)
-        from ..plans.bucketing import drop_orphaned_table
-
-        drop_orphaned_table(spark, meta_table)
-        spark.createDataFrame(
-            [(n, s)], "n_vecs bigint, fp_sum_ids bigint"
-        ).write.mode("overwrite").saveAsTable(meta_table)
-    qrow = (
-        emb.filter(F.col("vec_id") == _QUERY_VEC_ID).select("embedding").head()
-    )
-    if qrow is None:
-        raise ValueError(
-            f"IVF layout query: vec_id {_QUERY_VEC_ID} not in embeddings"
-        )
-    return ivf_query_layout(
-        spark, path, centroids, cnorms, query_vec=qrow.embedding
+    fresh layout over the live vectors. Built at most once per corpus
+    (tables.build_once)."""
+    doomed = t(spark, sf_dir, "embeddings").filter(F.expr(_IVF_DELETE_PRED))
+    return _layout_topk(
+        spark, sf_dir, "ivf_layout_del",
+        then=lambda path, c, cn: delete_from_ivf_layout(
+            spark, doomed, path, c, cn
+        ),
     )
 
 
@@ -900,46 +869,14 @@ def similarity_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     frozen to the base (cent from even vec_ids) assigning ALL vectors:
     append+query must equal a fresh assignment of the union under the
     frozen quantizer — the property that makes appending to a vector
-    index trustworthy. Build-once per corpus via fingerprinted meta."""
+    index trustworthy. Built at most once per corpus (tables.build_once)."""
     emb = t(spark, sf_dir, "embeddings")
-    base = emb.filter(F.col("vec_id") % 2 == 0)
-    delta = emb.filter(F.col("vec_id") % 2 == 1)
-    centroids, cnorms = _ivf_centroids(spark, sf_dir, emb=base)
-    path, meta_table = _ivf_layout_home(spark, sf_dir, variant="_inc")
-    fp = emb.groupBy().agg(
-        F.count("*").alias("n"), F.sum("vec_id").alias("s")
-    ).first()
-    n, s = int(fp["n"]), int(fp["s"] or 0)
-    fresh = True
-    if spark.catalog.tableExists(meta_table):
-        m = spark.table(meta_table).first()
-        if m["n_vecs"] == n and m["fp_sum_ids"] == s:
-            fresh = False
-    if fresh:
-        (
-            base.join(_cell_assignments(base, centroids, cnorms), "vec_id")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(path)
-        )
-        append_ivf_layout(delta, path, centroids, cnorms)
-        from ..plans.bucketing import drop_orphaned_table
-
-        drop_orphaned_table(spark, meta_table)
-        spark.createDataFrame(
-            [(n, s)], "n_vecs bigint, fp_sum_ids bigint"
-        ).write.mode("overwrite").saveAsTable(meta_table)
-    # query vector from the SOURCE table (pushed-down point filter),
-    # not a by-id scan of every cell directory in the layout
-    qrow = (
-        emb.filter(F.col("vec_id") == _QUERY_VEC_ID).select("embedding").head()
-    )
-    if qrow is None:
-        raise ValueError(
-            f"IVF layout query: vec_id {_QUERY_VEC_ID} not in embeddings"
-        )
-    return ivf_query_layout(
-        spark, path, centroids, cnorms, query_vec=qrow.embedding
+    return _layout_topk(
+        spark, sf_dir, "ivf_layout_inc",
+        base=emb.filter(F.col("vec_id") % 2 == 0),
+        then=lambda path, c, cn: append_ivf_layout(
+            emb.filter(F.col("vec_id") % 2 == 1), path, c, cn
+        ),
     )
 
 
@@ -1027,34 +964,12 @@ def dedup_embedding_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     restricted exact-cosine pairs under the base-frozen relational
     quantizer, indexed-side even × batch-side odd."""
     emb = t(spark, sf_dir, "embeddings")
-    base = emb.filter(F.col("vec_id") % 2 == 0)
-    batch = emb.filter(F.col("vec_id") % 2 == 1)
-    centroids, cnorms = _ivf_centroids(spark, sf_dir, emb=base)
-    path, meta_table = _ivf_layout_home(spark, sf_dir, variant="_nd")
-    fp = base.groupBy().agg(
-        F.count("*").alias("n"), F.sum("vec_id").alias("s")
-    ).first()
-    n, s = int(fp["n"]), int(fp["s"] or 0)
-    fresh = True
-    if spark.catalog.tableExists(meta_table):
-        m = spark.table(meta_table).first()
-        if m["n_vecs"] == n and m["fp_sum_ids"] == s:
-            fresh = False
-    if fresh:
-        (
-            base.join(_cell_assignments(base, centroids, cnorms), "vec_id")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(path)
-        )
-        from ..plans.bucketing import drop_orphaned_table
-
-        drop_orphaned_table(spark, meta_table)
-        spark.createDataFrame(
-            [(n, s)], "n_vecs bigint, fp_sum_ids bigint"
-        ).write.mode("overwrite").saveAsTable(meta_table)
-    return probe_ivf_near_dup(spark, batch, path, centroids, cnorms).orderBy(
-        "vec_id"
+    path, centroids, cnorms = _built_layout(
+        spark, sf_dir, "ivf_layout_nd",
+        base=emb.filter(F.col("vec_id") % 2 == 0),
+    )
+    return probe_ivf_near_dup(
+        spark, emb.filter(F.col("vec_id") % 2 == 1), path, centroids, cnorms
     )
 
 
@@ -1238,12 +1153,7 @@ def similarity_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = t(spark, sf_dir, "embeddings")
     books = _pq_codebooks(spark, sf_dir)
-    qrow = emb.filter(F.col("vec_id") == _QUERY_VEC_ID).head()
-    if qrow is None:
-        raise ValueError(
-            f"PQ query: vec_id {_QUERY_VEC_ID} not found in embeddings"
-        )
-    qvec = np.array(qrow.embedding, dtype=np.float64)
+    qvec = np.array(_query_vec(emb), dtype=np.float64)
     qn = np.linalg.norm(qvec)
     qnorm = qvec / (qn if qn else 1.0)
     d_sub = len(qvec) // _PQ_M
@@ -1546,48 +1456,20 @@ def similarity_ivf_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition pruning over the compacted layout. Oracle = the frozen
     base quantizer assigning ALL vectors (same as the incremental
     query): file compaction must change the PHYSICAL layout only,
-    never an answer. Build-once per corpus via fingerprinted meta."""
+    never an answer. Built at most once per corpus (tables.build_once)."""
     from .maintenance import maintain_indexes
 
     emb = t(spark, sf_dir, "embeddings")
-    base = emb.filter(F.col("vec_id") % 2 == 0)
-    centroids, cnorms = _ivf_centroids(spark, sf_dir, emb=base)
-    path, meta_table = _ivf_layout_home(spark, sf_dir, variant="_mnt")
-    fp = emb.groupBy().agg(
-        F.count("*").alias("n"), F.sum("vec_id").alias("s")
-    ).first()
-    n, s = int(fp["n"]), int(fp["s"] or 0)
-    fresh = True
-    if spark.catalog.tableExists(meta_table):
-        m = spark.table(meta_table).first()
-        if m["n_vecs"] == n and m["fp_sum_ids"] == s:
-            fresh = False
-    if fresh:
-        (
-            base.join(_cell_assignments(base, centroids, cnorms), "vec_id")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(path)
-        )
+
+    def then(path, centroids, cnorms):
         for mod in (1, 3, 5):
             append_ivf_layout(
                 emb.filter(F.col("vec_id") % 6 == mod), path, centroids,
                 cnorms,
             )
         maintain_indexes(spark, ivf_layouts=[path], max_files_per_cell=1)
-        from ..plans.bucketing import drop_orphaned_table
 
-        drop_orphaned_table(spark, meta_table)
-        spark.createDataFrame(
-            [(n, s)], "n_vecs bigint, fp_sum_ids bigint"
-        ).write.mode("overwrite").saveAsTable(meta_table)
-    qrow = (
-        emb.filter(F.col("vec_id") == _QUERY_VEC_ID).select("embedding").head()
-    )
-    if qrow is None:
-        raise ValueError(
-            f"IVF layout query: vec_id {_QUERY_VEC_ID} not in embeddings"
-        )
-    return ivf_query_layout(
-        spark, path, centroids, cnorms, query_vec=qrow.embedding
+    return _layout_topk(
+        spark, sf_dir, "ivf_layout_mnt",
+        base=emb.filter(F.col("vec_id") % 2 == 0), then=then,
     )

@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..tables import t
+from ..tables import build_once, fixture_home, t
 from .layout import _dump_manifest
 
 _PARTIAL_FNS = ("count", "sum", "min", "max", "hll")
@@ -548,22 +548,6 @@ def agg_from_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _view_retr_home(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """(snapshot-store dir, materialized-view dir) for the retraction
-    lifecycle query — both under the local warehouse like the IVF
-    layout home, so build-once state survives within a session's
-    catalog scope."""
-    import re
-    from urllib.parse import urlparse
-
-    tag = re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir).strip("_")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    return (
-        os.path.join(wh, f"mvretr_store_{tag}"),
-        os.path.join(wh, f"mvretr_view_{tag}"),
-    )
-
-
 # the retracted slice; doc_id < 4000 bounds the store (and the delete's
 # IN-list) at every scale factor
 _RETR_PRED = "doc_id % 7 = 3"
@@ -593,55 +577,18 @@ def agg_view_retracted(spark: SparkSession, sf_dir: str) -> DataFrame:
     the audit property a compliance job needs at 100 TB, where the
     view is |grain| rows and the advance is delta-sized.
 
-    Build-once per corpus: when the store's latest version is the
-    post-delete v2 with the expected live fingerprint and the view pin
-    matches it, the whole build+retract is skipped — a previously
-    returned lazy plan never races a rebuild."""
-    import shutil
-
+    The store and the view live under one home as `store/` and
+    `view/`, built at most once per corpus (tables.build_once), so a
+    previously returned lazy plan never races a rebuild."""
     from ..llm.retraction import retract_documents
-    from ..tables import t as load
     from . import layout
 
-    docs = load(spark, sf_dir, "documents").filter(F.expr(_RETR_BOUND))
-    live = docs.filter(~F.expr(_RETR_PRED))
-    store, vp = _view_retr_home(spark, sf_dir)
+    docs = t(spark, sf_dir, "documents").filter(F.expr(_RETR_BOUND))
+    home = fixture_home(spark, sf_dir, "mvretr")
+    store, vp = os.path.join(home, "store"), os.path.join(home, "view")
     dims, ms = ["source", "lang"], [("count", "*"), ("sum", "n_chars")]
-    fp = live.groupBy().agg(
-        F.count("*").alias("n"), F.sum("doc_id").alias("s")
-    ).first()
-    n_live, s_live = int(fp["n"]), int(fp["s"] or 0)
 
-    def _converged() -> bool:
-        from .layout import MANIFEST_NAME
-
-        if not (
-            os.path.isfile(os.path.join(store, MANIFEST_NAME))
-            and os.path.isfile(os.path.join(vp, _MANIFEST))
-        ):
-            return False
-        try:
-            sm = layout.read_manifest(store)
-            from .layout import _live_snapshot_ids
-
-            latest = max(_live_snapshot_ids(sm))
-            if latest != 2:
-                return False
-            st = layout.read_snapshot(spark, store)
-            got = st.groupBy().agg(
-                F.count("*").alias("n"), F.sum("doc_id").alias("s")
-            ).first()
-            if (int(got["n"]), int(got["s"] or 0)) != (n_live, s_live):
-                return False
-            with open(os.path.join(vp, _MANIFEST)) as f:
-                vm = json.load(f)
-            return vm["base_version"] == 2
-        except Exception:
-            return False
-
-    if not _converged():
-        shutil.rmtree(store, ignore_errors=True)
-        shutil.rmtree(vp, ignore_errors=True)
+    def build():
         layout.append_versioned(
             docs.select("doc_id", "source", "lang", "n_chars"),
             store,
@@ -657,6 +604,8 @@ def agg_view_retracted(spark: SparkSession, sf_dir: str) -> DataFrame:
             store_path=store,
             view_paths=[vp],
         )
+
+    build_once(spark, home, t(spark, sf_dir, "documents"), "doc_id", build)
     view, _, _ = read_view(spark, vp, expect_base_version=2)
     return view.select(
         "source",
@@ -671,18 +620,6 @@ def agg_view_retracted(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ADV_BOUND = "doc_id < 4000"
 _ADV_APPEND = "doc_id % 4 = 3"
 _ADV_DELETE = "doc_id % 7 = 3"
-
-
-def _view_adv_home(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    import re
-    from urllib.parse import urlparse
-
-    tag = re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir).strip("_")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    return (
-        os.path.join(wh, f"mvadv_store_{tag}"),
-        os.path.join(wh, f"mvadv_view_{tag}"),
-    )
 
 
 @register(
@@ -708,47 +645,17 @@ def agg_view_advanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     never two snapshot scans). The oracle aggregates the final base
     directly: advance must equal recompute. Complements
     `agg_view_retracted` (single delete via the retraction feed) with
-    the mixed append+delete span and a direct advance_view call."""
-    import shutil
-
+    the mixed append+delete span and a direct advance_view call. Built
+    at most once per corpus (tables.build_once), like
+    `agg_view_retracted`."""
     from . import layout
 
     docs = t(spark, sf_dir, "documents").filter(F.expr(_ADV_BOUND))
-    live = docs.filter(~F.expr(_ADV_DELETE))
-    store, vp = _view_adv_home(spark, sf_dir)
+    home = fixture_home(spark, sf_dir, "mvadv")
+    store, vp = os.path.join(home, "store"), os.path.join(home, "view")
     dims, ms = ["source", "lang"], [("count", "*"), ("sum", "n_chars")]
-    fp = live.groupBy().agg(
-        F.count("*").alias("n"), F.sum("doc_id").alias("s")
-    ).first()
-    n_live, s_live = int(fp["n"]), int(fp["s"] or 0)
 
-    def _converged() -> bool:
-        from .layout import MANIFEST_NAME, _live_snapshot_ids
-
-        if not (
-            os.path.isfile(os.path.join(store, MANIFEST_NAME))
-            and os.path.isfile(os.path.join(vp, _MANIFEST))
-        ):
-            return False
-        try:
-            sm = layout.read_manifest(store)
-            if max(_live_snapshot_ids(sm)) != 3:
-                return False
-            st = layout.read_snapshot(spark, store)
-            got = st.groupBy().agg(
-                F.count("*").alias("n"), F.sum("doc_id").alias("s")
-            ).first()
-            if (int(got["n"]), int(got["s"] or 0)) != (n_live, s_live):
-                return False
-            with open(os.path.join(vp, _MANIFEST)) as f:
-                vm = json.load(f)
-            return vm["base_version"] == 3
-        except Exception:
-            return False
-
-    if not _converged():
-        shutil.rmtree(store, ignore_errors=True)
-        shutil.rmtree(vp, ignore_errors=True)
+    def build():
         payload = docs.select("doc_id", "source", "lang", "n_chars")
         layout.append_versioned(
             payload.filter(~F.expr(_ADV_APPEND)), store, ["doc_id"]
@@ -766,6 +673,8 @@ def agg_view_advanced(spark: SparkSession, sf_dir: str) -> DataFrame:
         adv = advance_view(spark, store, vp, key=["doc_id"])
         if adv != {"from": 1, "to": 3, "advanced": True}:
             raise ValueError(f"agg_view_advanced: unexpected advance {adv}")
+
+    build_once(spark, home, t(spark, sf_dir, "documents"), "doc_id", build)
     view, vdims, vms = read_view(spark, vp, expect_base_version=3)
     rolled = answer(
         view, vdims, vms,

@@ -16,71 +16,18 @@ from __future__ import annotations
 
 import json
 import os
-import re
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..tables import t
+from ..tables import build_once, fixture_home, t
 from . import layout
 
 # the right-to-be-forgotten slice: deterministic, hits both snapshot
 # versions (odd and even doc_ids are in different versions)
 _DELETE_PRED = "doc_id % 7 = 3"
 _DELETE_SQL = "doc_id % 7 = 3"
-
-
-def _store_home(spark: SparkSession, sf_dir: str) -> str:
-    """Per-corpus store directory under the local warehouse (same home
-    discipline as the IVF layout / postings index)."""
-    tag = re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir).strip("_")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    return os.path.join(wh, f"docstore_{tag}")
-
-
-def _ensure_deleted_store(spark: SparkSession, sf_dir: str) -> str:
-    """Build the two-version store and apply the delete AT MOST ONCE
-    per corpus: the manifest records the corpus fingerprint and a
-    lifecycle state marker, so repeat calls (and a previously returned
-    lazy read plan) never race a rebuild. Returns the store path."""
-    docs = t(spark, sf_dir, "documents")
-    fp = docs.groupBy().agg(
-        F.count("*").alias("n"), F.sum("doc_id").alias("s")
-    ).first()
-    n, s = int(fp["n"]), int(fp["s"] or 0)
-    path = _store_home(spark, sf_dir)
-    try:
-        m = layout.read_manifest(path)
-        if m.get("corpus_fp") == [n, s] and m.get("lifecycle") == "deleted":
-            return path
-    except FileNotFoundError:
-        pass
-    # stale or absent: rebuild from scratch (fixture corpora are
-    # immutable per sf_dir, so this runs once per corpus per warehouse)
-    import shutil
-
-    if os.path.isdir(path):
-        shutil.rmtree(path)
-    payload = docs.select("doc_id", "source", "text")
-    layout.append_versioned(
-        payload.filter(F.col("doc_id") % 2 == 0), path, ["doc_id"]
-    )
-    layout.append_versioned(
-        payload.filter(F.col("doc_id") % 2 == 1), path, ["doc_id"]
-    )
-    res = layout.delete_rows(spark, path, _DELETE_PRED)
-    if res["version"] is None:
-        raise ValueError(
-            f"store_delete_rows: delete predicate matched nothing at "
-            f"{sf_dir!r} — fixture contract violated"
-        )
-    m = layout.read_manifest(path)
-    m["corpus_fp"] = [n, s]
-    m["lifecycle"] = "deleted"
-    layout._dump_manifest(path, m)
-    return path
 
 
 @register(
@@ -105,7 +52,22 @@ def store_delete_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the find step is ONE pushed-down scan of the live file
     set; the rewrite is touched-files-only; vacuum afterwards is pure
     manifest arithmetic + unlink (expire_snapshots)."""
-    path = _ensure_deleted_store(spark, sf_dir)
+
+    def build(path: str, payload: DataFrame) -> None:
+        layout.append_versioned(
+            payload.filter(F.col("doc_id") % 2 == 0), path, ["doc_id"]
+        )
+        layout.append_versioned(
+            payload.filter(F.col("doc_id") % 2 == 1), path, ["doc_id"]
+        )
+        res = layout.delete_rows(spark, path, _DELETE_PRED)
+        if res["version"] is None:
+            raise ValueError(
+                f"store_delete_rows: delete predicate matched nothing at "
+                f"{sf_dir!r} — fixture contract violated"
+            )
+
+    path = _ensure_lifecycle_store(spark, sf_dir, "deleted", build)
     return (
         layout.read_snapshot(spark, path)
         .select(
@@ -143,32 +105,17 @@ def _diff_lifecycle_build(spark: SparkSession, name: str):
 def _ensure_lifecycle_store(
     spark: SparkSession, sf_dir: str, variant: str, build
 ) -> str:
-    """Shared build-once discipline for the S8 lifecycle queries: the
-    manifest records the corpus fingerprint + a lifecycle marker, so
-    repeat calls (and previously returned lazy read plans) never race a
-    rebuild. `build(path, payload)` runs the variant's append/delete/
-    vacuum sequence."""
-    import shutil
-
+    """The store of one S8 lifecycle `variant`, built at most once per
+    corpus (tables.build_once), so repeat calls and previously returned
+    lazy read plans never race a rebuild. `build(path, payload)` runs
+    the variant's append/delete/vacuum sequence. Returns the store
+    path."""
     docs = t(spark, sf_dir, "documents")
-    fp = docs.groupBy().agg(
-        F.count("*").alias("n"), F.sum("doc_id").alias("s")
-    ).first()
-    n, s = int(fp["n"]), int(fp["s"] or 0)
-    path = _store_home(spark, sf_dir) + f"_{variant}"
-    try:
-        m = layout.read_manifest(path)
-        if m.get("corpus_fp") == [n, s] and m.get("lifecycle") == variant:
-            return path
-    except FileNotFoundError:
-        pass
-    if os.path.isdir(path):
-        shutil.rmtree(path)
-    build(path, docs.select("doc_id", "source", "text"))
-    m = layout.read_manifest(path)
-    m["corpus_fp"] = [n, s]
-    m["lifecycle"] = variant
-    layout._dump_manifest(path, m)
+    path = fixture_home(spark, sf_dir, f"docstore_{variant}")
+    build_once(
+        spark, path, docs, "doc_id",
+        lambda: build(path, docs.select("doc_id", "source", "text")),
+    )
     return path
 
 

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from chess_pos_db_spark.llm import dedup_index as DI
-from chess_pos_db_spark.tables import t
+from chess_pos_db_spark.tables import fingerprint, t
 
 
 def _drop_prefix(spark, *prefixes):
@@ -524,7 +524,7 @@ def test_delete_probe_equals_fresh_build_on_live_corpus(spark, sf_dir):
 
         # meta reflects the live corpus (ensure-style staleness math)
         m = DI._read_meta(spark, "lshdel_inc")
-        n_live, s_live = DI._fingerprint(live)
+        n_live, s_live = fingerprint(live, "doc_id")
         assert (m["n_docs"], m["fp_sum_ids"]) == (n_live, s_live)
 
         # the curation-gate state excludes deleted ids

@@ -151,8 +151,9 @@ def test_entries_storage_density(spark, tmp_path):
     import glob
     import os
     import sys
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from bench_import import make_corpus
     from chess_pos_db_spark.chess import importer
 

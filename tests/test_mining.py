@@ -1054,13 +1054,13 @@ def test_delete_from_index_equals_fresh_build_on_live_corpus(spark, sf_dir):
                 spark.sql(f"DROP TABLE IF EXISTS {name.name}")
 
 
-def test_bm25_deleted_memo_matches_when_delete_slice_is_empty(
+def test_bm25_deleted_builds_once_when_delete_slice_is_empty(
     spark, sf_dir, tmp_path, monkeypatch
 ):
     """A corpus with NO doc_id % 11 == 2 rows makes the registered
     delete-lifecycle query's delete an empty-feed no-op (0 tombstone
-    generations). The build-once memo must still match on the second
-    invocation — an exactly-one-generation requirement would rebuild
+    generations). The second invocation must still find the index
+    built — a check on the lifecycle's generation counts would rebuild
     the index on every call, and a previously returned lazy plan could
     then race the rebuild's drop+rewrite."""
     import os
@@ -1071,6 +1071,7 @@ def test_bm25_deleted_memo_matches_when_delete_slice_is_empty(
 
     import chess_pos_db_spark as engine
     from chess_pos_db_spark.llm import search as S
+    from chess_pos_db_spark.tables import fixture_home
     from chess_pos_db_spark.tables import t as load
 
     mydir = str(tmp_path / "sfno11")
@@ -1078,13 +1079,14 @@ def test_bm25_deleted_memo_matches_when_delete_slice_is_empty(
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 11 != 2)
     docs.write.mode("overwrite").parquet(os.path.join(mydir, "documents.parquet"))
     q = engine.get_queries()["search_bm25_deleted"]
-    prefix = S._index_prefix(mydir) + "_del"
+    home = fixture_home(spark, mydir, "bm25ix_del")
+    prefix = os.path.basename(home)
     try:
         want = [tuple(r) for r in q(spark, mydir).collect()]
         assert S._n_tomb_gens(S._read_meta(spark, prefix)) == 0
 
         def dying(*a, **kw):
-            raise AssertionError("memo missed: index rebuilt on re-invoke")
+            raise AssertionError("index rebuilt on re-invoke")
 
         monkeypatch.setattr(S, "build_inverted_index", dying)
         got = [tuple(r) for r in q(spark, mydir).collect()]
@@ -1094,6 +1096,7 @@ def test_bm25_deleted_memo_matches_when_delete_slice_is_empty(
             if name.name.startswith(prefix):
                 spark.sql(f"DROP TABLE IF EXISTS {name.name}")
         shutil.rmtree(mydir, ignore_errors=True)
+        shutil.rmtree(home, ignore_errors=True)
 
 
 @pytest.mark.slow

@@ -50,23 +50,23 @@ SHUFFLE_BUDGET = {
     "search_phrase_postings": 0,  # per-term bucket probes, broadcast fold
     "search_proximity_postings": 0,  # same access shape as phrase
     # round-8 materialized-index additions (query-path budgets)
-    "dedup_lsh_index_probe": 2,  # batch signature agg + candidate min-agg
-    "dedup_lsh_index_incremental": 3,  # same, over base + delta generations
+    "dedup_lsh_index_probe": 1,  # candidate min-agg (no presentation sort)
+    "dedup_lsh_index_incremental": 2,  # same, over base + delta generations
     "similarity_ivf_layout": 0,  # partition pruning IS the probe
     "similarity_ivf_incremental": 0,  # appended files prune identically
-    "dedup_embedding_incremental": 2,  # cell-join align + per-probe rollup
+    "dedup_embedding_incremental": 1,  # per-probe rollup (no presentation sort)
     # round-8 delete lifecycle (query-path budgets: a pending delete
     # may not add shuffles over the non-delete twin — tombstone and
     # top-2 masks are candidate-sized broadcast anti-joins)
     "store_delete_rows": 0,  # snapshot read, no exchange
     "search_bm25_deleted": 1,  # pruned postings -> doclen join
-    "dedup_lsh_index_delete": 2,  # identical to dedup_lsh_index_probe
+    "dedup_lsh_index_delete": 1,  # identical to dedup_lsh_index_probe
     "similarity_ivf_deleted": 0,  # identical to similarity_ivf_layout
     # round-9 maintenance-lifecycle compositions (query-path budgets:
     # compaction must never ADD query-side shuffles — the compacted
     # index answers with the single-generation plan)
     "search_bm25_maintained": 1,  # identical to search_bm25_postings
-    "dedup_lsh_index_compacted": 2,  # identical to dedup_lsh_index_probe
+    "dedup_lsh_index_compacted": 1,  # identical to dedup_lsh_index_probe
     "similarity_ivf_maintained": 0,  # identical to similarity_ivf_layout
     "agg_view_retracted": 1,  # presentation ORDER BY over the |grain| view
     "store_snapshot_diff": 2,  # full-outer SMJ (2)

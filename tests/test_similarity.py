@@ -329,17 +329,18 @@ def test_ivf_trained_sample_scales_with_k(spark, sf_dir):
         sim._ivf_trained_centroids(spark, sf_dir, k=10_000)
 
 
-def test_ivf_layout_registered_builds_once(spark, sf_dir):
-    """similarity_ivf_layout writes the partitioned layout at most once
-    per corpus (a second call must not rewrite the directories a
-    previously returned plan reads) and its scan partition-prunes to
-    the probe cells."""
+def test_ivf_layout_registered_builds_once_at_fixture_home(spark, sf_dir):
+    """similarity_ivf_layout writes the partitioned layout into its
+    fixture home at most once per corpus (a second call must not
+    rewrite the directories a previously returned plan reads) and its
+    scan partition-prunes to the probe cells."""
     import os
     import re
 
     import chess_pos_db_spark as engine
+    from chess_pos_db_spark.tables import fixture_home
 
-    path, meta_table = sim._ivf_layout_home(spark, sf_dir)
+    path = fixture_home(spark, sf_dir, "ivf_layout")
     try:
         q = engine.get_queries()["similarity_ivf_layout"]
         first = q(spark, sf_dir)
@@ -363,7 +364,6 @@ def test_ivf_layout_registered_builds_once(spark, sf_dir):
         # the earlier plan still collects — nothing rewrote beneath it
         assert [tuple(r) for r in first.collect()] == rows
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {meta_table}")
         import shutil
 
         shutil.rmtree(path, ignore_errors=True)

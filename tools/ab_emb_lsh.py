@@ -21,8 +21,10 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]  # this checkout
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import DataFrame, functions as F
 

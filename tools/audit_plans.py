@@ -20,9 +20,11 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+ROOT = Path(__file__).resolve().parents[1]  # this checkout
+sys.path.insert(0, str(ROOT))
+sys.path.insert(0, str(ROOT / "tools"))
 
 
 def main() -> None:
@@ -98,7 +100,7 @@ def main() -> None:
     ]
     for r in rows:
         lines.append("| " + " | ".join(str(x) for x in r) + " |")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("\n".join(lines) + "\n")
     n_err = sum(1 for r in rows if r[1] == "ERROR")
     n_single = sum(1 for r in rows if r[3] == "!")

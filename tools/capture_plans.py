@@ -12,8 +12,10 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]  # this checkout
+sys.path.insert(0, str(ROOT))
 
 
 def explain_formatted(df) -> str:
@@ -97,7 +99,7 @@ def main() -> None:
 
         names = list(bench.HEADLINE)
 
-    out_dir = os.path.join("/root/repo/plans", tag)
+    out_dir = str(ROOT / "plans" / tag)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("capture-plans")
     queries = engine.get_queries()

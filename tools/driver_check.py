@@ -22,8 +22,10 @@ from __future__ import annotations
 
 import json
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]  # this checkout
+sys.path.insert(0, str(ROOT))
 
 
 def _pandas_canon(rows, cols):

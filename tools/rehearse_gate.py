@@ -14,8 +14,10 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]  # this checkout
+sys.path.insert(0, str(ROOT))
 
 
 def main() -> None:
@@ -37,7 +39,7 @@ def main() -> None:
             "--only",
             ",".join(slate),
         ],
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     sys.exit(proc.returncode)
 

@@ -22,8 +22,10 @@ from __future__ import annotations
 import os
 import shutil
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]  # this checkout
+sys.path.insert(0, str(ROOT))
 
 # cluster posture BEFORE the session is built (getOrCreate caches)
 os.environ.setdefault(

@@ -14,8 +14,10 @@ import json
 import sys
 import threading
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]  # this checkout
+sys.path.insert(0, str(ROOT))
 
 SF_DIR = "/root/testdata/sf0.1"
 TABLES = (
@@ -109,7 +111,7 @@ def main() -> None:
             f"(spark {spark_s}s, duck {duck_s}s)",
             flush=True,
         )
-    with open("/root/repo/SF01_SWEEP.json", "w") as f:
+    with open(ROOT / "SF01_SWEEP.json", "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
     from collections import Counter
 
