@@ -47,7 +47,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..chess import bcgn, importer, query
+from ..chess import bcgn, importer, pgn, query
 
 # bumped on any breaking wire-format change; see module docstring
 PROTOCOL_VERSION = 2
@@ -88,9 +88,28 @@ class Engine:
             )
         return fmt
 
-    def _load_games(self, files: list[tuple[str, str]], fmt: str) -> DataFrame:
+    def _load_games(
+        self,
+        files: list[tuple[str, str]],
+        fmt: str,
+        replay: bool = False,
+        eran: bool = False,
+    ) -> DataFrame:
+        """Game rows from either format; with `replay` (and `eran`) the
+        read tasks replay each game too, as create's reader does
+        (importer.read_splits)."""
         if self._check_format(fmt) == "sbgn":
-            return bcgn.read_sbgn(self.spark, files)
+            return bcgn.read_sbgn(self.spark, files, replay, eran)
+        if replay:
+            return importer._parse_chunked(
+                self.spark,
+                files,
+                pgn.DEFAULT_CHUNK_BYTES,
+                0,
+                importer._lazy_checkpoint,
+                replay,
+                eran,
+            )[0]
         return importer.parse_games_chunked(self.spark, files)
 
     def _require_open(self) -> None:
@@ -184,7 +203,9 @@ class Engine:
                 store_moves=store_moves,
             )
         else:
-            games = self._load_games(files, fmt).cache()
+            games = self._load_games(
+                files, fmt, replay=True, eran=retractions
+            ).cache()
             try:
                 stats = importer.write_database(
                     games, db_dir, retractions, store_moves
@@ -331,7 +352,7 @@ class Engine:
         files = self._files_arg(cmd)
         fmt = cmd.get("format", "pgn")
         start = time.perf_counter()
-        games = self._load_games(files, fmt)
+        games = self._load_games(files, fmt, replay=True)
         row = importer.replay_aggregate(games).agg(
             F.sum("cnt").alias("positions"),
             F.count("*").alias("unique_entries"),

@@ -183,16 +183,35 @@ def _file_games(path: str, start: int, end: int) -> Iterator[tuple[int, dict]]:
         yield i, {**g, "tags": tags}
 
 
-def read_sbgn(spark: SparkSession, paths: list[tuple[str, str]]) -> DataFrame:
+def read_sbgn(
+    spark: SparkSession,
+    paths: list[tuple[str, str]],
+    replay: bool = False,
+    eran: bool = False,
+) -> DataFrame:
     """SBGN files → game rows (importer.GAME_SCHEMA), read by workers at
-    the paths as given, like the PGN source.
+    the paths as given, like the PGN source; with `replay` (and `eran`),
+    each game is also replayed in its decode task and carries
+    importer.REPLAY_FIELDS, as importer.read_splits documents.
 
     SBGN has no game-boundary sync marker to split on, so each file is
     one split (a chunk as large as any file). One split per file makes
     split i file i, so read_splits' (split << 32) | ordinal ids are
-    already (file_idx << 32) | ordinal — no count pass."""
+    already (file_idx << 32) | ordinal — no count pass. Small files
+    share read tasks up to the import's chunk target
+    (importer._chunk_target), the PGN source's packing rule; a large
+    file is one task, and its replay costs a few percent of its decode,
+    which already replays every move through the movegen."""
     import sys
 
-    from .importer import plan_splits, read_splits
+    from .importer import _chunk_target, plan_splits, read_splits, stat_sizes
 
-    return read_splits(spark, plan_splits(paths, sys.maxsize), _file_games)
+    sizes = stat_sizes(paths)
+    return read_splits(
+        spark,
+        plan_splits(paths, sys.maxsize, sizes=sizes),
+        _file_games,
+        _chunk_target(spark, sizes, sys.maxsize),
+        replay,
+        eran,
+    ).drop("split_games")

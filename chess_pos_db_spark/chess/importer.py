@@ -9,10 +9,12 @@ move emitting one entry per position; entries are buffer-sorted,
 pre-aggregated and spilled as sorted runs (AsyncStorePipeline +
 External.h), finally merged.
 
-Spark mapping: the per-game replay is an Arrow-batched mapInPandas
-UDTF (one game row → N position rows); pre-aggregation is the
-automatic map-side partial agg under groupBy; the sorted-run write and
-aggregate-combining merge are plans/layout.py. Game ids are
+Spark mapping: one Arrow-batched mapInPandas pass reads, validates
+and replays each game (the game row carries its positions as arrays),
+the reference's one streaming pass; a JVM posexplode turns the arrays
+into position rows; pre-aggregation is the automatic map-side partial
+agg under groupBy; the sorted-run write and aggregate-combining merge
+are plans/layout.py. Game ids are
 deterministic (file_ordinal << 32 | game_ordinal-in-file), never
 monotonically_increasing_id, so re-imports produce identical ids.
 """
@@ -29,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..plans import layout
+from . import eran as eran_mod
 from . import pgn
 from .board import (
     NO_REVERSE_MOVE,
@@ -36,6 +39,7 @@ from .board import (
     START_FEN,
     captured_piece,
     pack_move,
+    san_move_cached,
 )
 
 GAME_SCHEMA = T.StructType(
@@ -60,6 +64,16 @@ GAME_SCHEMA = T.StructType(
         T.StructField("sans", T.ArrayType(T.StringType()), True),
     ]
 )
+
+# The reader's replay arrays (read_splits with `replay`): per game, the
+# pos_key of every position reached (the start first) and the reverse
+# move into it, plus each move's eran text when the retractions sidecar
+# is kept; null for a game the replay skips.
+REPLAY_FIELDS = [
+    T.StructField("pos_keys", T.ArrayType(T.LongType()), True),
+    T.StructField("reverse_moves", T.ArrayType(T.IntegerType()), True),
+    T.StructField("erans", T.ArrayType(T.StringType()), True),
+]
 
 ENTRY_FIELDS = [
     T.StructField("pos_key", T.LongType(), False),
@@ -151,39 +165,115 @@ def plan_splits(
     ]
 
 
+def _chunk_target(
+    spark: SparkSession, sizes: list[int], chunk_bytes: int
+) -> int:
+    """The import's chunk-size target: `chunk_bytes` is an UPPER bound;
+    a corpus smaller than (2 × parallelism) chunks of that size gets
+    smaller chunks (down to MIN_CHUNK_BYTES) so a single modest file
+    still fans out across the cluster — the adaptive split sizing
+    Spark's own file sources do via maxPartitionBytes."""
+    target_chunks = max(1, 2 * spark.sparkContext.defaultParallelism)
+    return min(
+        chunk_bytes, max(MIN_CHUNK_BYTES, -(-sum(sizes) // target_chunks))
+    )
+
+
+def _pack_splits(splits: list[tuple], pack_bytes: int) -> list[list[int]]:
+    """Consecutive splits grouped greedily into read tasks of at most
+    `pack_bytes` bytes (a larger split is a task of its own): Spark's
+    FilePartition small-file packing rule. Each Python task has a fixed
+    cost that dwarfs a small file's parse and replay, so many small
+    files share tasks; a large file's chunks stay one task each."""
+    tasks: list[list[int]] = []
+    size = 0
+    for i, (*_, start, end) in enumerate(splits):
+        if not tasks or size + (end - start) > pack_bytes:
+            tasks.append([])
+            size = 0
+        tasks[-1].append(i)
+        size += end - start
+    return tasks
+
+
 def read_splits(
     spark: SparkSession,
     splits: list[tuple],
     read: Callable[[str, int, int], Iterator[tuple[int, dict]]],
+    pack_bytes: int,
+    replay: bool = False,
+    eran: bool = False,
 ) -> DataFrame:
     """The game readers' one skeleton: planned splits → game rows
-    (GAME_SCHEMA), one task per split.
+    (GAME_SCHEMA) plus `split_games`, in ONE Python pass.
 
-    The range source puts split i in partition i, so no shuffle spreads
-    them, and the split list rides in the task closure. `read(path,
-    start, end)` yields the split's (key, parsed game) pairs in file
-    order (the key is unused here); each game is tagged game_id =
-    (split << 32) | its ordinal within the split, and rows are built
-    columnar (_games_pdf)."""
+    Consecutive splits share a read task up to `pack_bytes`
+    (_pack_splits). The range source puts task i in partition i, so no
+    shuffle spreads them, and the split list rides in the task closure.
+    `read(path, start, end)` yields the split's (key, parsed game)
+    pairs in file order (the key is unused here); each game is tagged
+    game_id = (split << 32) | its ordinal within the split, whatever
+    the packing, and rows are built columnar (_games_pdf). The last row
+    of each non-empty split carries that split's game count in
+    `split_games` (null elsewhere), so the counts are a filter away.
+
+    `replay` replays every game in the task that read it, through the
+    one kernel (_replay_game, one SAN memo per task), adding REPLAY
+    arrays — `erans` too with `eran` — that replay_aggregate explodes
+    in the JVM; a game with an unknown result or an illegal move gets
+    null arrays."""
     from ..tables import _ship_package
 
     _ship_package(spark)  # the read UDF unpickles package modules on workers
+    tasks = _pack_splits(splits, pack_bytes)
+    split_games = T.StructField("split_games", T.IntegerType())
+    fields = [*GAME_SCHEMA.fields, split_games]
+    if replay:
+        fields += REPLAY_FIELDS[: 3 if eran else 2]
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        memo: dict = {}
         for pdf in it:
 
             def rows():
-                for split in pdf["id"].tolist():
-                    _, path, source_file, level, start, end = splits[split]
-                    game_id = split << 32
-                    for _, g in read(path, start, end):
-                        yield game_id, level, g, source_file
-                        game_id += 1
+                for task in pdf["id"].tolist():
+                    for split in tasks[task]:
+                        _, path, source_file, level, start, end = splits[split]
+                        game_id = split << 32
+                        for _, g in read(path, start, end):
+                            yield game_id, level, g, source_file
+                            game_id += 1
 
-            yield _games_pdf(rows())
+            out = _games_pdf(rows())
+            gids = out["game_id"].tolist()
+            last = [a >> 32 != b >> 32 for a, b in zip(gids, gids[1:])]
+            out["split_games"] = _object_if_empty(
+                [
+                    (g & 0xFFFFFFFF) + 1 if is_last else None
+                    for g, is_last in zip(gids, last + [True])
+                ]
+            )
+            if replay:
+                keys, rms, erans = [], [], []
+                for result, sans in zip(
+                    out["result"].tolist(), out["sans"].tolist()
+                ):
+                    r = (
+                        None
+                        if result is None
+                        else _replay_game(sans, memo, eran)
+                    )
+                    keys.append(None if r is None else [p.key() for p in r[0]])
+                    rms.append(None if r is None else r[1])
+                    erans.append(None if r is None else r[2])
+                out["pos_keys"] = _object_if_empty(keys)
+                out["reverse_moves"] = _object_if_empty(rms)
+                if eran:
+                    out["erans"] = _object_if_empty(erans)
+            yield out
 
-    return spark.range(0, len(splits), 1, len(splits)).mapInPandas(
-        batches, schema=GAME_SCHEMA
+    return spark.range(0, len(tasks), 1, len(tasks)).mapInPandas(
+        batches, schema=T.StructType(fields)
     )
 
 
@@ -193,33 +283,40 @@ def _parse_chunked(
     chunk_bytes: int,
     file_idx_base: int,
     hold: Callable[[DataFrame], DataFrame],
+    replay: bool = False,
+    eran: bool = False,
 ) -> tuple[DataFrame, DataFrame, int]:
     """The chunk-splitting source's ONE Python pass → (games, parsed,
     game count).
 
-    Each split task slices its byte range on game boundaries and parses
-    every game once (read_splits over pgn.chunk_games), tagging it with
-    game_id = (split << 32) | its chunk-local ordinal. `hold` (cache or
-    localCheckpoint) keeps that parse; one groupBy(split) collect over
-    it gives the per-split game counts — one long per chunk, pure
-    metadata. The driver prefix-sums the counts per file into each
+    Each split slices its byte range on game boundaries and parses
+    every game once (read_splits over pgn.chunk_games, small splits
+    packed into shared tasks up to the chunk target), replaying it in
+    the same task when `replay` asks (see read_splits), and tags it
+    with game_id = (split << 32) | its chunk-local ordinal. `hold`
+    (cache or localCheckpoint) keeps that pass; one collect of the
+    rows that carry `split_games` — a filter and project over the held
+    pass, with no shuffle — gives the per-split game counts and fills
+    the hold. The driver prefix-sums the counts per file into each
     split's first ordinal (the zipWithIndex pattern), and `games`
     rebases every id to (file_idx << 32) | (first + local): IDENTICAL
     to the ids of a sequential pgn.parse_file over each whole file, so
-    chunking is invisible in output. `games` reads `parsed`; the caller
-    releases `parsed`. The third value is the parsed game count."""
+    chunking and packing are invisible in output. `games` reads
+    `parsed`; the caller releases `parsed`. The third value is the
+    parsed game count."""
     # ONE concurrent stat round over the import list, shared by the
     # adaptive-chunk sizing and the split planning (guide §5).
     sizes = stat_sizes(files)
-    target_chunks = max(1, 2 * spark.sparkContext.defaultParallelism)
-    eff_chunk = min(
-        chunk_bytes, max(MIN_CHUNK_BYTES, -(-sum(sizes) // target_chunks))
-    )
+    eff_chunk = _chunk_target(spark, sizes, chunk_bytes)
     splits = plan_splits(files, eff_chunk, file_idx_base, sizes=sizes)
-    parsed = hold(read_splits(spark, splits, pgn.chunk_games))
+    parsed = hold(
+        read_splits(spark, splits, pgn.chunk_games, eff_chunk, replay, eran)
+    )
     split_col = F.shiftright("game_id", 32)
     n_by_split = dict(
-        parsed.groupBy(split_col.alias("split")).count().collect()
+        parsed.filter(F.col("split_games").isNotNull())
+        .select(split_col, "split_games")
+        .collect()
     )
     offsets = []  # per split: (file_idx << 32) + its first game ordinal
     prev_file, first = None, 0
@@ -228,7 +325,7 @@ def _parse_chunked(
             prev_file, first = file_idx, 0
         offsets.append((file_idx << 32) + first)
         first += n_by_split.get(split, 0)
-    games = parsed.withColumn(
+    games = parsed.drop("split_games").withColumn(
         "game_id",
         F.element_at(
             F.from_json(F.lit(json.dumps(offsets)), "array<bigint>"),
@@ -237,6 +334,10 @@ def _parse_chunked(
         + F.col("game_id").bitwiseAND(0xFFFFFFFF),
     )
     return games, parsed, sum(n_by_split.values())
+
+
+def _lazy_checkpoint(df: DataFrame) -> DataFrame:
+    return df.localCheckpoint(eager=False)
 
 
 def parse_games_chunked(
@@ -254,25 +355,19 @@ def parse_games_chunked(
     reads every PGN byte in ONE distributed Python pass: each chunk is
     parsed once, and game ids are rebased from the per-chunk game
     counts that pass yields (see _parse_chunked). The parse itself is
-    embarrassingly parallel; the one shuffle is that count's tiny
-    groupBy(split), one row per chunk.
+    embarrassingly parallel, and the count is a shuffle-free collect.
 
-    `chunk_bytes` is an UPPER bound: when the corpus is smaller than
-    (2 × parallelism) chunks of that size, chunks shrink (down to
-    MIN_CHUNK_BYTES) so a single modest file still fans out across the
-    cluster — the same adaptive split sizing Spark's own file sources
-    do via maxPartitionBytes.
+    `chunk_bytes` is an UPPER bound (see _chunk_target): a single
+    modest file still fans out across the cluster, and small files
+    share read tasks.
 
     The parse is local-checkpointed, so the returned frame reads it
     rather than parsing again; Spark frees it with the frame.
     import_pgn/append_pgn instead cache it and release it themselves.
+    Rows are exactly GAME_SCHEMA: this reader does not replay.
     """
     return _parse_chunked(
-        spark,
-        files,
-        chunk_bytes,
-        file_idx_base,
-        lambda df: df.localCheckpoint(eager=False),
+        spark, files, chunk_bytes, file_idx_base, _lazy_checkpoint
     )[0]
 
 
@@ -322,6 +417,46 @@ def _games_pdf(rows) -> pd.DataFrame:
     return pd.DataFrame({k: _object_if_empty(v) for k, v in cols.items()})
 
 
+def _replay_game(sans: list[str], memo: dict, eran: bool):
+    """The import's one replay kernel: a game's SAN moves → (positions,
+    reverse moves, eran texts), one per position reached — the start
+    position first, with NO_REVERSE_MOVE and no eran; eran texts only
+    with `eran`, else None. None when a move is illegal or malformed:
+    validation by parsing skips the game whole.
+
+    `memo` is the (pos_key, san) → move memo (board.san_move_cached),
+    shared across every game a task replays: the opening tree repeats
+    across games, so the hot plies skip SAN candidate generation and
+    the legality attack scan (make_move still runs — counters stay
+    exact)."""
+    pos = Position.from_fen(START_FEN)
+    positions, rms = [pos], [NO_REVERSE_MOVE]
+    erans = [None] if eran else None
+    for san in sans:
+        # (ValueError, KeyError): illegal/ambiguous SAN raises
+        # ValueError; a malformed-but-parsed move reaching
+        # pack_move/eran can KeyError — either way the
+        # validation-by-parsing contract is SKIP the game, never kill
+        # the whole import task
+        try:
+            m, child = san_move_cached(pos, san, memo)
+            packed = pack_move(m, captured_piece(pos, m))
+            # eran text must be computed INSIDE the try: describe()
+            # walks the same move/piece tables as pack_move and can
+            # raise on a malformed-but-parsed move — outside the block
+            # it would kill the whole import task instead of skipping
+            # the game
+            ern = eran_mod.describe(pos, m).text() if eran else None
+        except (ValueError, KeyError):
+            return None  # invalid move → skip whole game
+        rms.append(packed)
+        if eran:
+            erans.append(ern)
+        pos = child
+        positions.append(pos)
+    return positions, rms, erans
+
+
 def explode_positions(
     games_df: DataFrame,
     include_positions: bool = False,
@@ -330,7 +465,8 @@ def explode_positions(
     """Game rows → entry rows: one per position reached (including the
     start position, reverse_move = NO_REVERSE_MOVE). Games with unknown
     result or an illegal move are skipped whole — the reference's
-    validation-by-parsing.
+    validation-by-parsing. The replay is _replay_game, the kernel the
+    import's reader runs in its own tasks.
 
     W1 note: the reverse move IS the lag of the move sequence — each
     emitted position carries the move that produced it.
@@ -349,30 +485,14 @@ def explode_positions(
     schema = T.StructType(fields)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from . import eran as eran_mod
-        from .board import san_move_cached
-
-        # (pos_key, san) → move memo, shared across every game this
-        # worker replays: the opening tree repeats across games, so the
-        # hot plies skip SAN candidate generation + the legality attack
-        # scan entirely (make_move still runs — counters stay exact).
-        san_cache: dict = {}
-
+        memo: dict = {}
         for pdf in it:
             # Columnar accumulation: one python list per output column,
             # extended game-at-a-time. The previous dict-per-position +
             # DataFrame-from-records shape was the measured end-to-end
             # bottleneck at ~50 positions/game (13M dict builds per
             # bench run dwarfed the replay kernel itself).
-            pos_keys: list = []
-            rmoves: list = []
-            plys: list = []
-            levels: list = []
-            results: list = []
-            gids: list = []
-            elos: list = []
-            pos_cmps: list = []
-            erans: list = []
+            data: dict = {f.name: [] for f in fields}
             for result, we, be, level, gid, sans in zip(
                 pdf["result"].tolist(),
                 pdf["white_elo"].tolist(),
@@ -383,6 +503,10 @@ def explode_positions(
             ):
                 if result is None or pd.isna(result):
                     continue  # unknown result → skip (reference behavior)
+                replay = _replay_game(sans, memo, include_eran)
+                if replay is None:
+                    continue
+                positions, rms, erans = replay
                 elo_diff = (
                     int(we - be)
                     if we is not None
@@ -390,72 +514,21 @@ def explode_positions(
                     and not (pd.isna(we) or pd.isna(be))
                     else None
                 )
-                pos = Position.from_fen(START_FEN)
-                g_keys = [pos.key()]
-                g_rm = [NO_REVERSE_MOVE]
-                g_cmp = [pos.compress()] if include_positions else None
-                g_ern = [None] if include_eran else None
-                ok = True
-                for san in sans:
-                    # (ValueError, KeyError): illegal/ambiguous SAN
-                    # raises ValueError; a malformed-but-parsed move
-                    # reaching pack_move/eran can KeyError — either way
-                    # the validation-by-parsing contract is SKIP the
-                    # game, never kill the whole import task
-
-                    try:
-                        m, child = san_move_cached(pos, san, san_cache)
-                        packed = pack_move(m, captured_piece(pos, m))
-                        # eran text must be computed INSIDE the try:
-                        # describe() walks the same move/piece tables as
-                        # pack_move and can raise on a malformed-but-
-                        # parsed move — outside the block it would kill
-                        # the whole import task instead of skipping the
-                        # game
-                        ern = (
-                            eran_mod.describe(pos, m).text()
-                            if include_eran
-                            else None
-                        )
-                    except (ValueError, KeyError):
-                        ok = False  # invalid move → skip whole game
-                        break
-                    g_rm.append(packed)
-                    if include_eran:
-                        g_ern.append(ern)
-                    pos = child
-                    g_keys.append(pos.key())
-                    if include_positions:
-                        g_cmp.append(pos.compress())
-                if ok:
-                    n = len(g_keys)
-                    pos_keys.extend(g_keys)
-                    rmoves.extend(g_rm)
-                    plys.extend(range(n))
-                    levels.extend([level] * n)
-                    results.extend([result] * n)
-                    gids.extend([int(gid)] * n)
-                    elos.extend([elo_diff] * n)
-                    if include_positions:
-                        pos_cmps.extend(g_cmp)
-                    if include_eran:
-                        erans.extend(g_ern)
-            data = {
-                "pos_key": pos_keys,
-                "reverse_move": rmoves,
-                "level": levels,
-                "result": results,
-                "game_id": gids,
-                "ply": plys,
-                "elo_diff": elos,
-            }
-            if include_positions:
-                data["pos_cmp"] = pos_cmps
-            if include_eran:
-                data["eran"] = erans
+                n = len(positions)
+                data["pos_key"].extend(p.key() for p in positions)
+                data["reverse_move"].extend(rms)
+                data["level"].extend([level] * n)
+                data["result"].extend([result] * n)
+                data["game_id"].extend([int(gid)] * n)
+                data["ply"].extend(range(n))
+                data["elo_diff"].extend([elo_diff] * n)
+                if include_positions:
+                    data["pos_cmp"].extend(p.compress() for p in positions)
+                if include_eran:
+                    data["eran"].extend(erans)
             # column order must match the declared schema
             yield pd.DataFrame(
-                {f.name: _object_if_empty(data[f.name]) for f in schema.fields}
+                {f.name: _object_if_empty(data[f.name]) for f in fields}
             )
 
     return games_df.mapInPandas(batches, schema=schema)
@@ -476,24 +549,43 @@ def build_agg_entries(entries_df: DataFrame) -> DataFrame:
     )
 
 
-def replay_aggregate(
-    games: DataFrame, eran: bool = False, n_games: int | None = None
-) -> DataFrame:
-    """The one entry-table derivation: games → replay → raw aggregate
-    (keyed by `eran` too when the retractions sidecar is kept).
+def replay_aggregate(games: DataFrame, eran: bool = False) -> DataFrame:
+    """The one entry-table derivation: games carrying the reader's
+    replay arrays (read_splits with `replay`) → raw aggregate (keyed by
+    `eran` too when the retractions sidecar is kept).
 
-    Replay parallelism must not be bound by file or chunk count (one
-    giant PGN, or a small appended file, would otherwise replay on one
-    core): games spread across cores before the python-side replay, the
-    import's hot path. `n_games`, a count the caller already holds,
-    caps the spread at one game per task, so a small create or append
-    schedules no empty Python-worker tasks. Ids are assigned before
-    this, so the repartition cannot affect them."""
-    parts = games.sparkSession.sparkContext.defaultParallelism
-    if n_games is not None:
-        parts = max(1, min(parts, n_games))
-    spread = games.repartition(parts)
-    return build_agg_entries(explode_positions(spread, include_eran=eran))
+    The replay already ran in the task that read each game, so this is
+    JVM work only: a posexplode of the arrays (a game with null arrays,
+    skipped by the replay, emits nothing) plus build_agg_entries. No
+    repartition: replay parallelism is the read-task count, and the
+    aggregate's shuffle is the only exchange."""
+    idx = F.col("ply")
+    entries = games.select(
+        "level",
+        "result",
+        "game_id",
+        (F.col("white_elo") - F.col("black_elo")).alias("elo_diff"),
+        "reverse_moves",
+        *(["erans"] if eran else []),
+        F.posexplode("pos_keys").alias("ply", "pos_key"),
+    ).select(
+        "pos_key",
+        F.col("reverse_moves")[idx].alias("reverse_move"),
+        "level",
+        "result",
+        "game_id",
+        "elo_diff",
+        *([F.col("erans")[idx].alias("eran")] if eran else []),
+    )
+    return build_agg_entries(entries)
+
+
+def _stored_games(games: DataFrame, moves: bool) -> DataFrame:
+    """The stored games dimension: GAME_SCHEMA's columns, without the
+    SAN movetext unless the database keeps it (store_moves)."""
+    return games.select(
+        *[f.name for f in GAME_SCHEMA.fields if moves or f.name != "sans"]
+    )
 
 
 def _write_table(
@@ -523,18 +615,17 @@ def _replay_and_write(
     retractions: bool,
     partitions: int | None,
     append: bool,
-    n_games: int,
     metrics: tuple | None = None,
 ) -> None:
-    """Replay `games` once and write entries/ (and the retractions/
-    sidecar) from that one aggregate. `n_games` caps the replay spread
-    (replay_aggregate); `metrics` observes the entries write.
+    """Aggregate `games`' replay arrays once and write entries/ (and
+    the retractions/ sidecar) from that one aggregate; `metrics`
+    observes the entries write.
 
     With the sidecar the aggregate is keyed by eran too and persisted,
     because it feeds two writes; its eran grain rolls up inside the
     entries combine (the combine is associative). Without the sidecar
     nothing is persisted: the aggregate's shuffle is materialised once,
-    before the range write samples it, so the replay still runs once.
+    before the range write samples it, so the explode still runs once.
 
     `append` adds the live table to each combine and writes into a tmp
     dir that then replaces the live one rename-first (`_swap_dir`):
@@ -551,7 +642,7 @@ def _replay_and_write(
         else:
             _write_table(name, [new], path, partitions, metrics)
 
-    pre = replay_aggregate(games, eran=retractions, n_games=n_games)
+    pre = replay_aggregate(games, eran=retractions)
     if retractions:
         pre = pre.persist()
     put("entries", pre, metrics)
@@ -568,10 +659,13 @@ def write_database(
     partitions: int | None = None,
 ) -> dict:
     """`create`'s write for games from either reader (read_splits under
-    the chunked PGN parse or bcgn.read_sbgn): games/ + entries/ (+
-    retractions/) sorted runs with manifests. Returns the import report, observed on the
-    writes themselves. `games` is read twice, stored and replayed, so
-    the caller holds it (cache) and releases it.
+    the chunked PGN parse or bcgn.read_sbgn), read with `replay` (and
+    `eran` when `retractions`): games/ + entries/ (+ retractions/)
+    sorted runs with manifests. Returns the import report, observed on
+    the writes themselves. `games` is read twice, stored and
+    aggregated, so the caller holds it (cache) and releases it; the
+    read's one Python pass then runs once, and neither write starts a
+    Python task.
 
     Games dropped for invalid/illegal moves are VISIBLE in the report,
     not silently absent: every replayed game contributes exactly one
@@ -580,9 +674,8 @@ def write_database(
     start cannot inflate this), so the imported-game count is that row
     group's cnt."""
     g_obs, e_obs = Observation(), Observation()
-    stored_games = games if store_moves else games.drop("sans")
     layout.write_sorted_run(
-        stored_games,
+        _stored_games(games, store_moves),
         f"{db_dir}/games",
         key=["game_id"],
         partitions=partitions,
@@ -601,7 +694,6 @@ def write_database(
         retractions,
         partitions,
         append=False,
-        n_games=g_obs.get["games"],
         metrics=(
             e_obs,
             F.sum("cnt").alias("positions"),
@@ -644,9 +736,14 @@ def import_pgn(
     dimension, enabling lossless PGN export (``export_pgn``) — full
     database migration, a capability the reference's header-only store
     never had. Default False matches the reference's posture (headers
-    only; movetext exists only as exploded positions)."""
+    only; movetext exists only as exploded positions).
+
+    The import is one Python stage: each read task parses and replays
+    its games (_parse_chunked with `replay`), and the cached pass feeds
+    the count, the games write and the entries aggregate."""
     games, parsed, _ = _parse_chunked(
-        spark, files, chunk_bytes, 0, DataFrame.cache
+        spark, files, chunk_bytes, 0, DataFrame.cache, replay=True,
+        eran=retractions,
     )
     try:
         return write_database(
@@ -703,6 +800,9 @@ def append_pgn(
     live entries table straight from memory into one compacted sorted
     run, which replaces the live table rename-first — the same
     combine-and-write step as create and merge (see _replay_and_write).
+    As in import_pgn, the appended files are parsed and replayed in one
+    Python stage whose read tasks are the replay's parallelism: a small
+    appended file is one Python task.
 
     Appended files continue the database's file-ordinal sequence (next
     free file_idx from the existing games table), so game_ids never
@@ -732,25 +832,22 @@ def append_pgn(
     prev_games = spark.read.parquet(f"{db_dir}/games")
     prev_max = prev_games.agg(F.max(F.shiftright("game_id", 32))).first()[0]
     next_file_idx = int(prev_max) + 1 if prev_max is not None else 0
-    # the cached parse feeds BOTH the stored-games append and the replay
-    games, parsed, n_games = _parse_chunked(
-        spark, files, chunk_bytes, next_file_idx, DataFrame.cache
+    retractions = os.path.isdir(f"{db_dir}/retractions")
+    # the cached parse-and-replay pass feeds BOTH the stored-games
+    # append and the entries aggregate
+    games, parsed, _ = _parse_chunked(
+        spark, files, chunk_bytes, next_file_idx, DataFrame.cache,
+        replay=True, eran=retractions,
     )
     # Match the database's fidelity mode: a store_moves database keeps
     # movetext for appended games too (otherwise export_pgn would
     # silently lose every appended game's moves); a header-only
     # database stays header-only.
     keeps_moves = "sans" in prev_games.columns
-    stored_games = games if keeps_moves else games.drop("sans")
-    stored_games.write.mode("append").parquet(f"{db_dir}/games")
-    _replay_and_write(
-        games,
-        db_dir,
-        os.path.isdir(f"{db_dir}/retractions"),
-        partitions,
-        append=True,
-        n_games=n_games,
+    _stored_games(games, keeps_moves).write.mode("append").parquet(
+        f"{db_dir}/games"
     )
+    _replay_and_write(games, db_dir, retractions, partitions, append=True)
     parsed.unpersist()
     return {"db_dir": db_dir, "file_idx_base": next_file_idx}
 

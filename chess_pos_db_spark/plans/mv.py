@@ -612,7 +612,7 @@ def agg_view_retracted(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.col(_mcol("count", "*")).alias("cnt"),
         F.col(_mcol("sum", "n_chars")).alias("total"),
-    ).orderBy("source", "lang")
+    )
 
 
 # the advance lifecycle's slices (bounded like the retraction query so
@@ -683,4 +683,4 @@ def agg_view_advanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return rolled.select(
         "source", "lang", "cnt", F.col("total").cast("long").alias("total")
-    ).orderBy("source", "lang")
+    )

@@ -163,6 +163,83 @@ def test_chunked_entries_match_many_small_files(spark, tmp_path):
     assert one == many
 
 
+ILLEGAL_GAME = (
+    '[Event "Illegal"]\n[Result "1-0"]\n\n1. e4 e5 2. Ke3 Nc6 1-0\n\n'
+)
+
+
+def _agg_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("chunk_bytes", [512, 1 << 30])
+def test_reader_replay_equals_explode_positions(spark, tmp_path, chunk_bytes):
+    """The replay the read tasks run is explode_positions' replay: over
+    one split and over many, with an illegal-move game and
+    unknown-result games in the corpus, replay_aggregate of the
+    reader's arrays equals the aggregate of explode_positions over the
+    same games, for entries and for the eran grain of the sidecar; the
+    import report still counts the skipped and the dropped games."""
+    from pyspark.sql import DataFrame
+
+    p = tmp_path / "mixed.pgn"
+    p.write_text(ILLEGAL_GAME + _corpus())
+    files = [(str(p), "human")]
+    games, parsed, n_games = importer._parse_chunked(
+        spark, files, chunk_bytes, 0, DataFrame.cache, replay=True, eran=True
+    )
+    try:
+        assert n_games == 41
+        assert (parsed.rdd.getNumPartitions() > 1) == (chunk_bytes == 512)
+        plain = games.select(*importer.GAME_SCHEMA.fieldNames())
+        for eran in (False, True):
+            want = importer.build_agg_entries(
+                importer.explode_positions(plain, include_eran=eran)
+            )
+            got = importer.replay_aggregate(games, eran)
+            assert _agg_rows(got) == _agg_rows(want), eran
+    finally:
+        parsed.unpersist()
+    stats = importer.import_pgn(
+        spark, files, str(tmp_path / "db"), chunk_bytes=chunk_bytes,
+        retractions=True,
+    )
+    assert stats["games"] == 41
+    assert stats["skipped"] == _corpus().count('Result "*"')
+    assert stats["dropped_invalid"] == 1
+
+
+def test_small_files_share_read_tasks(spark, tmp_path, monkeypatch):
+    """Consecutive small files pack into shared read tasks up to the
+    chunk target — at most ceil(total bytes / target) tasks for files
+    far smaller than it — and packing leaves every game id equal to the
+    sequential oracle's."""
+    smalls = []
+    for i, g in enumerate(pgn.split_games(_corpus(24))):
+        sp = tmp_path / f"g{i:03d}.pgn"
+        sp.write_text(g + "\n")
+        smalls.append((str(sp), "human"))
+    sizes = importer.stat_sizes(smalls)
+    reads = []
+    real = importer.read_splits
+
+    def spy(*args, **kwargs):
+        reads.append(real(*args, **kwargs))
+        return reads[-1]
+
+    monkeypatch.setattr(importer, "read_splits", spy)
+    seq = _rows(_sequential(spark, smalls))
+    for chunk_bytes in (pgn.DEFAULT_CHUNK_BYTES, 1000):
+        chk = importer.parse_games_chunked(spark, smalls, chunk_bytes)
+        assert _rows(chk) == seq, chunk_bytes
+        target = importer._chunk_target(spark, sizes, chunk_bytes)
+        tasks = reads[-1].rdd.getNumPartitions()
+        if chunk_bytes == 1000:
+            assert 1 < tasks < len(smalls), tasks
+        else:
+            assert tasks <= -(-sum(sizes) // target), tasks
+
+
 def test_import_pgn_uses_chunked_source(spark, tmp_path):
     """End-to-end create with a tiny chunk size: stats identical to the
     known fixture expectations (4 games, 1 skipped, 14 positions)."""
@@ -216,9 +293,9 @@ def test_chunk_parse_has_no_exchange(spark, tmp_path):
 
 
 def test_import_pgn_job_budget(spark, tmp_path):
-    """One parse pass, and a report observed on the writes rather than
-    re-read: a create of the test_chess corpus runs at most 10 Spark
-    jobs."""
+    """One parse-and-replay pass, split counts collected without a
+    shuffle, and a report observed on the writes rather than re-read: a
+    create of the test_chess corpus runs at most 7 Spark jobs."""
     from .test_chess import PGN_TEXT
 
     p = tmp_path / "games.pgn"
@@ -233,7 +310,7 @@ def test_import_pgn_job_budget(spark, tmp_path):
         jobs = sc.statusTracker().getJobIdsForGroup("import-job-budget")
         sc.setJobGroup("", "")
     assert stats["positions"] == 14
-    assert len(jobs) <= 10, len(jobs)
+    assert len(jobs) <= 7, len(jobs)
 
 
 def test_scanner_positions_unit():

@@ -162,7 +162,7 @@ def test_special_moves_explicit():
     assert eran.unmove(p3.make_move(m3), desc3).fen() == p3.fen()
 
 
-def test_explode_positions_eran_inside_skip_guard():
+def test_replay_game_eran_inside_skip_guard():
     """The validation-by-parsing contract says a malformed-but-parsed
     move SKIPS the game, never kills the import task.  eran describe()
     walks the same move/piece tables as pack_move and can raise on such
@@ -176,7 +176,7 @@ def test_explode_positions_eran_inside_skip_guard():
 
     from chess_pos_db_spark.chess import importer
 
-    tree = ast.parse(inspect.getsource(importer.explode_positions))
+    tree = ast.parse(inspect.getsource(importer._replay_game))
 
     describe_calls = []
     guarded_spans = []

@@ -68,7 +68,8 @@ SHUFFLE_BUDGET = {
     "search_bm25_maintained": 1,  # identical to search_bm25_postings
     "dedup_lsh_index_compacted": 1,  # identical to dedup_lsh_index_probe
     "similarity_ivf_maintained": 0,  # identical to similarity_ivf_layout
-    "agg_view_retracted": 1,  # presentation ORDER BY over the |grain| view
+    "agg_view_retracted": 0,  # the view read, no presentation sort
+    "agg_view_advanced": 1,  # the (source, lang) roll-up, no presentation sort
     "store_snapshot_diff": 2,  # full-outer SMJ (2)
     "store_vacuumed": 0,  # identical read shape to store_delete_rows
     "store_cdc_export": 0,  # log read

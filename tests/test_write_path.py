@@ -6,6 +6,7 @@ costs."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -74,11 +75,11 @@ def test_sbgn_create_equals_pgn_create(spark, tmp_path):
         assert {r[0] for r in sources.collect()} == {sbgn_path}
 
 
-@pytest.mark.parametrize("retractions,budget", [(False, 11), (True, 17)])
+@pytest.mark.parametrize("retractions,budget", [(False, 9), (True, 13)])
 def test_sbgn_create_job_budget(spark, tmp_path, retractions, budget):
-    """The sbgn read is a range source feeding the decode, with no
-    listing or count job of its own: an Engine sbgn create, counting
-    its open, runs at most 11 jobs (17 with the sidecar)."""
+    """The sbgn read is a range source feeding the decode and replay,
+    with no listing or count job of its own: an Engine sbgn create,
+    counting its open, runs at most 9 jobs (13 with the sidecar)."""
     sbgn_path = str(tmp_path / "g.sbgn")
     bcgn.write_file(_games(), sbgn_path)
     eng = server.Engine(spark)
@@ -99,11 +100,11 @@ def test_sbgn_create_job_budget(spark, tmp_path, retractions, budget):
     assert n <= budget, n
 
 
-@pytest.mark.parametrize("retractions,budget", [(False, 13), (True, 19)])
+@pytest.mark.parametrize("retractions,budget", [(False, 10), (True, 16)])
 def test_append_job_budget(spark, tmp_path, retractions, budget):
     """Append compacts from memory: no staging run is written and read
-    back, and the replay aggregate is persisted only when it feeds the
-    sidecar too."""
+    back, the split counts are a shuffle-free collect, and the replay
+    aggregate is persisted only when it feeds the sidecar too."""
     db = _import(spark, tmp_path, "db", retractions)
     q = tmp_path / "more.pgn"
     q.write_text(PGN_TEXT)
@@ -147,26 +148,82 @@ def test_entry_tables_are_pos_key_runs(spark, tmp_path):
             assert key == ["pos_key"], (verb, t, key)
 
 
-def test_one_game_append_replays_in_one_partition(
-    spark, tmp_path, monkeypatch
-):
-    """The replay spread is capped by the game count append already
-    holds from its parse: a 1-game append replays in one partition, not
-    defaultParallelism mostly empty Python-worker tasks."""
-    if spark.sparkContext.defaultParallelism < 2:
-        pytest.skip("needs defaultParallelism >= 2")
-    db = _import(spark, tmp_path, "db", retractions=False)
+def _python_ops(spark, fn) -> set:
+    """The distinct MapInPandas operators in the executed plans of the
+    SQL executions `fn` runs, read from the SQL status store: each is
+    named by its UDF and expression id, so a held pass that several
+    executions read counts once."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions() -> dict:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        lst = store.executionsList()
+        return {
+            lst.apply(i).executionId(): lst.apply(i) for i in range(lst.size())
+        }
+
+    before = set(executions())
+    fn()
+    ops = set()
+    for eid, e in executions().items():
+        if eid not in before:
+            ops |= set(
+                re.findall(
+                    r"\(\d+\) MapInPandas\s*\nInput [^\n]*\n"
+                    r"Arguments: ([^,]+),",
+                    e.physicalPlanDescription(),
+                )
+            )
+    return ops
+
+
+def test_import_runs_one_python_stage(spark, tmp_path, monkeypatch):
+    """Each read task parses and replays its games: a create runs one
+    MapInPandas, the entry aggregate is JVM work over the reader's
+    arrays with no spread of its own, and a one-file append reads (and
+    so replays) in one task."""
+    p = tmp_path / "g.pgn"
+    p.write_text(PGN_TEXT)
+    files = [(str(p), "human")]
+    for retractions in (False, True):
+        ops = _python_ops(
+            spark,
+            lambda: importer.import_pgn(
+                spark, files, str(tmp_path / f"db{retractions}"),
+                retractions=retractions,
+            ),
+        )
+        assert len(ops) == 1, ops
+
+    games, _, _ = importer._parse_chunked(
+        spark, files, 1 << 20, 0, lambda df: df.localCheckpoint(),
+        replay=True, eran=True,
+    )
+    for eran in (False, True):
+        plan = (
+            importer.replay_aggregate(games, eran)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+        assert "MapInPandas" not in plan, plan
+        assert "RoundRobinPartitioning" not in plan, plan
+        assert "REPARTITION_BY_NUM" not in plan, plan
+
     one = tmp_path / "one.pgn"
     one.write_text(PGN_TEXT.split("\n\n[")[0] + "\n")
-    seen = []
-    real = importer.replay_aggregate
+    reads = []
+    real = importer.read_splits
 
     def spy(*args, **kwargs):
-        seen.append(real(*args, **kwargs))
-        return seen[-1]
+        reads.append(real(*args, **kwargs))
+        return reads[-1]
 
-    monkeypatch.setattr(importer, "replay_aggregate", spy)
-    importer.append_pgn(spark, [(str(one), "engine")], db)
-    (agg,) = seen
-    plan = agg._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange SinglePartition, REPARTITION_BY_NUM" in plan, plan
+    monkeypatch.setattr(importer, "read_splits", spy)
+    db = str(tmp_path / "dbFalse")
+    ops = _python_ops(
+        spark, lambda: importer.append_pgn(spark, [(str(one), "engine")], db)
+    )
+    assert len(ops) == 1, ops
+    (read,) = reads
+    assert read.rdd.getNumPartitions() == 1
