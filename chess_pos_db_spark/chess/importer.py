@@ -624,8 +624,11 @@ def _replay_and_write(
     With the sidecar the aggregate is keyed by eran too and persisted,
     because it feeds two writes; its eran grain rolls up inside the
     entries combine (the combine is associative). Without the sidecar
-    nothing is persisted: the aggregate's shuffle is materialised once,
-    before the range write samples it, so the explode still runs once.
+    nothing is persisted, and a create writes the aggregate as it is:
+    it already holds one row per AGG_KEY in ENTRY_COMBINE's columns, so
+    a combine would group the same rows by the same key again. The
+    aggregate's shuffle is materialised once, before the range write
+    samples it, so the explode still runs once.
 
     `append` adds the live table to each combine and writes into a tmp
     dir that then replaces the live one rename-first (`_swap_dir`):
@@ -639,8 +642,13 @@ def _replay_and_write(
             live = spark.read.parquet(path)
             _write_table(name, [new, live], tmp, partitions)
             _swap_dir(path, tmp)
-        else:
+        elif retractions:
             _write_table(name, [new], path, partitions, metrics)
+        else:
+            layout.write_sorted_run(
+                new, path, key=["pos_key"], partitions=partitions,
+                metrics=metrics,
+            )
 
     pre = replay_aggregate(games, eran=retractions)
     if retractions:

@@ -218,15 +218,16 @@ def maintain_indexes(
 
 def store_version_pressure(path: str) -> dict:
     """The versioned store's due-check input — ONE manifest read:
-    live/total snapshot counts and each registered CDC export's lag
-    behind the latest version."""
+    `live_versions`, the number of version dirs the latest snapshot's
+    files span (the runs one read opens), the total snapshot count, and
+    each registered CDC export's lag behind the latest version."""
     from ..plans import layout
 
     m = layout.read_manifest(path)
-    live = layout._live_snapshot_ids(m)
-    latest = max(s["id"] for s in m["snapshots"])
+    head = layout._snapshot(path, m)
+    latest = head["id"]
     return {
-        "live_versions": len(live),
+        "live_versions": len({os.path.dirname(f) for f in head["files"]}),
         "total_versions": len(m["snapshots"]),
         "export_lag": {
             d: latest - lv for d, lv in m.get("exports", {}).items()
@@ -250,11 +251,11 @@ def maintain_stores(
     loud boundary is "no spec, no compaction").
 
     Per store, in order:
-    - COMPACT when live snapshot versions exceed ``max_live_versions``
-      (each live version is one more file set every read unions, the
-      same per-query pressure as index delta generations). The merge
-      is the store's own aggregate-combining compaction; its manifest
-      append is the commit point.
+    - COMPACT when the latest snapshot's files span more than
+      ``max_live_versions`` version dirs (each is one more run every
+      read unions, the same per-query pressure as index delta
+      generations). The merge is the store's own aggregate-combining
+      compaction; its manifest append is the commit point.
     - VACUUM (``expire_snapshots`` up to ``latest -
       keep_history_versions``) to reclaim superseded files. The
       default 0 vacuums to the latest version — maximal reclaim,
@@ -316,7 +317,7 @@ def maintain_stores(
             r["compacted"] = True
         if vacuum:
             m = layout.read_manifest(path)
-            latest = max(layout._live_snapshot_ids(m))
+            latest = layout._snapshot(path, m)["id"]
             before = max(1, latest - keep_history_versions)
             try:
                 r["vacuumed_files"] = len(

@@ -14,29 +14,30 @@ same shared-bytes/forked-manifest economics, Spark-hosted).
 Design — a branch IS a store:
 
 - ``create_branch`` writes a child manifest under
-  ``<store>/_branches/<name>/`` whose copied snapshot entries
-  reference the parent's version dirs by RELATIVE path (``../../vN``).
+  ``<store>/_branches/<name>/`` whose copied snapshot entries list
+  the parent's files by RELATIVE path (``../../vN/part-….parquet``).
   Zero bytes move. Because the branch dir is a complete store layout,
   EVERY existing verb — read_snapshot, time travel, append_versioned,
   upsert_rows, delete_rows, compact_versioned, snapshot_diff,
   export_changes — works on the branch path with no new code: new
-  branch commits write branch-local version dirs, untouched files
-  carry by reference into the parent's dirs.
+  branch commits write branch-local version dirs, and untouched
+  parent files stay on the new entries' lists by reference.
 - Vacuum safety is two-sided (plans/layout.expire_snapshots): a
-  branch vacuum never deletes parent-owned (``../``) files — the
-  bytes are the parent's to reclaim; a parent vacuum treats every
-  live branch as a GC ROOT at its fork version (everything live at
-  the fork survives — belt: a ``__branch_<name>`` tag pinned on the
-  parent, which also keeps the base readable below the floor for
-  merge; suspenders: an explicit fork scan in expire_snapshots) and
-  advances the branch's own time-travel floor so below-floor branch
-  reads fail with the floor error, not a missing-file surprise.
+  branch vacuum sweeps only its own ``v{n}`` dirs, never the parent
+  files its lists name through ``../`` — those bytes are the
+  parent's to reclaim; a parent vacuum keeps every live branch's
+  fork entry, so the fork's files survive (belt: a
+  ``__branch_<name>`` tag pinned on the parent, which also keeps the
+  base readable below the floor for merge; suspenders: an explicit
+  fork scan in expire_snapshots) and advances the branch's own
+  time-travel floor so below-floor branch reads fail with the floor
+  error, not a missing-file surprise.
 - ``merge_branch`` is the textbook three-way merge, built from the
   store's own delta machinery: base = the fork version,
   theirs = snapshot_diff(branch, fork → branch head),
   ours = snapshot_diff(parent, fork → parent head) — both
-  DELTA-SIZED (the manifest's file-set symmetric difference, never a
-  full scan of either side). One left-outer join of theirs onto ours
+  DELTA-SIZED (the symmetric difference of two entries' file lists,
+  never a full scan of either side). One left-outer join of theirs onto ours
   on the store key classifies every changed key; a CONFLICT is a key
   both sides drove to DIFFERENT final states (both-deleted or
   both-same-value converge silently, like git). Resolution policies:
@@ -115,8 +116,8 @@ def create_branch(
     branch. Returns ``{"name", "path", "fork_version"}``; the returned
     path is a complete store every layout verb accepts.
 
-    The child manifest copies the parent's history up to the fork with
-    version dirs rewritten to relative ``../../`` references, carries
+    The child manifest copies the parent's entries up to the fork with
+    every listed file rewritten to a relative ``../../`` reference, carries
     the fork era's sort key (a fork below a rekey folds on ITS era's
     identity, not the parent's current one) and the parent's vacuum
     floor, and records ``branch_of`` so merge_branch and the parent's
@@ -137,17 +138,9 @@ def create_branch(
             "branches are not supported; merge it or fork the parent "
             "store instead"
         )
-    snaps = manifest.get("snapshots") or []
-    if not snaps:
-        raise ValueError(f"create_branch: no snapshots at {path!r}")
-    ids = {s["id"] for s in snaps}
-    latest = max(ids)
+    latest = layout._snapshot(path, manifest)["id"]
     fork = latest if at_version is None else int(at_version)
-    if fork not in ids:
-        raise ValueError(
-            f"create_branch: no snapshot v{fork} at {path!r} "
-            f"(versions: v{min(ids)}..v{latest})"
-        )
+    layout._snapshot(path, manifest, fork)  # the fork must name a snapshot
     floor = manifest.get("min_time_travel")
     tagged = set(manifest.get("tags", {}).values())
     if floor is not None and fork < floor and fork not in tagged:
@@ -178,15 +171,11 @@ def create_branch(
             "or pick another name"
         )
     up = os.path.join("..", "..")
-    copied = []
-    for s in snaps:
-        if s["id"] > fork:
-            continue
-        c = dict(s)
-        c["dirs"] = [os.path.join(up, d) for d in s["dirs"]]
-        if s.get("files"):
-            c["files"] = [os.path.join(up, r) for r in s["files"]]
-        copied.append(c)
+    copied = [
+        {**s, "files": [os.path.join(up, r) for r in s["files"]]}
+        for s in manifest["snapshots"]
+        if s["id"] <= fork
+    ]
     if fork == latest:
         schema = manifest["schema"]
     else:

@@ -36,10 +36,13 @@ from ..operators import merge as merge_ops
 
 MANIFEST_NAME = "_meta.json"
 FORMAT_NAME = "spark-sorted-runs"
-FORMAT_VERSION = 1
+# 2: each versioned-store snapshot entry records its complete live
+# file list. _snapshot refuses format-1 stores, whose entries held
+# version dirs and chains of replaced ids; rebuild them.
+FORMAT_VERSION = 2
 # branches (plans/branch.py) live INSIDE the store dir: each is a
-# child store whose manifest references the parent's version dirs by
-# relative path. expire_snapshots knows the name for its GC-root scan.
+# child store whose entries list the parent's files by relative path.
+# expire_snapshots knows the name for its GC-root scan.
 BRANCHES_DIR = "_branches"
 
 
@@ -382,18 +385,21 @@ def read_run_pruned(
 # ---------------------------------------------------------------------------
 # Versioned runs: snapshot isolation + time travel for the append/merge
 # lifecycle (the table-format idea — Iceberg/Delta snapshots — scaled
-# down to the manifest we already keep). Every append lands its files
-# under v{n}/ and records a manifest snapshot entry; a reader resolves
-# the FILE LIST for a snapshot driver-side (like the zone map: the scan
-# never lists superseded or in-flight data), so
-#   - readers are never torn by a concurrent append (they read the
-#     snapshot that existed when they resolved),
+# down to the manifest we already keep). A snapshot IS its file list:
+# every commit writes its rows under v{n}/ and records the entry
+# {"id": n, "files": [every live parquet path, relative to the store]},
+# derived from the parent entry's list (Iceberg's snapshot → manifest
+# list, https://iceberg.apache.org/spec/ "Snapshots"). So
+#   - a read of version v is entry v's list — no listing, and never a
+#     superseded or in-flight file; readers are never torn by a
+#     concurrent commit (they read the entry that existed when they
+#     resolved),
 #   - `read_snapshot(path, v)` reproduces any historical state — the
 #     "which corpus trained this model" audit question,
-#   - compaction REPLACES the accumulated snapshots atomically: it
-#     writes a new version whose entry supersedes all priors, and time
-#     travel before the compaction point still works because superseded
-#     files are retained until an explicit vacuum.
+#   - a diff is the symmetric difference of two lists,
+#   - compaction writes a version whose list is just its own files;
+#     older entries keep theirs, so time travel before it still works
+#     until an explicit vacuum deletes the files no kept list names.
 # ---------------------------------------------------------------------------
 
 
@@ -411,9 +417,8 @@ def append_versioned(df: DataFrame, path: str, key: Sequence[str],
             "snapshots": [],
         }
     manifest.setdefault("snapshots", [])
-    return _commit_version(
-        path, manifest, df, key, partitions, {"supersedes": []}
-    )
+    carried = _snapshot(path, manifest)["files"] if manifest["snapshots"] else []
+    return _commit_version(path, manifest, df, key, partitions, carried)
 
 
 def _commit_version(
@@ -422,17 +427,20 @@ def _commit_version(
     df: DataFrame,
     key: Sequence[str],
     partitions: int | None,
-    entry: dict,
+    carried: Sequence[str],
     schema=None,
     break_kind: str | None = None,
     metrics: tuple | None = None,
 ) -> int:
     """The one snapshot commit every versioned verb ends in: allocate
     the next version id, write `df` as a sorted run on `key` into
-    v{id}/, append the snapshot entry ({"id", "dirs"} + `entry`) and
-    dump the manifest. The manifest dump is the single commit point: a
-    crash before it leaves an orphan v-dir invisible to every reader,
-    and a replay rewrites the same version id.
+    v{id}/, append the entry {"id", "files"} whose list is `carried`
+    (the parent's files this version keeps, by reference) plus the
+    sorted files just written, and dump the manifest. Listing v{id}/
+    after the write is the only data-dir listing outside the vacuum.
+    The manifest dump is the single commit point: a crash before it
+    leaves an orphan v-dir invisible to every reader, and a replay
+    rewrites the same version id.
 
     `schema` is the schema recorded for the empty-store read fallback
     (default: `df`'s; a delete that removes every row must still return
@@ -448,16 +456,23 @@ def _commit_version(
     _sorted_write(
         df, os.path.join(path, vdir), key, partitions, metrics=metrics
     )
+    written = sorted(
+        name for name in os.listdir(os.path.join(path, vdir))
+        if name.endswith(".parquet")
+    )
+    entry = {
+        "id": v,
+        "files": [*carried, *(os.path.join(vdir, n) for n in written)],
+    }
     if break_kind is not None:
-        entry = {
-            **entry,
-            "schema_break": True,
-            "break_kind": break_kind,
-            "sort_key_before": list(manifest["sort_key"]),
-            "sort_key_after": list(key),
-        }
+        entry.update(
+            schema_break=True,
+            break_kind=break_kind,
+            sort_key_before=list(manifest["sort_key"]),
+            sort_key_after=list(key),
+        )
         manifest["sort_key"] = list(key)
-    manifest["snapshots"].append({"id": v, "dirs": [vdir], **entry})
+    manifest["snapshots"].append(entry)
     manifest["schema"] = (df.schema if schema is None else schema).json()
     _dump_manifest(path, manifest)
     return v
@@ -500,20 +515,17 @@ def compact_versioned(
     agg_spec: dict[str, str],
     partitions: int | None = None,
 ) -> int:
-    """Aggregate-combining merge of every live version into ONE new
-    version that supersedes them (the reference's `merge` command with
-    snapshot semantics, through combine_runs). Old files stay for time
-    travel."""
+    """Aggregate-combining merge of the latest snapshot's files into ONE
+    new version whose list is only the files it writes (the reference's
+    `merge` command with snapshot semantics, through combine_runs).
+    Older entries keep their lists, so their files stay for time travel
+    until a vacuum."""
     manifest = read_manifest(path)
-    if not manifest["snapshots"]:
-        raise ValueError(f"compact_versioned: no snapshots at {path!r}")
-    live = _live_snapshot_ids(manifest)
     merged = combine_runs(
-        [_read_dirs(spark, path, manifest, live)], key, agg_spec
+        [_read_entry(spark, path, manifest, _snapshot(path, manifest))],
+        key, agg_spec,
     )
-    return _commit_version(
-        path, manifest, merged, key, partitions, {"supersedes": sorted(live)}
-    )
+    return _commit_version(path, manifest, merged, key, partitions, [])
 
 
 def delete_rows(
@@ -536,8 +548,8 @@ def delete_rows(
     2. REWRITE: only the touched files are read back and rewritten
        minus matching rows into a new version directory; every
        untouched live file is carried into the new snapshot BY
-       REFERENCE (its manifest entry's ``files`` list) — zero data
-       I/O for them.
+       REFERENCE (it stays on the new entry's ``files`` list, next to
+       the rewrite's files) — zero data I/O for them.
 
     The manifest write is the single commit point: a crash after the
     rewrite but before it leaves an orphan v-dir invisible to every
@@ -557,10 +569,7 @@ def delete_rows(
     """
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
     manifest = read_manifest(path)
-    if not manifest["snapshots"]:
-        raise ValueError(f"delete_rows: no snapshots at {path!r}")
-    live = _live_snapshot_ids(manifest)
-    rels = _snapshot_files(path, manifest, live)
+    rels = _snapshot(path, manifest)["files"]
     touched, rows_deleted = set(), 0
     if rels:
         src = _read_files(spark, path, rels)
@@ -577,7 +586,7 @@ def delete_rows(
     )
     v = _commit_version(
         path, manifest, keep, manifest["sort_key"], partitions,
-        {"files": sorted(set(rels) - touched), "supersedes": sorted(live)},
+        [r for r in rels if r not in touched],
         # union schema of the LIVE set (not just the touched files): the
         # empty-store fallback must still show columns only untouched
         # files carry
@@ -643,11 +652,8 @@ def upsert_rows(
     from pyspark.sql import Window
 
     manifest = read_manifest(path)
-    if not manifest["snapshots"]:
-        raise ValueError(f"upsert_rows: no snapshots at {path!r}")
+    rels = _snapshot(path, manifest)["files"]
     key = manifest["sort_key"]
-    live = _live_snapshot_ids(manifest)
-    rels = _snapshot_files(path, manifest, live)
 
     chg = changes.dropDuplicates()
     # loud-guard column: NULL key / unknown op / conflicting rows per
@@ -771,7 +777,7 @@ def upsert_rows(
     rows_upserted = adds.count()
     v = _commit_version(
         path, manifest, out, key, partitions,
-        {"files": sorted(set(rels) - touched), "supersedes": sorted(live)},
+        [r for r in rels if r not in touched],
     )
     return {
         "version": v,
@@ -818,7 +824,7 @@ def evolve_schema(
       but it fails OUR way, not with a raw CAST error), and nothing
       commits;
     - the new version's manifest entry carries ``schema_break: True``
-      and supersedes every live snapshot. Time travel BELOW the break
+      and lists only its own rewritten files. Time travel BELOW the break
       still answers the old schema; `snapshot_diff` refuses to cross
       the break; `export_changes` emits the break version as a REBASE
       (full snapshot as 'I' rows + a ``_rebase.json`` marker) and
@@ -838,11 +844,8 @@ def evolve_schema(
             "use upsert_rows/append with allow_new_columns)"
         )
     manifest = read_manifest(path)
-    if not manifest["snapshots"]:
-        raise ValueError(f"evolve_schema: no snapshots at {path!r}")
+    df = _read_entry(spark, path, manifest, _snapshot(path, manifest))
     key = manifest["sort_key"]
-    live = _live_snapshot_ids(manifest)
-    df = _read_dirs(spark, path, manifest, live)
     cols = set(df.columns)
 
     unknown = (set(renames) | set(drops) | set(retypes)) - cols
@@ -905,8 +908,7 @@ def evolve_schema(
     # row count observed during the rewrite job itself — no second scan
     obs = Observation()
     v = _commit_version(
-        path, manifest, df, new_key, partitions,
-        {"supersedes": sorted(live)}, break_kind="evolve",
+        path, manifest, df, new_key, partitions, [], break_kind="evolve",
         metrics=(obs, F.count(F.lit(1)).alias("rows")),
     )
     return {
@@ -952,8 +954,7 @@ def rekey_store(
     """
     new_key = list(new_key)
     manifest = read_manifest(path)
-    if not manifest["snapshots"]:
-        raise ValueError(f"rekey_store: no snapshots at {path!r}")
+    entry = _snapshot(path, manifest)
     old_key = list(manifest["sort_key"])
     if not new_key:
         raise ValueError("rekey_store: new key must name at least one column")
@@ -966,8 +967,7 @@ def rekey_store(
             f"rekey_store: store is already keyed by {old_key} — nothing "
             "to do"
         )
-    live = _live_snapshot_ids(manifest)
-    df = _read_dirs(spark, path, manifest, live)
+    df = _read_entry(spark, path, manifest, entry)
     missing = [c for c in new_key if c not in df.columns]
     if missing:
         raise ValueError(
@@ -1000,8 +1000,7 @@ def rekey_store(
 
     obs = Observation()
     v = _commit_version(
-        path, manifest, df, new_key, partitions,
-        {"supersedes": sorted(live)}, break_kind="rekey",
+        path, manifest, df, new_key, partitions, [], break_kind="rekey",
         metrics=(obs, F.count(F.lit(1)).alias("rows")),
     )
     return {
@@ -1012,41 +1011,35 @@ def rekey_store(
     }
 
 
-def _live_snapshot_ids(manifest: dict, as_of: int | None = None) -> set[int]:
-    """Snapshot ids visible at version `as_of` (default: latest):
-    every id <= as_of not superseded by a compaction <= as_of."""
-    snaps = [s for s in manifest["snapshots"]
-             if as_of is None or s["id"] <= as_of]
-    dead: set[int] = set()
+def _snapshot(path: str, manifest: dict, version: int | None = None) -> dict:
+    """The snapshot entry whose id is `version` (default: the latest) —
+    the one accessor of a versioned store's entries. Raises on a
+    manifest from before format 2 (entries without complete file
+    lists: rebuild the store, there is no upgrade), on a store with no
+    snapshots, and on a version that names no snapshot."""
+    if manifest.get("version", 0) < 2:
+        raise ValueError(
+            f"{path!r}: snapshot manifest format version "
+            f"{manifest.get('version')} predates complete file lists "
+            f"(format {FORMAT_VERSION}) — rebuild the store"
+        )
+    snaps = manifest["snapshots"]
+    if not snaps:
+        raise ValueError(f"no snapshots at {path!r}")
+    if version is None:
+        return max(snaps, key=lambda s: s["id"])
     for s in snaps:
-        dead.update(s.get("supersedes", []))
-    return {s["id"] for s in snaps if s["id"] not in dead}
+        if s["id"] == version:
+            return s
+    raise ValueError(
+        f"no snapshot v{version} at {path!r} (versions: "
+        f"{sorted(s['id'] for s in snaps)})"
+    )
 
 
-def _snapshot_files(path: str, manifest: dict, ids) -> list[str]:
-    """Relative parquet paths visible for snapshot ids `ids`: each
-    entry's exclusively-owned dirs expanded to their parquet files,
-    plus any file-level references (`files`) a delete snapshot carries
-    into other versions' directories (the Iceberg manifest-file-list
-    model: a snapshot is a FILE SET, dirs are just the common case)."""
-    rels: list[str] = []
-    for s in manifest["snapshots"]:
-        if s["id"] not in ids:
-            continue
-        for d in s["dirs"]:
-            full = os.path.join(path, d)
-            rels.extend(
-                os.path.join(d, name)
-                for name in sorted(os.listdir(full))
-                if name.endswith(".parquet")
-            )
-        rels.extend(s.get("files", []))
-    return rels
-
-
-def _read_dirs(spark, path, manifest, ids) -> DataFrame:
-    rels = _snapshot_files(path, manifest, ids)
-    if not rels:
+def _read_entry(spark, path: str, manifest: dict, entry: dict) -> DataFrame:
+    """Snapshot `entry`'s files as one scan."""
+    if not entry["files"]:
         # every row deleted: answer with the recorded schema instead of
         # failing "unable to infer schema" on a file-less read
         from pyspark.sql.types import StructType
@@ -1054,7 +1047,7 @@ def _read_dirs(spark, path, manifest, ids) -> DataFrame:
         return spark.createDataFrame(
             [], StructType.fromJson(json.loads(manifest["schema"]))
         )
-    return _read_files(spark, path, rels)
+    return _read_files(spark, path, entry["files"])
 
 
 def _read_files(spark: SparkSession, path: str, rels) -> DataFrame:
@@ -1118,11 +1111,13 @@ def read_snapshot(
     version: int | None = None,
     tag: str | None = None,
 ) -> DataFrame:
-    """The table as of `version` / `tag` (default: latest live state).
+    """The table as of `version` / `tag` (default: latest): that
+    snapshot entry's file list, read as one scan.
 
     A TAGGED version reads below the vacuum floor — tags are GC roots,
     so its files are guaranteed present; an untagged historical version
-    below the floor fails loudly (its files may be gone)."""
+    below the floor fails loudly (its files may be gone), and so does a
+    version that names no snapshot."""
     manifest = read_manifest(path)
     if tag is not None:
         if version is not None:
@@ -1141,25 +1136,32 @@ def read_snapshot(
         raise ValueError(
             f"time travel to v{version} expired (floor is v{floor})"
         )
-    return _read_dirs(spark, path, manifest, _live_snapshot_ids(manifest, version))
+    return _read_entry(spark, path, manifest, _snapshot(path, manifest, version))
 
 
 def expire_snapshots(path: str, before: int, force: bool = False) -> list[str]:
     """Vacuum: give up time travel EARLIER than version `before` and
     delete the files only that history was keeping alive.
 
-    A snapshot's files are needed iff it is live at SOME readable
-    version >= `before`; liveness only ever decreases (a compaction
-    kills it for all later versions), so that reduces to "live at
-    `before`". Everything else is physically removed and dropped from
-    the manifest; `min_time_travel` records the new floor so stale
-    time-travel reads fail loudly instead of resurrecting partial
-    state. Returns the deleted directories.
+    The new floor is ``max(old floor, min(before, latest))`` — it only
+    ever advances, and never past the latest snapshot. The kept entries
+    are every entry at or above the floor, every TAGGED entry
+    (tag_snapshot: a GC root, so `read_snapshot(tag=...)` keeps
+    answering below the floor until `delete_tag` releases it) and every
+    branch's fork entry (create_branch). The rest leave the manifest,
+    `min_time_travel` records the floor so a stale time-travel read
+    fails loudly, and the manifest is committed. Then every parquet
+    file in a version dir ``v{n}`` (n <= latest) that no kept entry's
+    list names is deleted, and a dir left with no referenced file is
+    removed whole (Iceberg's remove_orphan_files). Returns what went:
+    a whole dir by its name, a partly kept one by file paths.
 
-    TAGGED versions (tag_snapshot) are GC roots: everything live at a
-    tagged version is kept regardless of `before`, and
-    `read_snapshot(tag=...)` keeps answering below the floor.
-    `delete_tag` releases the pin; the next vacuum reclaims it.
+    The sweep never visits ``v{latest+1}`` (an in-flight or crashed
+    commit is writing it; its replay overwrites it), ``_branches/``, an
+    export dir inside the store, or a branch's ``../`` references to
+    its parent's files — those are the parent's to reclaim. Sweeping
+    after the commit makes a crash mid-sweep leave only unreferenced
+    files, which the next vacuum removes.
 
     Export guard: a CDC export registered by `export_changes` needs
     `read_snapshot(last_exported)` as the base of its next diff, so a
@@ -1176,13 +1178,12 @@ def expire_snapshots(path: str, before: int, force: bool = False) -> list[str]:
     way the reference's merge is followed by deleting source runs
     (and Iceberg by expire_snapshots/remove_orphan_files).
     """
+    import re
     import shutil
 
     manifest = read_manifest(path)
-    if not manifest["snapshots"]:
-        raise ValueError(f"expire_snapshots: no snapshots at {path!r}")
-    latest_id = max(s["id"] for s in manifest["snapshots"])
-    floor = min(before, latest_id)
+    latest = _snapshot(path, manifest)["id"]
+    floor = max(manifest.get("min_time_travel") or 0, min(before, latest))
     lagging = {
         d: lv
         for d, lv in manifest.get("exports", {}).items()
@@ -1198,24 +1199,15 @@ def expire_snapshots(path: str, before: int, force: bool = False) -> list[str]:
             )
         for d in lagging:
             manifest["exports"][d] = floor
-    keep = _live_snapshot_ids(manifest, before) | {
-        s["id"] for s in manifest["snapshots"] if s["id"] > before
-    }
-    # tags are GC roots: every snapshot live at a tagged version stays,
-    # so read_snapshot(tag=...) keeps answering below the floor until
-    # delete_tag releases it
-    for tv in manifest.get("tags", {}).values():
-        keep |= _live_snapshot_ids(manifest, tv)
     # live BRANCHES are GC roots at their fork version (create_branch,
-    # plans/branch.py): a branch manifest references THIS store's
-    # version dirs by relative path, so everything live at its fork
-    # must survive a parent vacuum or every branch read silently dies
-    # on missing files. Below-fork history still expires — each
-    # branch's own min_time_travel is advanced after the commit (same
-    # after-the-commit ordering as the export cursors below) so a
-    # branch time-travel below the new floor fails with the floor
-    # error, not a missing-file surprise. delete_branch releases the
-    # root; the next vacuum reclaims.
+    # plans/branch.py): a branch manifest references THIS store's files
+    # by relative path, so the fork's files must survive a parent
+    # vacuum. The `__branch_<name>` tag pins it too; this scan covers a
+    # crash between the branch commit and its tag. Below-fork history
+    # still expires — each branch's own min_time_travel is advanced
+    # after the commit so a branch time-travel below the new floor
+    # fails with the floor error, not a missing-file surprise.
+    # delete_branch releases the root; the next vacuum reclaims.
     branch_forks: dict[str, int] = {}
     branches_home = os.path.join(path, BRANCHES_DIR)
     if os.path.isdir(branches_home):
@@ -1227,136 +1219,39 @@ def expire_snapshots(path: str, before: int, force: bool = False) -> list[str]:
             info = bman.get("branch_of")
             if info:
                 branch_forks[bname] = int(info["fork_version"])
-    for fv in branch_forks.values():
-        keep |= _live_snapshot_ids(manifest, fv)
-    doomed = [s for s in manifest["snapshots"] if s["id"] not in keep]
-    # Delete snapshots share files ACROSS version directories (their
-    # `files` lists reference untouched files inside superseded
-    # versions' dirs), so vacuum is file-level refcounting — Iceberg's
-    # remove_orphan_files: a physical file dies only when NO kept
-    # snapshot references it. A doomed dir whose every file is
-    # unreferenced is removed whole (reported by dir name, the common
-    # no-deletes case); a dir partially kept alive by a delete
-    # snapshot's references loses only its dead files.
-    referenced = set(_snapshot_files(path, manifest, keep))
-    kept_dirs = {
-        d for s in manifest["snapshots"] if s["id"] in keep for d in s["dirs"]
-    }
-    deleted = []
-    for s in doomed:
-        for d in s["dirs"]:
-            # a BRANCH manifest (plans/branch.py) references its
-            # parent's version dirs as '../../vN' — those files are
-            # the PARENT's to reclaim, never the branch's: a branch
-            # vacuum expires them from the branch manifest (the floor
-            # advances normally) but must not touch the bytes, or it
-            # destroys parent history every other reader still needs.
-            if d.startswith(".."):
-                continue
-            full = os.path.join(path, d)
-            if not os.path.isdir(full):
-                deleted.append(d)
-                continue
-            kept_here = [
-                name
-                for name in os.listdir(full)
-                if name.endswith(".parquet")
-                and os.path.join(d, name) in referenced
-            ]
-            if kept_here:
-                for name in os.listdir(full):
-                    rel = os.path.join(d, name)
-                    if name.endswith(".parquet") and rel not in referenced:
-                        os.unlink(os.path.join(full, name))
-                        deleted.append(rel)
-            else:
-                shutil.rmtree(full)
-                deleted.append(d)
-        # A doomed DELETE snapshot's `files` references can be the LAST
-        # thing keeping files alive inside a dir whose owner snapshot
-        # was expired in an earlier pass (the dir then belongs to no
-        # manifest entry, so no later dirs-loop will ever visit it):
-        # sweep any now-unreferenced file here, and remove the dir once
-        # it holds no parquet — otherwise staged expiry leaks the files
-        # forever. Files inside dirs handled above are already gone
-        # (isfile guard); files a kept snapshot still references are in
-        # `referenced` and stay.
-        for rel in s.get("files", []):
-            if rel in referenced or rel.startswith(".."):
-                continue
-            full = os.path.join(path, rel)
-            if os.path.isfile(full):
-                os.unlink(full)
-                deleted.append(rel)
-            d = os.path.dirname(rel)
-            dfull = os.path.join(path, d)
-            if (
-                d not in kept_dirs
-                and os.path.isdir(dfull)
-                and not any(
-                    n.endswith(".parquet") for n in os.listdir(dfull)
-                )
-            ):
-                shutil.rmtree(dfull)
-                deleted.append(d)
-    # supersedes chains must survive the prune: a GC-rooted snapshot
-    # (tag / branch fork) can be OLDER than an expired link in the
-    # chain that killed it — e.g. tag v1, upsert v2 (supersedes 1),
-    # compact v3 (supersedes 2), expire to v3: dropping v2's entry
-    # silently erased "1 is dead", and the latest live set became
-    # {v1, v3} — every pre-upsert row RESURRECTED next to its
-    # replacement (wrong answer, found by the branch-vacuum test
-    # round 13). Fold each doomed entry's supersedes transitively
-    # into the kept entries that supersede it.
-    doomed_sup = {
-        s["id"]: set(s.get("supersedes", [])) for s in doomed
-    }
-    changed = True
-    while changed:
-        changed = False
-        for sups in doomed_sup.values():
-            extra = {
-                j
-                for d in sups
-                if d in doomed_sup
-                for j in doomed_sup[d]
-            }
-            if not extra <= sups:
-                sups |= extra
-                changed = True
-    for s in manifest["snapshots"]:
-        if s["id"] not in keep:
-            continue
-        inherited = {
-            j
-            for d in s.get("supersedes", [])
-            if d in doomed_sup
-            for j in doomed_sup[d]
-        }
-        if inherited:
-            s["supersedes"] = sorted(
-                (set(s.get("supersedes", [])) | inherited) & keep
-            )
+    pinned = {*manifest.get("tags", {}).values(), *branch_forks.values()}
     manifest["snapshots"] = [
-        s for s in manifest["snapshots"] if s["id"] in keep
+        s for s in manifest["snapshots"] if s["id"] >= floor or s["id"] in pinned
     ]
-    # floor may only ADVANCE: a later expire with a smaller `before`
-    # must not regress it and silently resurrect partial history.
-    # Clamp to the latest snapshot id: `before` past the end keeps
-    # every file of the final live state, so an explicit-version read
-    # of it must stay legal — an unclamped floor would brick it.
-    latest = max(s["id"] for s in manifest["snapshots"])
-    manifest["min_time_travel"] = max(
-        manifest.get("min_time_travel") or 0, min(before, latest)
-    )
+    manifest["min_time_travel"] = floor
     _dump_manifest(path, manifest)
+    referenced = {f for s in manifest["snapshots"] for f in s["files"]}
+    vdirs = sorted(
+        (int(m.group(1)), name)
+        for name in os.listdir(path)
+        if (m := re.fullmatch(r"v(\d+)", name))
+        and int(m.group(1)) <= latest
+        and os.path.isdir(os.path.join(path, name))
+    )
+    deleted = []
+    for _, d in vdirs:
+        full = os.path.join(path, d)
+        names = [n for n in sorted(os.listdir(full)) if n.endswith(".parquet")]
+        dead = [n for n in names if os.path.join(d, n) not in referenced]
+        if len(dead) == len(names):
+            shutil.rmtree(full)
+            deleted.append(d)
+            continue
+        for name in dead:
+            os.unlink(os.path.join(full, name))
+            deleted.append(os.path.join(d, name))
     # realign each forced-past export dir's own cursor (atomic, like
     # the exporter writes it): without this the next export_changes run
     # resumes below the new floor and dies on a confusing "time travel
     # expired", and wiping the cursor is worse — the restart loop
     # begins at v1, also below the floor. The recorded forced_gap makes
     # read_changes on a lost version fail with the real story. Ordered
-    # AFTER the deletion + manifest commit on purpose: rewriting first
+    # AFTER the manifest commit + sweep on purpose: rewriting first
     # opened a crash window where the export believed versions
     # lv+1..floor were gone while their snapshots still existed, and a
     # resumed export silently skipped still-exportable versions (a
@@ -1440,14 +1335,14 @@ def snapshot_diff(
     to a downstream CDC export (feed it to operators/merge to replay
     the delta elsewhere).
 
-    ``scan='auto'`` (default) is DELTA-SIZED: the manifest records each
-    snapshot's file set, and a file common to both versions is
+    ``scan='auto'`` (default) is DELTA-SIZED: each snapshot entry is
+    its complete file list, and a file common to both versions is
     byte-identical on both sides, so under the store's keyed discipline
     (each key in at most one live row per snapshot — what delete_rows /
     compact_versioned maintain and what fold-the-log replication
     already requires) no row in a common file can produce a diff row.
     Both sides of the full-outer equi-join are therefore restricted to
-    the SYMMETRIC DIFFERENCE of the two file sets: an append's diff
+    the SYMMETRIC DIFFERENCE of the two lists: an append's diff
     reads only the new run (the old side folds to an empty relation and
     Catalyst eliminates the join entirely — pinned in
     tests/test_layout.py), a copy-on-write delete reads only the
@@ -1484,12 +1379,8 @@ def snapshot_diff(
     a = read_snapshot(spark, path, v_from)
     b = read_snapshot(spark, path, v_to)
     if scan == "auto":
-        files_from = set(
-            _snapshot_files(path, manifest, _live_snapshot_ids(manifest, v_from))
-        )
-        files_to = set(
-            _snapshot_files(path, manifest, _live_snapshot_ids(manifest, v_to))
-        )
+        files_from = set(_snapshot(path, manifest, v_from)["files"])
+        files_to = set(_snapshot(path, manifest, v_to)["files"])
         a = _restrict_to_files(spark, path, a, files_from - files_to)
         b = _restrict_to_files(spark, path, b, files_to - files_from)
     # payload = UNION of both sides' columns: additive schema evolution

@@ -194,7 +194,7 @@ def advance_view(
 
     Returns ``{"from": pinned, "to": latest, "advanced": bool}``.
     """
-    from .layout import _live_snapshot_ids, read_manifest, snapshot_diff
+    from .layout import _snapshot, read_manifest, snapshot_diff
 
     with open(os.path.join(view_path, _MANIFEST)) as f:
         manifest = json.load(f)
@@ -207,7 +207,7 @@ def advance_view(
         )
     dims = manifest["dims"]
     measures = [tuple(m) for m in manifest["measures"]]
-    latest = max(_live_snapshot_ids(read_manifest(store_path)))
+    latest = _snapshot(store_path, read_manifest(store_path))["id"]
     if pinned == latest:
         return {"from": pinned, "to": latest, "advanced": False}
     view = spark.read.parquet(

@@ -184,9 +184,8 @@ def store_vacuumed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S8 vacuum externally verified: after the copy-on-write delete,
     `expire_snapshots` gives up pre-delete time travel and physically
     removes every file only that history kept alive — file-level
-    refcounting, so the untouched files the delete snapshot carries BY
-    REFERENCE survive the removal of their owner version's entry
-    (including the staged-expiry orphan sweep fixed this round). The
+    refcounting, so the untouched files the delete snapshot lists BY
+    REFERENCE survive the removal of the entry that wrote them. The
     live read after vacuum must still equal plain SQL over the corpus
     minus the slice: vacuum changes what is ON DISK, never what a
     query answers. Time travel below the floor fails loudly (pinned in
@@ -651,8 +650,9 @@ def store_replication_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     behalf. Lifecycle: v1 lands and is exported (cursor = 1), then an
     append (v2) and a copy-on-write delete (v3) commit WITHOUT an
     export run — the registered cursor now trails by exactly 2, the
-    live set is the single delete snapshot, and the manifest holds all
-    three versions. `store_version_pressure` derives all three numbers
+    delete touches every file, so the latest snapshot's list spans one
+    version dir (v3's rewrite), and the manifest holds all three
+    versions. `store_version_pressure` derives all three numbers
     from ONE manifest read — zero Spark jobs, the same zero-cost
     due-check contract as the scheduler's idle legs — and the oracle
     pins them as constants the lifecycle fully determines (corpus size

@@ -204,23 +204,26 @@ def build_once(
     """Run `build()` unless `home` already holds a build for `corpus`.
 
     Built means: `{home}/_built.json` records `fingerprint(corpus,
-    id_col)` and, for a catalog-backed fixture, `table` is in the
-    catalog (a fresh session's in-memory catalog forgets managed
-    tables whose directories stay on disk). Otherwise `home` is
-    removed, `build()` runs, and only then is the marker written, so
-    a crash mid-build leaves no marker and the next call rebuilds.
-    Returns True iff a build ran."""
+    id_col)` and the store format (`layout.FORMAT_VERSION`, so state
+    built before a format bump rebuilds once) and, for a
+    catalog-backed fixture, `table` is in the catalog (a fresh
+    session's in-memory catalog forgets managed tables whose
+    directories stay on disk). Otherwise `home` is removed, `build()`
+    runs, and only then is the marker written, so a crash mid-build
+    leaves no marker and the next call rebuilds. Returns True iff a
+    build ran."""
     import json
     import os
     import shutil
 
-    from .plans.layout import _atomic_write
+    from .plans.layout import FORMAT_VERSION, _atomic_write
 
     marker = os.path.join(home, _BUILT)
-    fp = list(fingerprint(corpus, id_col))
+    want = {"fingerprint": list(fingerprint(corpus, id_col)),
+            "format": FORMAT_VERSION}
     try:
         with open(marker) as f:
-            built = json.load(f)["fingerprint"] == fp
+            built = json.load(f) == want
     except FileNotFoundError:
         built = False
     if built and (table is None or spark.catalog.tableExists(table)):
@@ -228,5 +231,5 @@ def build_once(
     shutil.rmtree(home, ignore_errors=True)
     build()
     os.makedirs(home, exist_ok=True)
-    _atomic_write(marker, json.dumps({"fingerprint": fp}))
+    _atomic_write(marker, json.dumps(want))
     return True

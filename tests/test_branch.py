@@ -447,8 +447,8 @@ def test_branch_randomized_two_lineage_differential(spark, tmp_path):
         rand_ops(bp, theirs, "t")
         # half the seeds also compact + vacuum the PARENT mid-
         # divergence: the merge base must stay readable via the
-        # branch's GC root and the supersedes chain-fold must keep
-        # the live set exact (the round-13 resurrection regression)
+        # branch's GC root and the parent's latest file list must
+        # stay exact (the round-13 resurrection regression)
         if seed % 2 == 0:
             layout.compact_versioned(spark, path, ["k"], {"v": "max"})
             head = max(

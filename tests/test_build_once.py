@@ -7,6 +7,7 @@ index, its meta table) does not match the corpus."""
 from __future__ import annotations
 
 import importlib
+import json
 import os
 
 import pytest
@@ -74,6 +75,14 @@ def test_registered_fixture_builds_once(
     assert build_once(spark, home, other, id_col, lambda: ran.append(1), meta)
     assert ran == [1]
     assert not build_once(spark, home, other, id_col, dying, meta)
+
+    # a marker written before a store-format bump rebuilds once
+    with open(marker) as f:
+        fp = json.load(f)["fingerprint"]
+    with open(marker, "w") as f:
+        json.dump({"fingerprint": fp}, f)
+    assert build_once(spark, home, other, id_col, lambda: ran.append(2), meta)
+    assert ran == [1, 2]
 
     # a build that raises leaves no marker, and the next call rebuilds
     with pytest.raises(RuntimeError, match="simulated crash"):

@@ -210,9 +210,10 @@ def test_zonemap_empty_probe_reads_zero_files(spark, sf_dir, tmp_path):
 
 def test_versioned_snapshots_time_travel_and_compaction(spark, tmp_path):
     """Append → snapshot ids; read_snapshot(v) reproduces history;
-    compaction supersedes prior versions atomically but time travel
+    compaction replaces the latest file list atomically but time travel
     before the compaction point still sees the uncompacted state;
-    appends after compaction stack on top of it."""
+    appends after compaction stack on top of it; a version that names
+    no snapshot fails loudly."""
     path = str(tmp_path / "versioned")
     mk = lambda rows: spark.createDataFrame(rows, "k long, cnt long")
     v1 = layout.append_versioned(mk([(1, 1), (2, 1)]), path, ["k"])
@@ -235,6 +236,12 @@ def test_versioned_snapshots_time_travel_and_compaction(spark, tmp_path):
     assert (v3, v4) == (3, 4)
     after = sorted(tuple(r) for r in layout.read_snapshot(spark, path).collect())
     assert after == [(1, 6), (1, 100), (2, 1), (3, 1)]
+    for missing in (0, v4 + 1):
+        with pytest.raises(
+            ValueError,
+            match=rf"no snapshot v{missing} .*versions: \[1, 2, 3, 4\]",
+        ):
+            layout.read_snapshot(spark, path, missing)
     # and compacting again folds the post-compaction append in
     layout.compact_versioned(spark, path, ["k"], {"cnt": "sum"})
     final = sorted(tuple(r) for r in layout.read_snapshot(spark, path).collect())
@@ -398,18 +405,15 @@ def test_zonemap_prunes_date_keys(spark, sf_dir, tmp_path):
     assert dread < dtotal
 
 
-def test_expire_vacuum_keeps_supersedes_chain_for_gc_roots(
+def test_expire_after_tag_upsert_compact_resurrects_no_rows(
     spark, tmp_path
 ):
-    """Regression (round 13, found by the branch-vacuum test): a
-    GC-rooted snapshot (tag or branch fork) can be OLDER than an
-    expired link in the supersedes chain that killed it. Tag v1,
-    upsert to v2 (supersedes 1), compact to v3 (supersedes 2), expire
-    to v3: dropping v2's manifest entry erased "1 is dead" and the
-    latest live set became {v1, v3} — every pre-upsert row silently
-    RESURRECTED next to its replacement. expire_snapshots now folds
-    doomed entries' supersedes transitively into their kept
-    superseders."""
+    """Regression (round 13, found by the branch-vacuum test): tag v1,
+    upsert to v2, compact to v3, expire to v3. The tagged v1 entry
+    stays, and the latest read must still show only v3's rows, with
+    no pre-upsert row back next to its replacement; the tag reads its
+    own state. The same holds after a longer upsert/upsert/compact
+    sequence is expired."""
     path = str(tmp_path / "chain_store")
     layout.append_versioned(
         spark.createDataFrame(
@@ -607,7 +611,8 @@ def test_delete_rows_targeted_rewrite(spark, tmp_path):
     entry = [
         s for s in layout.read_manifest(path)["snapshots"] if s["id"] == 3
     ][0]
-    assert entry["files"] and all(f.startswith("v1/") for f in entry["files"])
+    carried = [f for f in entry["files"] if not f.startswith("v3/")]
+    assert carried and all(f.startswith("v1/") for f in carried)
 
     latest = sorted(r["k"] for r in layout.read_snapshot(spark, path).collect())
     assert latest == list(range(8)) + [101, 103, 105, 107]
@@ -625,13 +630,12 @@ def test_delete_rows_targeted_rewrite(spark, tmp_path):
 
 
 def test_expire_snapshots_sweeps_orphaned_delete_references(spark, tmp_path):
-    """Staged expiry must not leak files. After an owner snapshot (v1)
-    is expired, its surviving files live in a dir owned by NO manifest
-    entry, kept alive only by a delete snapshot's `files` references.
-    When that delete snapshot is itself superseded and expired later,
-    its references are the last owner — expire must unlink them and
-    remove the emptied orphan dir, not just the delete snapshot's own
-    dirs (the disk-leak case: no later pass would ever visit v1)."""
+    """Staged expiry must not leak files. After the v1 entry is
+    expired, v1's surviving files are named only by the delete
+    snapshot v3's list. When a later delete rewrites them and v3 is
+    expired too, nothing names them: expire must unlink them and remove
+    the emptied v1 dir, leaving on disk exactly the latest entry's
+    files."""
     import os
 
     path = str(tmp_path / "del_staged")
@@ -647,9 +651,7 @@ def test_expire_snapshots_sweeps_orphaned_delete_references(spark, tmp_path):
     layout.delete_rows(spark, path, "k >= 100 AND k % 2 = 0")
     layout.expire_snapshots(path, before=3)
     assert os.path.isdir(os.path.join(path, "v1"))
-    assert not any(
-        "v1" in s["dirs"] for s in layout.read_manifest(path)["snapshots"]
-    )
+    assert [s["id"] for s in layout.read_manifest(path)["snapshots"]] == [3]
     # v4: delete touches ALL of v1's files (evens live in both range
     # files) → v4 references none of them; v3 becomes superseded
     layout.delete_rows(spark, path, "k < 8 AND k % 2 = 0")
@@ -661,10 +663,8 @@ def test_expire_snapshots_sweeps_orphaned_delete_references(spark, tmp_path):
     assert any(d.startswith("v1") for d in deleted)
     got = sorted(r["k"] for r in layout.read_snapshot(spark, path).collect())
     assert got == want == [1, 3, 5, 7, 101, 103, 105, 107]
-    # no unreferenced parquet anywhere: every on-disk file is owned
-    manifest = layout.read_manifest(path)
-    live = layout._live_snapshot_ids(manifest)
-    referenced = set(layout._snapshot_files(path, manifest, live))
+    # no unreferenced parquet anywhere: the disk holds the latest list
+    referenced = layout.read_manifest(path)["snapshots"][-1]["files"]
     on_disk = {
         os.path.relpath(os.path.join(r, f), path)
         for r, _, fs in os.walk(path)
@@ -672,6 +672,84 @@ def test_expire_snapshots_sweeps_orphaned_delete_references(spark, tmp_path):
         if f.endswith(".parquet")
     }
     assert on_disk == set(referenced)
+
+
+def test_expire_snapshots_sweeps_only_committed_version_dirs(spark, tmp_path):
+    """The vacuum sweeps only committed version dirs: an export dir
+    inside the store, a branch and a hand-made v{latest+1}/ (standing
+    in for an in-flight commit) stay byte-identical, and every parquet
+    file left under v*/ is named by a kept entry."""
+    import os
+    import re
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from chess_pos_db_spark.plans import branch
+
+    def tree(root):
+        out = {}
+        for r, _, fs in os.walk(root):
+            for f in fs:
+                with open(os.path.join(r, f), "rb") as fh:
+                    out[os.path.relpath(os.path.join(r, f), root)] = fh.read()
+        return out
+
+    path = str(tmp_path / "bounds")
+    mk = lambda rows: spark.createDataFrame(rows, "k long, cnt long")
+    layout.append_versioned(
+        mk([(i, i) for i in range(8)]), path, ["k"], partitions=2
+    )
+    # an earlier vacuum sets the floor the branch inherits, so the later
+    # vacuum leaves the branch manifest's floor where it is
+    layout.expire_snapshots(path, before=1)
+    branch.create_branch(spark, path, "side", at_version=1)
+    layout.upsert_rows(
+        spark, branch.branch_path(path, "side"),
+        spark.createDataFrame([(100, 1, "I")], "k long, cnt long, op string"),
+    )
+    layout.append_versioned(
+        mk([(100 + i, i) for i in range(4)]), path, ["k"], partitions=2
+    )
+    layout.delete_rows(spark, path, "k = 1")
+    latest = layout.compact_versioned(spark, path, ["k"], {"cnt": "sum"})
+    layout.export_changes(spark, path, os.path.join(path, "_export"), ["k"])
+    inflight = f"v{latest + 1}"
+    os.makedirs(os.path.join(path, inflight))
+    pq.write_table(
+        pa.table({"k": [999], "cnt": [9]}),
+        os.path.join(path, inflight, "part-00000.parquet"),
+    )
+    guarded = {
+        d: tree(os.path.join(path, d))
+        for d in ("_export", layout.BRANCHES_DIR, inflight)
+    }
+    want = sorted(tuple(r) for r in layout.read_snapshot(spark, path).collect())
+
+    deleted = layout.expire_snapshots(path, before=latest)
+
+    assert deleted == ["v2", "v3"]
+    assert {d: tree(os.path.join(path, d)) for d in guarded} == guarded
+    kept = {
+        f for e in layout.read_manifest(path)["snapshots"] for f in e["files"]
+    }
+    on_disk = {
+        os.path.join(d, f)
+        for d in os.listdir(path)
+        if re.fullmatch(r"v\d+", d) and d != inflight
+        for f in os.listdir(os.path.join(path, d))
+        if f.endswith(".parquet")
+    }
+    assert on_disk == kept
+    assert sorted(
+        tuple(r) for r in layout.read_snapshot(spark, path).collect()
+    ) == want
+    assert sorted(
+        r["k"]
+        for r in layout.read_snapshot(
+            spark, branch.branch_path(path, "side")
+        ).collect()
+    ) == list(range(8)) + [100]
 
 
 def test_delete_rows_noop_and_null_predicate(spark, tmp_path):
@@ -876,10 +954,7 @@ def test_snapshot_diff_append_is_delta_sized(spark, tmp_path):
     ]
 
     layout.delete_rows(spark, path, "k % 4 = 1")
-    manifest = layout.read_manifest(path)
-    live_files = layout._snapshot_files(
-        path, manifest, layout._live_snapshot_ids(manifest)
-    )
+    live_files = layout.read_manifest(path)["snapshots"][-1]["files"]
     d2 = layout.snapshot_diff(spark, path, 2, 3, ["k"])
     p2 = d2._jdf.queryExecution().executedPlan().toString()
     scanned = sum(
@@ -1394,7 +1469,7 @@ def test_store_lifecycle_randomized_against_model(spark, tmp_path):
                 )
                 val_col = new_name
                 breaks.append(
-                    max(layout._live_snapshot_ids(layout.read_manifest(path)))
+                    layout.read_manifest(path)["snapshots"][-1]["id"]
                 )
             elif op == "append":
                 fresh = [
@@ -1497,7 +1572,7 @@ def test_store_lifecycle_randomized_against_model(spark, tmp_path):
                 # registered-cursor guard enforces this ordering)
                 layout.export_changes(spark, path, out, ["k"])
                 man = layout.read_manifest(path)
-                latest = max(layout._live_snapshot_ids(man))
+                latest = man["snapshots"][-1]["id"]
                 if rng.random() < 0.5:
                     layout.tag_snapshot(
                         path, f"t{step}", retag=True
@@ -2848,9 +2923,10 @@ def test_adaptive_run_sizing(spark, entries, tmp_path):
 
 def test_snapshot_verbs_write_exact_manifest(spark, tmp_path):
     """Manifest shape of every snapshot verb, pinned on one store: each
-    commit appends exactly this entry dict and records exactly this
-    top-level sort_key and schema; earlier entries never change, and no
-    version dir gets a _meta.json of its own."""
+    commit appends exactly this entry dict — its id and complete file
+    list — and records exactly this top-level sort_key and schema;
+    earlier entries never change, and no version dir gets a _meta.json
+    of its own."""
     import json
     import os
 
@@ -2868,44 +2944,43 @@ def test_snapshot_verbs_write_exact_manifest(spark, tmp_path):
     path = str(tmp_path / "store")
     want: list[dict] = []
 
+    def written(v):
+        (name,) = [
+            f for f in os.listdir(os.path.join(path, f"v{v}"))
+            if f.endswith(".parquet")
+        ]
+        return os.path.join(f"v{v}", name)
+
     def check(entry, sort_key, sch):
         want.append(entry)
         m = layout.read_manifest(path)
         assert m["snapshots"] == want
-        assert (m["format"], m["version"]) == (layout.FORMAT_NAME, 1)
+        assert (m["format"], m["version"]) == (layout.FORMAT_NAME, 2)
         assert m["sort_key"] == sort_key
         assert m["schema"] == sch
         assert not os.path.exists(
-            os.path.join(path, entry["dirs"][0], layout.MANIFEST_NAME)
+            os.path.join(path, f"v{entry['id']}", layout.MANIFEST_NAME)
         )
 
     def rows(data):
         return spark.createDataFrame(data, "k long, cnt long")
 
     layout.append_versioned(rows([(1, 1), (2, 1)]), path, ["k"], partitions=1)
-    check({"id": 1, "dirs": ["v1"], "supersedes": []}, ["k"], schema(k, cnt))
+    check({"id": 1, "files": [written(1)]}, ["k"], schema(k, cnt))
     layout.append_versioned(rows([(2, 1), (3, 1)]), path, ["k"], partitions=1)
-    check({"id": 2, "dirs": ["v2"], "supersedes": []}, ["k"], schema(k, cnt))
+    check(
+        {"id": 2, "files": [written(1), written(2)]}, ["k"], schema(k, cnt)
+    )
 
     layout.compact_versioned(spark, path, ["k"], {"cnt": "sum"}, partitions=1)
-    check(
-        {"id": 3, "dirs": ["v3"], "supersedes": [1, 2]}, ["k"],
-        schema(k, cnt),
-    )
+    check({"id": 3, "files": [written(3)]}, ["k"], schema(k, cnt))
 
+    # the delete touches v3's one file: only its rewrite is listed
     layout.delete_rows(spark, path, "k = 1", partitions=1)
-    check(
-        {"id": 4, "dirs": ["v4"], "files": [], "supersedes": [3]}, ["k"],
-        schema(k, cnt),
-    )
+    check({"id": 4, "files": [written(4)]}, ["k"], schema(k, cnt))
 
     # an insert of a new key touches no file: v4's one file carries
     # into v5 by reference, and the batch adds the `tag` column
-    (v4_file,) = [
-        os.path.join("v4", f)
-        for f in os.listdir(os.path.join(path, "v4"))
-        if f.endswith(".parquet")
-    ]
     layout.upsert_rows(
         spark, path,
         spark.createDataFrame(
@@ -2914,14 +2989,14 @@ def test_snapshot_verbs_write_exact_manifest(spark, tmp_path):
         partitions=1, allow_new_columns=True,
     )
     check(
-        {"id": 5, "dirs": ["v5"], "files": [v4_file], "supersedes": [4]},
+        {"id": 5, "files": [written(4), written(5)]},
         ["k"], schema(k, cnt, tag),
     )
 
     layout.evolve_schema(spark, path, renames={"k": "key"}, partitions=1)
     check(
         {
-            "id": 6, "dirs": ["v6"], "supersedes": [5],
+            "id": 6, "files": [written(6)],
             "schema_break": True, "break_kind": "evolve",
             "sort_key_before": ["k"], "sort_key_after": ["key"],
         },
@@ -2931,13 +3006,19 @@ def test_snapshot_verbs_write_exact_manifest(spark, tmp_path):
     layout.rekey_store(spark, path, ["cnt", "key"], partitions=1)
     check(
         {
-            "id": 7, "dirs": ["v7"], "supersedes": [6],
+            "id": 7, "files": [written(7)],
             "schema_break": True, "break_kind": "rekey",
             "sort_key_before": ["key"], "sort_key_after": ["cnt", "key"],
         },
         ["cnt", "key"], schema(key, cnt, tag),
     )
     with open(os.path.join(path, layout.MANIFEST_NAME)) as f:
-        assert set(json.load(f)) == {
-            "format", "version", "sort_key", "snapshots", "schema"
-        }
+        manifest = json.load(f)
+    assert set(manifest) == {
+        "format", "version", "sort_key", "snapshots", "schema"
+    }
+
+    # a store written before format 2 is refused, never upgraded
+    layout._dump_manifest(path, {**manifest, "version": 1})
+    with pytest.raises(ValueError, match="format version 1 .*rebuild"):
+        layout.read_snapshot(spark, path)

@@ -148,11 +148,9 @@ def test_entry_tables_are_pos_key_runs(spark, tmp_path):
             assert key == ["pos_key"], (verb, t, key)
 
 
-def _python_ops(spark, fn) -> set:
-    """The distinct MapInPandas operators in the executed plans of the
-    SQL executions `fn` runs, read from the SQL status store: each is
-    named by its UDF and expression id, so a held pass that several
-    executions read counts once."""
+def _plans(spark, fn) -> list[str]:
+    """The physical plan descriptions of the SQL executions `fn` runs,
+    read from the SQL status store (an adaptive plan's final one)."""
     store = spark._jsparkSession.sharedState().statusStore()
 
     def executions() -> dict:
@@ -164,36 +162,54 @@ def _python_ops(spark, fn) -> set:
 
     before = set(executions())
     fn()
-    ops = set()
-    for eid, e in executions().items():
-        if eid not in before:
-            ops |= set(
-                re.findall(
-                    r"\(\d+\) MapInPandas\s*\nInput [^\n]*\n"
-                    r"Arguments: ([^,]+),",
-                    e.physicalPlanDescription(),
-                )
-            )
-    return ops
+    return [
+        e.physicalPlanDescription()
+        for eid, e in executions().items()
+        if eid not in before
+    ]
+
+
+def _python_ops(plans: list[str]) -> set:
+    """The distinct MapInPandas operators in `plans`: each is named by
+    its UDF and expression id, so a held pass that several executions
+    read counts once."""
+    return {
+        op
+        for plan in plans
+        for op in re.findall(
+            r"\(\d+\) MapInPandas\s*\nInput [^\n]*\n"
+            r"Arguments: ([^,]+),",
+            plan,
+        )
+    }
 
 
 def test_import_runs_one_python_stage(spark, tmp_path, monkeypatch):
     """Each read task parses and replays its games: a create runs one
     MapInPandas, the entry aggregate is JVM work over the reader's
-    arrays with no spread of its own, and a one-file append reads (and
-    so replays) in one task."""
+    arrays with no spread of its own, a create without the sidecar
+    writes that aggregate with no second one, and a one-file append
+    reads (and so replays) in one task."""
     p = tmp_path / "g.pgn"
     p.write_text(PGN_TEXT)
     files = [(str(p), "human")]
     for retractions in (False, True):
-        ops = _python_ops(
+        db = str(tmp_path / f"db{retractions}")
+        plans = _plans(
             spark,
             lambda: importer.import_pgn(
-                spark, files, str(tmp_path / f"db{retractions}"),
-                retractions=retractions,
+                spark, files, db, retractions=retractions
             ),
         )
-        assert len(ops) == 1, ops
+        assert len(_python_ops(plans)) == 1, _python_ops(plans)
+        if not retractions:
+            (write,) = [
+                plan for plan in plans
+                if f"{db}/entries" in plan and "InsertIntoHadoopFs" in plan
+            ]
+            final = write.split("== Initial Plan ==")[0]
+            aggs = re.findall(r"HashAggregate \(\d+\)", final)
+            assert len(aggs) == 2, final
 
     games, _, _ = importer._parse_chunked(
         spark, files, 1 << 20, 0, lambda df: df.localCheckpoint(),
@@ -222,7 +238,10 @@ def test_import_runs_one_python_stage(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(importer, "read_splits", spy)
     db = str(tmp_path / "dbFalse")
     ops = _python_ops(
-        spark, lambda: importer.append_pgn(spark, [(str(one), "engine")], db)
+        _plans(
+            spark,
+            lambda: importer.append_pgn(spark, [(str(one), "engine")], db),
+        )
     )
     assert len(ops) == 1, ops
     (read,) = reads
